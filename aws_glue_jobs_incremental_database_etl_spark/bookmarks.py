@@ -28,6 +28,7 @@ import decimal
 import json
 import os
 import tempfile
+from collections.abc import Sequence
 from functools import reduce
 from typing import Any
 
@@ -60,6 +61,24 @@ def _decode(v: Any) -> Any:
         if "__dec__" in v:
             return decimal.Decimal(v["__dec__"])
     return v
+
+
+# -- watermark advance rule -----------------------------------------------
+
+
+def watermark_aggregates(bookmark_keys: list[str], sort_order: str = "ASC") -> list[Column]:
+    """Per-key max (ASC) / min (DESC): the aggregates, in key order,
+    whose values :func:`watermark_from` turns into the next watermark."""
+    agg_fn = F.min if sort_order.upper() == "DESC" else F.max
+    return [agg_fn(k).alias(k) for k in bookmark_keys]
+
+
+def watermark_from(values: Sequence[Any], bookmark_keys: list[str]) -> dict[str, Any] | None:
+    """Aggregate values (in key order) → watermark: null keys are left
+    out (their committed value stands), ``None`` if every key is null
+    (an all-null batch does not move the bookmark)."""
+    wm = {k: v for k, v in zip(bookmark_keys, values) if v is not None}
+    return wm or None
 
 
 class BookmarkStore:
@@ -122,16 +141,15 @@ class BookmarkStore:
     def compute_next(
         self, df: DataFrame, bookmark_keys: list[str], sort_order: str = "ASC"
     ) -> dict[str, Any] | None:
-        """New watermark = per-key max (ASC) / min (DESC) over the batch.
+        """New watermark over the batch (:func:`watermark_aggregates`,
+        :func:`watermark_from`).
 
         One global aggregate; partial aggregation keeps it a single
-        1-row shuffle regardless of input size.
+        1-row shuffle regardless of input size.  The pipeline folds the
+        same aggregates into its one pass over the batch instead.
         """
-        agg_fn = F.min if sort_order.upper() == "DESC" else F.max
-        row = df.agg(*[agg_fn(k).alias(k) for k in bookmark_keys]).first()
-        if row is None or all(row[k] is None for k in bookmark_keys):
-            return None
-        return {k: row[k] for k in bookmark_keys if row[k] is not None}
+        row = df.agg(*watermark_aggregates(bookmark_keys, sort_order)).first()
+        return None if row is None else watermark_from(row, bookmark_keys)
 
     def stage(self, ctx: str, watermark: dict[str, Any] | None) -> None:
         """Record a table's new watermark in memory; persisted by commit()."""

@@ -238,6 +238,19 @@ class FileCatalog:
         (``:158-173``).  Partition values stringified (``:156``);
         per-partition storage descriptor carries the non-partition
         columns and the format wiring (``:122-152``)."""
+        return self.add_partitions(database, table, partition_spec, [values], fmt)[0]
+
+    def add_partitions(
+        self,
+        database: str,
+        table: str,
+        partition_spec: Sequence[str],
+        values_list: Sequence[dict[str, Any]],
+        fmt: str | None = None,
+    ) -> list[dict[str, Any]]:
+        """:meth:`add_partition` for every values dict of a batch, with
+        one load and one save of the database file instead of one
+        rewrite per partition."""
         state = self._load(database)
         if table not in state["tables"]:
             raise KeyError(f"table not found: {database}.{table}")
@@ -248,14 +261,21 @@ class FileCatalog:
             for c in t["StorageDescriptor"]["Columns"]
             if c["Name"] not in partition_spec
         ]
-        loc = partition_location(t["StorageDescriptor"]["Location"], partition_spec, values)
-        key = "/".join(str(values[k]) for k in partition_spec)
-        t.setdefault("Partitions", {})[key] = {
-            "Values": [str(values[k]) for k in partition_spec],
-            "StorageDescriptor": get_storage_descriptor(fmt, data_columns, loc),
-        }
-        self._save(database, state)
-        return t["Partitions"][key]
+        parts = t.setdefault("Partitions", {})
+        out = []
+        for values in values_list:
+            loc = partition_location(
+                t["StorageDescriptor"]["Location"], partition_spec, values
+            )
+            key = "/".join(str(values[k]) for k in partition_spec)
+            parts[key] = {
+                "Values": [str(values[k]) for k in partition_spec],
+                "StorageDescriptor": get_storage_descriptor(fmt, data_columns, loc),
+            }
+            out.append(parts[key])
+        if out:
+            self._save(database, state)
+        return out
 
     def get_partitions(self, database: str, table: str) -> dict[str, Any]:
         return self.get_table(database, table).get("Partitions", {})

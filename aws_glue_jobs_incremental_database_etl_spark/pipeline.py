@@ -6,22 +6,25 @@ stage for stage (SURVEY.md §3):
 
   config → catalog resolve → DDL branch (create / evolve) →
   incremental scan (bookmark filter, pushed down) → empty probe →
-  apply_mapping (cast to catalog types) → drop_null_fields →
-  partition discovery (distinct) → partitioned append write →
-  partition registration → lineage stamp → single end-of-job
-  bookmark commit (at-least-once, reference ``:639``).
+  apply_mapping (cast to catalog types) → one batch aggregate →
+  drop_null_fields → partition registration → partitioned append
+  write → lineage stamp → single end-of-job bookmark commit
+  (at-least-once, reference ``:639``).
 
-Scale design:
+Scale design — a non-empty batch costs three Spark actions, an empty
+one costs one:
 - the bookmark predicate is a Catalyst filter → pushed to the parquet
   row-group / JDBC WHERE level; the incremental batch, not the table,
   is what flows through the job;
-- the batch is cached once and reused by the three consumers that
-  need a pass (non-null counts, partition discovery, write) instead of
-  re-scanning the source three times;
-- partition registration collects only the *distinct partition
-  tuples* (bounded by partition cardinality, not data size);
-- the write is a distributed ``partitionBy`` append — no per-partition
-  driver round-trips.
+- probe: a ``take(1)`` on the filtered scan, before anything is
+  mapped or cached, so an empty poll stops after one small job;
+- aggregate: ONE global aggregate over the cached, mapped batch gives
+  every column's non-null count (DropNullFields), the row count, the
+  next watermark (per-key max/min) and the distinct partition tuples
+  (bounded by partition cardinality, not data size);
+- write: a distributed ``partitionBy`` append of the same cached
+  batch — no per-partition driver round-trips; the partitions are
+  registered with one catalog rewrite, not one per tuple.
 """
 
 from __future__ import annotations
@@ -30,10 +33,10 @@ import datetime as dt
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .bookmarks import BookmarkStore
+from .bookmarks import BookmarkStore, watermark_aggregates, watermark_from
 from .catalog import FileCatalog
 from .config import TableConfig
 from .sharding import select_tables
@@ -46,6 +49,12 @@ from .transforms import (
     identity_mappings,
 )
 from .types import schema_to_columns
+
+# names of the batch aggregate's extra results (beside the per-column
+# non-null counts); a source column of the same name is rejected
+_ROWS = "__graft_rows"
+_WATERMARK = "__graft_watermark"
+_PARTITIONS = "__graft_partitions"
 
 
 @dataclass
@@ -272,7 +281,8 @@ class IncrementalPipeline:
                 res.evolved_schema = True
 
         # (2) empty probe (reference :194-197) — LIMIT 1 against the
-        # already-filtered scan, so it costs one row-group touch.
+        # already-filtered scan, so it costs one row-group touch; an
+        # empty poll launches no other Spark job.
         # The lineage stamp + creator grant still run (reference calls
         # update_table_job_info and the first-creation grant
         # unconditionally after transform(), :617-637 — an empty
@@ -285,13 +295,29 @@ class IncrementalPipeline:
         # (3) map/cast to catalog types (reference :199-203).
         mapped = apply_mapping(batch, identity_mappings(source_columns))
 
-        # Cache the batch once: counted (4), distinct-ed (5), written
-        # (6).  At 100 TB use DISK_ONLY or recompute — here MEMORY_AND_DISK.
+        # Cache the batch once: it is the snapshot that the aggregate
+        # (4) and the write (5) both read, so the row count, the
+        # registered partitions, the watermark and the written rows
+        # agree — a JDBC source re-queries the database on every
+        # action.  At 100 TB use DISK_ONLY or recompute — here
+        # MEMORY_AND_DISK.
         mapped.persist()
         try:
-            # (4) drop all-null columns (reference :205-208) — runs
-            # BEFORE partition discovery and the write, same ordering.
-            pruned = drop_null_fields(mapped, count_non_nulls(mapped))
+            # (4) ONE global aggregate over the batch: every column's
+            # non-null count (DropNullFields, reference :205-208), the
+            # row count, the next watermark and the distinct partition
+            # tuples (reference :210-220; bounded by partition
+            # cardinality, not data size).
+            extra = {_ROWS: F.count(F.lit(1))}
+            if self.bookmark_mode == "enable":
+                extra[_WATERMARK] = F.struct(
+                    *watermark_aggregates(cfg.bookmark_keys, cfg.sort_order)
+                )
+            if cfg.partition_spec:
+                extra[_PARTITIONS] = F.collect_set(F.struct(*cfg.partition_spec))
+            stats = count_non_nulls(mapped, extra)
+
+            pruned = drop_null_fields(mapped, stats)
             # CDC columns are contract, not data: a batch with no
             # tombstones (all-null delete marker) must not lose the
             # column the merge logic keys on
@@ -304,38 +330,35 @@ class IncrementalPipeline:
                 ]
                 pruned = mapped.select(*keep)
 
-            # (5) partition discovery (reference :210-220): distinct
-            # partition tuples only — bounded driver traffic.
             if cfg.partition_spec:
-                values = (
-                    pruned.select(*cfg.partition_spec).distinct().collect()
+                values = [
+                    dict(zip(cfg.partition_spec, t)) for t in stats[_PARTITIONS]
+                ]
+                self.catalog.add_partitions(
+                    self.target_database,
+                    tgt_name,
+                    cfg.partition_spec,
+                    values,
+                    fmt=self.target_format,
                 )
-                for row in values:
-                    self.catalog.add_partition(
-                        self.target_database,
-                        tgt_name,
-                        cfg.partition_spec,
-                        row.asDict(),
-                        fmt=self.target_format,
-                    )
-                    res.partitions_registered.append(
-                        "/".join(str(row[k]) for k in cfg.partition_spec)
-                    )
+                res.partitions_registered.extend(
+                    "/".join(str(v[k]) for k in cfg.partition_spec)
+                    for v in values
+                )
 
-            # (6) write.  CDC tables (mergeKeys, [EXT]) MERGE the batch
+            # (5) write.  CDC tables (mergeKeys, [EXT]) MERGE the batch
             # into the target — latest-per-key, tombstone deletes, only
             # touched partition directories rewritten (merge.py);
             # replaying the same batch re-merges to the identical state,
             # preserving the at-least-once contract.  Everything else is
-            # the reference's partitioned append (:222-229), with the
-            # row count riding the write via Observation — no second
-            # pass over the batch for metrics.  In exactly_once mode the
-            # batch lands in the run's private staging dir and is
-            # published at commit (txn.py).
+            # the reference's partitioned append (:222-229); its row
+            # count is the aggregate's.  In exactly_once mode the batch
+            # lands in the run's private staging dir and is published
+            # at commit (txn.py).
             if cfg.merge_keys:
                 from .merge import merge_upsert
 
-                stats = merge_upsert(
+                merged = merge_upsert(
                     self.spark,
                     self.target_path(cfg.table_name),
                     pruned,
@@ -345,52 +368,42 @@ class IncrementalPipeline:
                     version_col=cfg.version_col,
                     delete_col=cfg.delete_col,
                 )
-                res.rows_written = stats["rows_written"]
-                self._stage_watermark(ctx, mapped, cfg)
-                self._stamp_lineage_and_grant(res, tgt_name, t0)
-                return res
-
-            obs = Observation()
-            observed = pruned.observe(obs, F.count(F.lit(1)).alias("n"))
-            if self.exactly_once:
-                write_partitioned(
-                    observed,
-                    self._txn.staging_path(tgt_name),
-                    fmt=self.target_format,
-                    partition_spec=cfg.partition_spec,
-                    mode="overwrite",
-                )
-                self._txn.register(tgt_name, self.target_path(cfg.table_name))
+                res.rows_written = merged["rows_written"]
             else:
-                write_partitioned(
-                    observed,
-                    self.target_path(cfg.table_name),
-                    fmt=self.target_format,
-                    partition_spec=cfg.partition_spec,
-                    mode="append",
-                )
-            res.rows_written = obs.get["n"]
+                if self.exactly_once:
+                    write_partitioned(
+                        pruned,
+                        self._txn.staging_path(tgt_name),
+                        fmt=self.target_format,
+                        partition_spec=cfg.partition_spec,
+                        mode="overwrite",
+                    )
+                    self._txn.register(tgt_name, self.target_path(cfg.table_name))
+                else:
+                    write_partitioned(
+                        pruned,
+                        self.target_path(cfg.table_name),
+                        fmt=self.target_format,
+                        partition_spec=cfg.partition_spec,
+                        mode="append",
+                    )
+                res.rows_written = stats[_ROWS]
 
-            # Stage the new watermark from THIS batch; committed with
-            # all the others in run().
-            self._stage_watermark(ctx, mapped, cfg)
+            # (6) stage the new watermark from THIS batch — only in
+            # 'enable' mode: 'pause' replays the same window next run
+            # (the filter still applied, the watermark frozen);
+            # 'disable' never tracks state at all — both are Glue's
+            # documented option semantics.  Committed with all the
+            # others in run().
+            if self.bookmark_mode == "enable":
+                self.bookmarks.stage(
+                    ctx, watermark_from(stats[_WATERMARK], cfg.bookmark_keys)
+                )
         finally:
             mapped.unpersist()
 
         self._stamp_lineage_and_grant(res, tgt_name, t0)
         return res
-
-    def _stage_watermark(self, ctx: str, batch: DataFrame, cfg: TableConfig) -> None:
-        """Advance the bookmark from this batch — only in 'enable'
-        mode.  'pause' replays the same window next run (the filter
-        still applied, the watermark frozen); 'disable' never tracks
-        state at all — both are Glue's documented option semantics."""
-        if self.bookmark_mode != "enable":
-            return
-        new_wm = self.bookmarks.compute_next(
-            batch, cfg.bookmark_keys, cfg.sort_order
-        )
-        self.bookmarks.stage(ctx, new_wm)
 
     def _stamp_lineage_and_grant(
         self, res: PipelineResult, tgt_name: str, t0: dt.datetime

@@ -7,8 +7,6 @@ shared dicts from ``._core``.
 
 from __future__ import annotations
 
-import tempfile  # noqa: F401  (several queries stage scratch dirs)
-
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
@@ -23,6 +21,7 @@ from ._core import (  # noqa: F401
     O,
     Q,
     query,
+    scratch_dir,
 )
 
 # =====================================================================
@@ -40,7 +39,7 @@ def etl_reload(spark, sf_dir):
     from ..config import TableConfig
     from ..pipeline import IncrementalPipeline
 
-    work = tempfile.mkdtemp(prefix="etl_reload_")
+    work = scratch_dir("etl_reload_")
     full = load_table(spark, sf_dir, "orders")
     mid = full.agg((F.max("o_orderkey") / 2).cast("bigint")).first()[0]
     src = f"{work}/src_orders"
@@ -121,7 +120,7 @@ def etl_bookmark(spark, sf_dir):
     filter, pushed down to the parquet scan."""
     from ..bookmarks import BookmarkStore
 
-    work = tempfile.mkdtemp(prefix="bm_")
+    work = scratch_dir("bm_")
     bs = BookmarkStore(f"{work}/bm.json")
     bs.stage("orders_ctx", {"o_orderkey": 1000})
     bs.commit()

@@ -8,8 +8,9 @@ projections so they stay inside whole-stage codegen.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .types import hive_to_spark
@@ -45,16 +46,30 @@ def identity_mappings(columns: Sequence[dict[str, str]]) -> list[tuple[str, str,
     return [(c["Name"], c["Name"], c["Type"]) for c in columns]
 
 
-def count_non_nulls(df: DataFrame) -> dict[str, int]:
+def count_non_nulls(
+    df: DataFrame, extra: dict[str, Column] | None = None
+) -> dict[str, Any]:
     """Per-column non-null counts in ONE pass (partial+final agg).
 
     ``F.count(col)`` counts non-null values, so a single ``agg`` over
     all columns gives every column's null-ness with one scan and a
     1-row shuffle — this is the data-dependent pass DropNullFields
     needs (no Catalyst rule can avoid it; SURVEY.md §4).
+
+    ``extra`` (name → aggregate column) rides the same pass: each
+    result comes back under its name beside the counts, so a caller
+    that needs other batch statistics (the pipeline's row count,
+    watermark and partition tuples) pays for one scan, not several.
     """
-    row = df.agg(*[F.count(F.col(c)).alias(c) for c in df.columns]).first()
-    return {c: row[c] for c in df.columns}
+    extra = extra or {}
+    clash = sorted(set(extra) & set(df.columns))
+    if clash:
+        raise ValueError(f"extra aggregate names clash with columns: {clash}")
+    row = df.agg(
+        *[F.count(F.col(c)).alias(c) for c in df.columns],
+        *[agg.alias(name) for name, agg in extra.items()],
+    ).first()
+    return dict(zip([*df.columns, *extra], row))
 
 
 def drop_null_fields(
@@ -67,16 +82,18 @@ def drop_null_fields(
     fields before partition discovery and the write — so an all-null
     source column silently disappears from the target files.
 
-    At 100 TB the extra counting scan is the cost; callers that already
-    scan the batch (e.g. the pipeline) may pass precomputed
-    ``non_null_counts`` or cache the input.  An empty input keeps all
-    columns (the reference never reaches this transform with an empty
-    batch thanks to its take(1) probe, ``jdbc_incremental.py:194-197``).
+    With ``non_null_counts`` (e.g. from the pipeline's one aggregate
+    over a batch it has already found non-empty) this is a pure
+    projection: no Spark job.  Without them it probes for emptiness
+    and counts: an empty input keeps all columns (the reference never
+    reaches this transform with an empty batch thanks to its take(1)
+    probe, ``jdbc_incremental.py:194-197``).
     """
-    if len(df.take(1)) == 0:
-        return df
-    counts = non_null_counts or count_non_nulls(df)
-    all_null = [c for c in df.columns if counts.get(c, 0) == 0]
+    if non_null_counts is None:
+        if len(df.take(1)) == 0:
+            return df
+        non_null_counts = count_non_nulls(df)
+    all_null = [c for c in df.columns if non_null_counts.get(c, 0) == 0]
     return df.drop(*all_null) if all_null else df
 
 

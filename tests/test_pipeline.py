@@ -7,6 +7,7 @@ an empty delta short-circuits, and schema evolution follows E2.
 """
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -431,3 +432,179 @@ def test_sink_compression_codec(spark, sf_dir, tmp_path):
     files = [f for f in os.listdir(loc) if f.endswith(".parquet")]
     assert files and all(".zstd." in f for f in files)
     assert spark.read.parquet(loc).count() == 100
+
+
+# -- the fused batch pass: job counts and the behaviour it must keep --------
+
+
+def _spark_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return (its result, the number
+    of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"pipeline-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pipeline job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_table_run_job_counts(env, spark, sf_dir):
+    """A non-empty append run is a probe, one aggregate and one write:
+    at most 7 Spark jobs (11 here when each stage ran its own pass).
+    An empty poll stops at the probe, whose ``take(1)`` may take a
+    second job to look past the first file."""
+    tmp_path, make = env
+    src = _write_source(spark, sf_dir, tmp_path, "o_orderkey <= 750")
+    make(job_run_id="run-0").run([CFG], {"orders": src})
+
+    src = _write_source(spark, sf_dir, tmp_path)
+    (res,), n_step = _spark_jobs(
+        spark, lambda: make(job_run_id="run-1").run([CFG], {"orders": src})
+    )
+    assert res.rows_written > 0
+    assert n_step <= 7
+
+    (res,), n_poll = _spark_jobs(
+        spark, lambda: make(job_run_id="run-2").run([CFG], {"orders": src})
+    )
+    assert res.skipped_empty
+    assert n_poll <= 2
+
+
+def test_desc_watermark_tracks_min(env, spark, sf_dir):
+    tmp_path, make = env
+    full = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    cfg = TableConfig("orders", ["o_orderkey"], "DESC", ["o_orderstatus"])
+    src = _write_source(spark, sf_dir, tmp_path, "o_orderkey > 750")
+    (r1,) = make(job_run_id="run-1").run([cfg], {"orders": src})
+    hi = full.filter("o_orderkey > 750")
+    assert r1.rows_written == hi.count()
+    ctx = "datasource0_tgt_orders"
+    assert make().bookmarks.get(ctx) == {
+        "o_orderkey": hi.agg(F.min("o_orderkey")).first()[0]
+    }
+
+    src = _write_source(spark, sf_dir, tmp_path)
+    (r2,) = make(job_run_id="run-2").run([cfg], {"orders": src})
+    assert r2.rows_written == full.count() - hi.count()
+    assert make().bookmarks.get(ctx) == {
+        "o_orderkey": full.agg(F.min("o_orderkey")).first()[0]
+    }
+
+
+def test_composite_bookmark_keys_advance_per_key(env, spark, sf_dir):
+    tmp_path, make = env
+    src = _write_source(spark, sf_dir, tmp_path, "o_orderkey <= 750")
+    cfg = TableConfig("orders", ["o_orderkey", "o_custkey"], "ASC", [])
+    make(job_run_id="run-1").run([cfg], {"orders": src})
+    batch = spark.read.parquet(src)
+    want = batch.agg(F.max("o_orderkey"), F.max("o_custkey")).first()
+    assert make().bookmarks.get("datasource0_tgt_orders") == {
+        "o_orderkey": want[0],
+        "o_custkey": want[1],
+    }
+
+
+def test_null_partition_value_registration(env, spark, sf_dir):
+    """A null partition value registers under the key ``"None"``."""
+    tmp_path, make = env
+    src = spark.read.parquet(f"{sf_dir}/orders.parquet").withColumn(
+        "o_orderstatus",
+        F.when(F.col("o_orderstatus") == "P", None).otherwise(F.col("o_orderstatus")),
+    )
+    p = str(tmp_path / "src_nullpart")
+    src.write.mode("overwrite").parquet(p)
+    (res,) = make().run([CFG], {"orders": p})
+    want = {"F", "O", "None"}
+    assert sorted(res.partitions_registered) == sorted(want)
+    parts = make().catalog.get_partitions("target", "tgt_orders")
+    assert set(parts) == want
+    assert parts["None"]["Values"] == ["None"]
+    assert parts["None"]["StorageDescriptor"]["Location"].endswith(
+        "/tgt_orders/o_orderstatus=None/"
+    )
+
+
+def test_all_null_column_dropped_but_cdc_column_kept(env, spark, sf_dir):
+    """An all-null data column leaves the written files, while an
+    all-null delete marker (a batch with no tombstones) survives to the
+    merge that needs it."""
+    tmp_path, make = env
+    cfg = parse_table_config(
+        '[{"tableName":"orders","bookmarkKeys":["op_seq"],"sortOrder":"ASC",'
+        '"partitionSpec":"o_orderstatus","mergeKeys":["o_orderkey"],'
+        '"versionColumn":"op_seq","deleteColumn":"is_deleted"}]'
+    )
+    src = str(tmp_path / "cdc_nulls")
+    batch = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        "*",
+        F.col("o_orderkey").alias("op_seq"),
+        F.lit(None).cast("string").alias("ghost"),
+        F.lit(None).cast("boolean").alias("is_deleted"),
+    )
+    batch.write.mode("overwrite").parquet(src)
+    (res,) = make(job_run_id="r1").run(cfg, {"orders": src})
+    assert res.rows_written == batch.count()
+    files = spark.read.parquet(str(tmp_path / "lake" / "tgt_orders"))
+    assert "ghost" not in files.columns
+    assert "is_deleted" not in files.columns
+    assert files.count() == batch.count()
+    assert make().bookmarks.get("datasource0_tgt_orders") == {
+        "op_seq": batch.agg(F.max("op_seq")).first()[0]
+    }
+
+
+@pytest.mark.parametrize("exactly_once", [False, True])
+def test_rows_written_is_the_targets_delta(env, spark, sf_dir, exactly_once):
+    tmp_path, make = env
+    src = _write_source(spark, sf_dir, tmp_path, "o_orderkey <= 750")
+    (r1,) = make(job_run_id="run-1", exactly_once=exactly_once).run(
+        [CFG], {"orders": src}
+    )
+    before = make().read_target("orders").count()
+    assert r1.rows_written == before
+
+    src = _write_source(spark, sf_dir, tmp_path)
+    pipe = make(job_run_id="run-2", exactly_once=exactly_once)
+    (r2,) = pipe.run([CFG], {"orders": src})
+    assert r2.rows_written == pipe.read_target("orders").count() - before > 0
+
+
+def test_add_partitions_is_add_partition_with_one_save(tmp_path):
+    """Batch registration stores what one add_partition call per tuple
+    stores (create-else-update), with one rewrite of the database file."""
+    spec = ["o_orderstatus", "o_year"]
+    batch = [
+        {"o_orderstatus": "F", "o_year": 1995},
+        {"o_orderstatus": "O", "o_year": None},
+        {"o_orderstatus": "F", "o_year": 1995},
+    ]
+    cols = [
+        {"Name": "o_orderkey", "Type": "bigint"},
+        {"Name": "o_orderstatus", "Type": "string"},
+        {"Name": "o_year", "Type": "int"},
+    ]
+
+    class CountingCatalog(FileCatalog):
+        saves = 0
+
+        def _save(self, database, state):
+            self.saves += 1
+            super()._save(database, state)
+
+    one = CountingCatalog(str(tmp_path / "one"))
+    many = CountingCatalog(str(tmp_path / "many"))
+    for cat in (one, many):
+        cat.create_table("target", "t", cols[:1], "/lake/t", partition_keys=cols[1:])
+        cat.saves = 0
+    for values in batch:
+        one.add_partition("target", "t", spec, values)
+    many.add_partitions("target", "t", spec, batch)
+    assert many.get_partitions("target", "t") == one.get_partitions("target", "t")
+    assert set(many.get_partitions("target", "t")) == {"F/1995", "O/None"}
+    assert (one.saves, many.saves) == (3, 1)

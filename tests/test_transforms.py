@@ -2,6 +2,7 @@
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -78,6 +79,18 @@ def test_count_non_nulls_single_pass(spark, sf_dir):
     counts = count_non_nulls(df)
     assert counts["allnull"] == 0
     assert counts["c_custkey"] == df.count()
+    # extra aggregates ride the same pass, under their own names
+    stats = count_non_nulls(df, {"rows": F.count(F.lit(1))})
+    assert stats == {**counts, "rows": df.count()}
+    with pytest.raises(ValueError, match="clash"):
+        count_non_nulls(df, {"c_custkey": F.count(F.lit(1))})
+
+
+def test_drop_null_fields_trusts_given_counts(spark):
+    """Given counts are used as they are: no probe, no recount."""
+    df = spark.createDataFrame([(1, "x")], ["a", "b"])
+    assert drop_null_fields(df, {"a": 1, "b": 0}).columns == ["a"]
+    assert drop_null_fields(df, {}).columns == []
 
 
 def test_rescue_columns_contract(spark):
