@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .skew import postings_pairs
+
 
 # ---------------------------------------------------------------- exact
 
@@ -232,6 +234,45 @@ def minhash_near_dup_pairs(
     )
 
 
+def _shared_shingle_counts(
+    df: DataFrame, id_col: str, text_col: str, shingle_k: int, max_postings: int
+) -> DataFrame:
+    """``(id_a, id_b, n_a, n_b, shared)`` for every document pair sharing
+    a shingle outside the stop set: the candidate core of the exact
+    Jaccard and containment joins.  ``n_*`` are the FULL shingle-set
+    sizes; ``shared`` counts the kept shingles in common."""
+    # postings carry 8-byte xxhash64 values, not shingle strings — set
+    # equality is all the scores need, and the shuffle shrinks ~3× (a
+    # 64-bit collision inside one near-dup pair is ~1e-9 at corpus
+    # sizes where the exact algorithm is even applicable).
+    # Materialized: uncached, the isnotnull filter Catalyst infers for
+    # the explode re-tokenizes each document.
+    sized = (
+        _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")), "id")
+        .select("id", tokens_of(F.col("text")).alias("_toks"))
+        .select(
+            "id",
+            F.transform(
+                shingles_from_tokens(F.col("_toks"), shingle_k),
+                lambda s: F.xxhash64(s),
+            ).alias("sh"),
+        )
+        .withColumn("n_sh", F.size("sh"))
+        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    )
+    postings = sized.select("id", "n_sh", F.explode("sh").alias("shingle"))
+    return (
+        postings_pairs(postings, "shingle", "id", max_postings, "stop-shingle", carry=("n_sh",))
+        .groupBy(
+            "id_a",
+            "id_b",
+            F.col("n_sh_a").alias("n_a"),
+            F.col("n_sh_b").alias("n_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+
+
 def jaccard_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -253,45 +294,7 @@ def jaccard_near_dup_pairs(
     j ≈ 0 at any realistic threshold); the pair-count aggregate is a
     single shuffle keyed by (id_a, id_b).
     """
-    # postings carry 8-byte xxhash64 values, not shingle strings — set
-    # equality is all Jaccard needs, and the shuffle shrinks ~3× (a
-    # 64-bit collision inside one near-dup pair is ~1e-9 at corpus
-    # sizes where the exact algorithm is even applicable).
-    # persist(): four plan branches consume this frame (both self-join
-    # sides + both stop-shingle count branches); uncached, Spark
-    # re-shingles the corpus once PER BRANCH (measured 3× slower).
-    sized = (
-        _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")), "id")
-        .select("id", tokens_of(F.col("text")).alias("_toks"))
-        .select(
-            "id",
-            F.transform(
-                shingles_from_tokens(F.col("_toks"), shingle_k),
-                lambda s: F.xxhash64(s),
-            ).alias("sh"),
-        )
-        .withColumn("n_sh", F.size("sh"))
-        .persist()
-    )
-    postings = sized.select("id", "n_sh", F.explode("sh").alias("shingle"))
-    rare = (
-        postings.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df_"))
-        .filter(F.col("df_") <= max_postings)
-        .select("shingle")
-    )
-    postings = postings.join(rare.hint("merge"), "shingle")
-    a, b = postings.alias("a"), postings.alias("b")
-    pair_shared = (
-        a.join(b.hint("merge"), (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+    pair_shared = _shared_shingle_counts(df, id_col, text_col, shingle_k, max_postings)
     j = F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared")).cast("double")
     return (
         pair_shared.withColumn("jaccard", j)
@@ -316,43 +319,12 @@ def containment_near_dup_pairs(
     training-data decontamination pass must catch (Broder's
     containment, the measure behind suffix-array substring decontam).
 
-    Same inverted-postings plan as :func:`jaccard_near_dup_pairs`
+    Shares its shared-shingle counts with :func:`jaccard_near_dup_pairs`
     (hash postings, stop-shingle ``max_postings`` guard, one pair
     aggregation); only the final score differs.  Jaccard rides along
     for calibration — C ≥ J always.
     """
-    sized = (
-        _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")), "id")
-        .select("id", tokens_of(F.col("text")).alias("_toks"))
-        .select(
-            "id",
-            F.transform(
-                shingles_from_tokens(F.col("_toks"), shingle_k),
-                lambda s: F.xxhash64(s),
-            ).alias("sh"),
-        )
-        .withColumn("n_sh", F.size("sh"))
-        .persist()
-    )
-    postings = sized.select("id", "n_sh", F.explode("sh").alias("shingle"))
-    rare = (
-        postings.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df_"))
-        .filter(F.col("df_") <= max_postings)
-        .select("shingle")
-    )
-    postings = postings.join(rare.hint("merge"), "shingle")
-    a, b = postings.alias("a"), postings.alias("b")
-    pair_shared = (
-        a.join(b.hint("merge"), (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+    pair_shared = _shared_shingle_counts(df, id_col, text_col, shingle_k, max_postings)
     c = F.col("shared") / F.least("n_a", "n_b").cast("double")
     j = F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared")).cast("double")
     return (
@@ -1078,82 +1050,29 @@ def winnow_near_dup_pairs(
     acceptable), and note that doing so makes results corpus-size-
     sensitive in the presence of templated text.
     """
-    # localCheckpoint (not persist): four plan branches consume this
-    # frame (df-cap count, sizes, both self-join sides) — unshared,
-    # Spark re-fingerprints the corpus once per branch (same measured
-    # trap as jaccard_near_dup_pairs' sized frame).  Checkpoint blocks
-    # are GC-scoped: the ContextCleaner frees them when the caller
-    # drops the returned frame, unlike persist() whose cacheManager
-    # entry pins the cache until an explicit unpersist that a lazily-
-    # returning operator has no safe place to issue.  On a real
-    # cluster at 100 TB, swap for a reliable checkpoint dir (or a
-    # temp-table write) — localCheckpoint blocks die with executors.
     # gram_code (k <= 8) takes the Arrow numpy fast path — pinned
     # row-equal to the expression form by test_winnow_np_equals_expression
     if hash_fn == "gram_code" and k <= 8:
         raw = winnow_fingerprints_np(df, id_col, text_col, k, window)
     else:
         raw = winnow_fingerprints(df, id_col, text_col, k, window, hash_fn)
-    fp = (
-        raw.select(id_col, "fp_hash")
-        .distinct()
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    )
-    if max_df is not None:
-        # Anti-join against the OVER-cap hashes (small by construction
-        # — boilerplate only), broadcast: the earlier inner join
-        # against the keep set shuffled the full postings frame twice.
-        drop = (
-            fp.groupBy("fp_hash")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_df)
-            .select("fp_hash")
-            .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-        )
-        # Observability (the guard defaults ON since round 6): when it
-        # actually drops fingerprints, results are corpus-dependent —
-        # say so, with the over-cap hash count, instead of silently
-        # losing every pair that shared only boilerplate.  The count
-        # materializes the checkpointed drop frame the anti-join
-        # reuses, so the extra action costs one small aggregate.
-        n_over = drop.count()
-        if n_over:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "winnow_near_dup_pairs: max_df=%d dropped %d over-cap "
-                "fingerprint hashes (boilerplate guard) — pairs sharing "
-                "only those hashes will not surface; pass max_df=None "
-                "to disable (reads the docstring's scale caveat first)",
-                max_df,
-                n_over,
-            )
-        fp = fp.join(F.broadcast(drop), "fp_hash", "left_anti")
-    sizes = fp.groupBy(id_col).agg(F.count("*").alias("n_fp"))
-    a = fp.alias("a")
-    b = fp.alias("b")
-    shared = (
-        a.join(b.hint("merge"), "fp_hash")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    fp = raw.select(id_col, "fp_hash").distinct()
+    # |A| counts the document's KEPT fingerprints: a window evaluated
+    # after the boilerplate cap, carried onto both pair sides
+    n_fp = F.count(F.lit(1)).over(Window.partitionBy(id_col)).alias("n_fp")
+    return (
+        postings_pairs(fp, "fp_hash", id_col, max_df, "fingerprint-hash", carry=(n_fp,))
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col(f"{id_col}_a").alias("id_a"),
+            F.col(f"{id_col}_b").alias("id_b"),
+            "n_fp_a",
+            "n_fp_b",
         )
         .agg(F.count("*").alias("shared"))
-    )
-    sa = sizes.select(
-        F.col(id_col).alias("id_a"), F.col("n_fp").alias("n_a")
-    )
-    sb = sizes.select(
-        F.col(id_col).alias("id_b"), F.col("n_fp").alias("n_b")
-    )
-    return (
-        shared.join(sa.hint("merge"), "id_a")
-        .join(sb.hint("merge"), "id_b")
         .withColumn(
             "overlap",
             F.round(
-                F.col("shared") / F.least("n_a", "n_b").cast("double"), 4
+                F.col("shared") / F.least("n_fp_a", "n_fp_b").cast("double"), 4
             ),
         )
         .filter(F.col("overlap") >= threshold)
@@ -1184,10 +1103,11 @@ def tfidf_cosine_pairs(
     Magnitudes: w = tf·idf·1e4 ≈ 1e6, w² ≈ 1e12, × vocab-per-doc
     stays orders under 2^63.
 
-    Scale shape: postings self-join keyed by token with the same
-    ``max_postings`` stop-term cap as the Jaccard join (a pair
-    connected ONLY by ubiquitous terms scores ≈ 0 anyway); norms are
-    one doc-keyed aggregate; N broadcasts as a 1-row frame."""
+    Scale shape: the ``skew.postings_pairs`` self-join keyed by token
+    with the same ``max_postings`` stop-term cap as the Jaccard join (a
+    pair connected ONLY by ubiquitous terms scores ≈ 0 anyway); norms
+    are a doc-keyed window over the kept postings, carried onto both
+    pair sides; N broadcasts as a 1-row frame."""
     toks = (
         df.select(
             F.col(id_col).alias("id"),
@@ -1197,54 +1117,34 @@ def tfidf_cosine_pairs(
         .groupBy("id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    dfreq = toks.groupBy("token").agg(F.count(F.lit(1)).alias("df_"))
     n_docs = df.select(
         F.count(F.lit(1)).alias("n_docs")
     )
-    weighted = (
-        toks.join(dfreq.filter(F.col("df_") <= max_postings).hint("merge"), "token")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "id",
-            "token",
-            (
-                F.col("tf")
-                * F.round(
-                    (
-                        F.log(
-                            (F.col("n_docs") + 1).cast("double")
-                            / (F.col("df_") + 1).cast("double")
-                        )
-                        + 1.0
-                    )
-                    * idf_scale
-                ).cast("long")
-            ).alias("w"),
+    # weights and norms are evaluated after the stop-term cap, so the
+    # idf reads the kernel's per-token ``_df`` and the norm window sums
+    # only the kept terms of each document
+    w = F.col("tf") * F.round(
+        (
+            F.log(
+                (F.col("n_docs") + 1).cast("double")
+                / (F.col("_df") + 1).cast("double")
+            )
+            + 1.0
         )
-        # persist: consumed by the norm aggregate AND both self-join
-        # sides (the jaccard/winnow multi-branch precedent)
-        .persist()
+        * idf_scale
+    ).cast("long")
+    n2 = F.sum(w * w).over(Window.partitionBy("id"))
+    pairs = postings_pairs(
+        toks.crossJoin(F.broadcast(n_docs)),
+        "token",
+        "id",
+        max_postings,
+        "stop-term",
+        carry=(w.alias("w"), n2.alias("n2")),
     )
-    norms = weighted.groupBy("id").agg(
-        F.sum(F.col("w") * F.col("w")).alias("n2")
-    )
-    a, b = weighted.alias("a"), weighted.alias("b")
-    dots = (
-        a.join(
-            b.hint("merge"),
-            (F.col("a.token") == F.col("b.token"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        )
-        .agg(F.sum(F.col("a.w") * F.col("b.w")).alias("dot"))
-    )
-    na = norms.select(F.col("id").alias("id_a"), F.col("n2").alias("n2_a"))
-    nb = norms.select(F.col("id").alias("id_b"), F.col("n2").alias("n2_b"))
     return (
-        dots.join(na.hint("merge"), "id_a")
-        .join(nb.hint("merge"), "id_b")
+        pairs.groupBy("id_a", "id_b", "n2_a", "n2_b")
+        .agg(F.sum(F.col("w_a") * F.col("w_b")).alias("dot"))
         .withColumn(
             "cos",
             F.round(

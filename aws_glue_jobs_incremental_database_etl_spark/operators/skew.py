@@ -1,4 +1,4 @@
-"""Join/aggregation skew diagnostics.
+"""Join/aggregation skew: diagnosis and the capped postings self-join.
 
 ``joins.salted_join`` is the cure; this is the diagnosis: measure how
 concentrated a key column is BEFORE a 100 TB join melts one executor.
@@ -13,13 +13,23 @@ count-by-key, which is the cheapest possible full-data evidence.
 For repeated profiling of many columns at once use
 ``profile.profile(exact_distinct=False)`` first and only drill into
 suspicious keys here.
+
+``postings_pairs`` is the one all-pairs-shaped plan the engine runs on
+purpose: the (key, item) postings self-join behind the near-dup family
+(shingles, fingerprints, tokens → documents) and the co-supply graph
+family (parts → suppliers, orders → parts).  It owns the fan-out cap,
+so every caller bounds the worst key bucket at ``max_df²`` pairs the
+same way and keeps only its own score aggregate.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 def skew_stats(df: DataFrame, key_cols: list[str], top_k: int = 10) -> DataFrame:
@@ -69,78 +79,83 @@ def recommend_salt(df: DataFrame, key_cols: list[str], target_share: float = 0.0
     return math.ceil(max_share / target_share)
 
 
-def cap_key_fanout(
-    df: DataFrame,
-    key_col: str,
-    max_df: int | None = 256,
-    what: str = "postings",
-    return_counts: bool = False,
-):
-    """Drop every key whose fan-out (rows per key — pass a frame
-    already distinct on (key, item)) exceeds ``max_df``, BEFORE a
-    postings self-join on that key: the 100 TB guard that bounds any
-    bucket's pair fan-out at ``max_df²`` (the ``winnow_near_dup_pairs``
-    ``max_df`` pattern, generalized to any keyed self-join — VERDICT
-    r7 #2 wired it into the Adamic–Adar part key and the item2item
-    basket key as a default instead of a docstring deferral).
+def postings_pairs(
+    postings: DataFrame,
+    key: str,
+    item: str,
+    max_df: int | None,
+    what: str,
+    carry=(),
+) -> DataFrame:
+    """Every pair of items sharing a key: the capped postings self-join.
 
-    Defaults ON: an uncapped postings self-join is the one all-pairs
-    blowup shape, and a single ubiquitous key (boilerplate
-    fingerprint, mega-basket, hub part) is exactly what 1000× more
-    data adds.  The over-cap key set is small by construction →
-    broadcast anti-join, no extra shuffle of the postings frame.
-    When keys are actually dropped a warning reports the count —
-    results become corpus-dependent at that point, which must be
-    observable, never silent.  ``max_df=None`` opts out explicitly.
+    ``postings`` holds one row per (key, item) posting — pass a frame
+    already distinct on them when fan-out should count items, not rows.
+    Returns one row per posting pair ``item_a < item_b`` under a key:
+    ``key, _df, {item}_a, {item}_b`` plus every ``carry`` column
+    suffixed ``_a`` / ``_b``.  ``_df`` is the key's fan-out (its posting
+    count), taken by a window on the key whose exchange and sort also
+    feed the self-join, so a caller that weights by key degree
+    (Adamic–Adar, idf) reads it off the row instead of joining a
+    count-by-key back in.
 
-    ``return_counts=True`` additionally returns the per-key fan-out
-    frame ``(key_col, _df)`` RESTRICTED to the kept keys (VERDICT r8
-    #6: callers like Adamic–Adar need the same count-by-key as a
-    degree weight — sharing the materialized counts means ONE count
-    aggregate in the plan instead of two identical ones).  Kept keys'
-    counts are identical pre/post cap — the cap drops whole keys,
-    never trims rows within a key.
+    ``carry`` names columns of ``postings`` or gives aliased Columns.
+    They are evaluated AFTER the cap, so an expression may use ``_df``,
+    and a window over ``item`` (``F.count(F.lit(1)).over(
+    Window.partitionBy(item))``) aggregates only the kept postings.
+
+    ``max_df`` is the 100 TB guard: keys with more than ``max_df``
+    postings (boilerplate shingle, mega-basket, hub part) are dropped
+    whole before the self-join, bounding any bucket at ``max_df²``
+    pairs.  When keys are dropped a warning reports how many (one eager
+    count-by-key aggregate) — results become corpus-dependent at that
+    point, which must be observable, never silent.  ``max_df=None``
+    opts out explicitly.
+
+    The self-join carries ``hint("merge")``: both sides scale with the
+    corpus, and a plan-time size estimate must never broadcast one
+    (the minhash banded self-join died that way at sf10).
     """
-    if max_df is None:
-        if return_counts:
-            counts = df.groupBy(key_col).agg(
-                F.count(F.lit(1)).alias("_df")
-            )
-            return df, counts
-        return df
-    # Checkpoint the postings frame FIRST: every caller consumes the
-    # capped result at least twice (both sides of a self-join, often a
-    # count-by-key too) and the count-by-key below is a third pass —
-    # without a lineage cut each consumer re-runs the caller's
-    # scan+distinct from parquet (item_cooccurrence's before-plan held
-    # 8 parquet scans).  DISK_ONLY, the repo convention for
-    # corpus-scaled frames (storage-memory competition at sf10).
-    df = df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    counts = (
-        df.groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    # Both join sides (and the over-cap count) read the postings: cut
+    # the lineage so the caller's plan runs once.  DISK_ONLY, the
+    # convention for corpus-scaled frames (storage-memory competition
+    # at sf10); a local checkpoint, not persist(), because its blocks
+    # are freed when the caller drops the frame, while a lazily
+    # returned persist has no safe place for its unpersist.
+    postings = postings.localCheckpoint(
+        eager=False, storageLevel=StorageLevel.DISK_ONLY
     )
-    over = counts.filter(F.col("_df") > max_df).select(key_col)
-    n_over = over.count()
-    if n_over:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "cap_key_fanout: max_df=%d dropped %d over-cap %s keys "
-            "(fan-out guard) — pairs through those keys will not "
-            "surface; pass max_df=None to disable (read the scale "
-            "caveat first)",
-            max_df,
-            n_over,
-            what,
+    # Unless a carried window repartitions by item, the window's key
+    # exchange and sort also serve the self-join, so the fan-out costs
+    # no shuffle of its own
+    p = postings.withColumn(
+        "_df", F.count(F.lit(1)).over(Window.partitionBy(key))
+    )
+    if max_df is not None:
+        n_over = (
+            postings.groupBy(key).count().filter(F.col("count") > max_df).count()
         )
-    # No over-cap keys (the common case at healthy fan-outs): the
-    # anti-join would be a row-preserving no-op — skip it so consumers
-    # read the checkpointed blocks directly.
-    kept = (
-        df if n_over == 0 else df.join(F.broadcast(over), key_col, "left_anti")
+        if n_over:
+            logging.getLogger(__name__).warning(
+                "postings_pairs: max_df=%d dropped %d over-cap %s keys "
+                "(fan-out guard) — pairs through those keys will not "
+                "surface; pass max_df=None to disable (read the scale "
+                "caveat first)",
+                max_df,
+                n_over,
+                what,
+            )
+        p = p.filter(F.col("_df") <= max_df)
+    p = p.select(key, "_df", item, *carry)
+    sided = p.columns[2:]
+    a, b = p.alias("a"), p.alias("b")
+    return a.join(
+        b.hint("merge"),
+        (F.col(f"a.{key}") == F.col(f"b.{key}"))
+        & (F.col(f"a.{item}") < F.col(f"b.{item}")),
+    ).select(
+        F.col(f"a.{key}").alias(key),
+        F.col("a._df").alias("_df"),
+        *[F.col(f"a.{c}").alias(f"{c}_a") for c in sided],
+        *[F.col(f"b.{c}").alias(f"{c}_b") for c in sided],
     )
-    if return_counts:
-        return kept, counts.filter(F.col("_df") <= max_df)
-    return kept

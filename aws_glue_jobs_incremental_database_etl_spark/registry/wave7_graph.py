@@ -45,7 +45,7 @@ from .wave6_ts import _score_bin, _scored_docs, _scored_sql  # noqa: F401
              SUM(1.0 / LN(d.d)) AS aa, COUNT(*) AS common_parts
       FROM e a JOIN e b ON a.p = b.p AND a.s < b.s
       JOIN deg d ON d.p = a.p
-      -- d <= 256 replays cap_key_fanout(max_df=256): hub parts are
+      -- d <= 256 replays postings_pairs(max_df=256): hub parts are
       -- dropped whole, kept parts keep their degree (no-op at test
       -- SFs, max part degree 52)
       WHERE d.d >= 2 AND d.d <= 256
@@ -67,44 +67,25 @@ def adamic_adar_q(spark, sf_dir):
     common parts — rare shared parts count more than ubiquitous ones
     — and the top-20 predicted links surface.  Pair generation is the
     postings self-join on the part key (bounded per-part fan-out,
-    never all-pairs — the Jaccard-family shape); the degree weight
-    joins in on the same key, so one shuffle keys everything.  The
-    100 TB guard is wired on by default: ``cap_key_fanout`` drops
-    hub parts with degree > 256 (far above this schema's max of 52
-    at sf0.1, so gates are unchanged) via a broadcast anti-join and
-    logs the drop count — bounding the worst bucket at 256² pairs."""
-    from aws_glue_jobs_incremental_database_etl_spark.operators.skew import cap_key_fanout
+    never all-pairs — the Jaccard-family shape); the part degree is
+    the kernel's per-key fan-out ``_df``, read off each pair row.  The
+    100 TB guard is wired on by default: ``postings_pairs`` drops hub
+    parts with degree > 256 (far above this schema's max of 52 at
+    sf0.1, so gates are unchanged) and logs the drop count — bounding
+    the worst bucket at 256² pairs.  A pair row implies degree ≥ 2,
+    so 1/ln(d) is always finite."""
+    from aws_glue_jobs_incremental_database_etl_spark.operators.skew import postings_pairs
 
     li = load_table(spark, sf_dir, "lineitem")
     e = li.select(
         F.col("l_partkey").cast("bigint").alias("p"),
         F.col("l_suppkey").cast("bigint").alias("s"),
     ).distinct()
-    # return_counts shares the cap's count-by-key as the degree
-    # weight — ONE count aggregate in the plan, not two identical
-    # ones (VERDICT r8 #6)
-    e, deg = cap_key_fanout(
-        e, "p", max_df=256, what="part-degree", return_counts=True
-    )
-    deg = deg.withColumnRenamed("_df", "d")
-    a, b = e.alias("a"), e.alias("b")
     pairs = (
-        # hint("merge"): both sides are corpus-scaled (postings and the
-        # per-part degree frame) — Catalyst's size estimate of derived
-        # frames must never pick a broadcast here (sf10 probe finding)
-        a.join(
-            b.hint("merge"),
-            (F.col("a.p") == F.col("b.p")) & (F.col("a.s") < F.col("b.s")),
-        )
-        .join(
-            deg.filter(F.col("d") >= 2)
-            .withColumnRenamed("p", "dp")
-            .hint("merge"),
-            F.col("a.p") == F.col("dp"),
-        )
-        .groupBy(F.col("a.s").alias("s_a"), F.col("b.s").alias("s_b"))
+        postings_pairs(e, "p", "s", 256, "part-degree")
+        .groupBy("s_a", "s_b")
         .agg(
-            F.sum(F.lit(1.0) / F.log(F.col("d").cast("double"))).alias("aa"),
+            F.sum(F.lit(1.0) / F.log(F.col("_df").cast("double"))).alias("aa"),
             F.count(F.lit(1)).alias("common_parts"),
         )
     )

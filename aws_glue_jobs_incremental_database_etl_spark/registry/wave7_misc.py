@@ -39,7 +39,7 @@ from .wave6_ts import _score_bin, _scored_docs, _scored_sql  # noqa: F401
     ), bsz AS (
       SELECT l_orderkey, COUNT(*) AS bs FROM li0 GROUP BY l_orderkey
     ), li AS (
-      -- cap_key_fanout(max_df=256) replay: mega-baskets are dropped
+      -- postings_pairs(max_df=256) replay: mega-baskets are dropped
       -- before the self-join AND the item counts (no-op at test SFs,
       -- max basket 17)
       SELECT li0.l_orderkey, li0.l_partkey FROM li0
@@ -72,46 +72,28 @@ def item_cooccur_q(spark, sf_dir):
     parts from order-basket co-occurrence (co / √n_a·√n_b — the
     classic Amazon item2item score), top-20 pairs with ≥2 shared
     baskets.  Pair generation is the basket-keyed postings self-join
-    (bounded per-order fan-out, never item×item); the item-count
-    dimension joins back on the part key.  The 100 TB guard is wired
-    on by default: ``cap_key_fanout`` drops mega-baskets with > 256
-    items (far above this schema's max of 17 at sf0.1, so gates are
-    unchanged) via a broadcast anti-join and logs the drop count —
-    bounding the worst order at 256² pairs."""
-    from aws_glue_jobs_incremental_database_etl_spark.operators.skew import cap_key_fanout
+    (bounded per-order fan-out, never item×item); each part's basket
+    count is a window over the kept postings, carried onto both pair
+    sides.  The 100 TB guard is wired on by default:
+    ``postings_pairs`` drops mega-baskets with > 256 items (far above
+    this schema's max of 17 at sf0.1, so gates are unchanged) and logs
+    the drop count — bounding the worst order at 256² pairs."""
+    from aws_glue_jobs_incremental_database_etl_spark.operators.skew import postings_pairs
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     ).distinct()
-    li = cap_key_fanout(li, "l_orderkey", max_df=256, what="basket-size")
-    n = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("cnt"))
-    a, b = li.alias("a"), li.alias("b")
-    co = (
-        a.join(
-            b.hint("merge"),
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
+    cnt = F.count(F.lit(1)).over(Window.partitionBy("l_partkey")).alias("cnt")
+    scored = (
+        postings_pairs(li, "l_orderkey", "l_partkey", 256, "basket-size", carry=(cnt,))
         .groupBy(
-            F.col("a.l_partkey").alias("p_a"),
-            F.col("b.l_partkey").alias("p_b"),
+            F.col("l_partkey_a").alias("p_a"),
+            F.col("l_partkey_b").alias("p_b"),
+            F.col("cnt_a").alias("na"),
+            F.col("cnt_b").alias("nb"),
         )
         .agg(F.count(F.lit(1)).alias("co"))
         .filter(F.col("co") >= 2)
-    )
-    scored = (
-        co.join(
-            n.select(
-                F.col("l_partkey").alias("p_a"), F.col("cnt").alias("na")
-            ).hint("merge"),
-            "p_a",
-        )
-        .join(
-            n.select(
-                F.col("l_partkey").alias("p_b"), F.col("cnt").alias("nb")
-            ).hint("merge"),
-            "p_b",
-        )
         .select(
             "p_a",
             "p_b",

@@ -2014,7 +2014,7 @@ def seasonal_strength_q(spark, sf_dir):
     ), pdeg AS (
       SELECT p, COUNT(*) AS pd FROM raw0 GROUP BY p
     ), raw AS (
-      -- cap_key_fanout(max_df=256) replay: hub parts are dropped
+      -- postings_pairs(max_df=256) replay: hub parts are dropped
       -- before the postings self-join (no-op at test SFs, max 52)
       SELECT raw0.p, raw0.s FROM raw0
       JOIN pdeg ON pdeg.p = raw0.p
@@ -2065,21 +2065,19 @@ def closeness_q(spark, sf_dir):
     BFS per node; the ≤3-hop harmonic sum H = Σ_d n_d/d is the
     standard truncation, and the anchor set is a literal top-k).
     Three frontier⋈edges rounds with cumulative de-dup (the khop/BFS
-    audited shape); the co-supply edge postings join is part-keyed
-    with the default ``cap_key_fanout`` guard ON (VERDICT r8 #3:
-    hub parts with degree > 256 are dropped — with a logged count —
-    before the self-join, bounding any part bucket at 256² pair
-    rows; a no-op at test SFs where max part degree is 52, and the
-    oracle replays the same cap)."""
-    from ..operators.skew import cap_key_fanout
+    audited shape); the co-supply edges come from the part-keyed
+    ``postings_pairs`` self-join with its fan-out guard ON (hub parts
+    with degree > 256 are dropped — with a logged count — before the
+    self-join, bounding any part bucket at 256² pair rows; a no-op at
+    test SFs where max part degree is 52, and the oracle replays the
+    same cap)."""
+    from ..operators.skew import postings_pairs
 
     li = load_table(spark, sf_dir, "lineitem")
     raw = li.select(
         F.col("l_partkey").cast("bigint").alias("p"),
         F.col("l_suppkey").cast("bigint").alias("s"),
     ).distinct()
-    raw = cap_key_fanout(raw, "p", max_df=256, what="part-degree")
-    a, b = raw.alias("a"), raw.alias("b")
     # The edge list and hop frontiers are each reused by multiple
     # consumers, and the joins reference their columns ACROSS the
     # reuse (e["v"] against h1⋈e), so each needs a lineage-TRUNCATING
@@ -2098,12 +2096,11 @@ def closeness_q(spark, sf_dir):
     # joined and deduped — half the pair fan-out (17.4M → 8.7M rows at
     # sf0.1) and half the distinct's shuffle — and the checkpointed
     # half is mirrored into the full directed edge list by a union
-    # (two in-memory scans of the same blocks).  Identical edge set,
-    # measured 7.6 s → 5.6 s at sf0.1 (guide §2.3: shuffle fewer
-    # bytes).
+    # (two in-memory scans of the same blocks).  Identical edge set
+    # (guide §2.3: shuffle fewer bytes).
     half = (
-        a.join(b, (F.col("a.p") == F.col("b.p")) & (F.col("a.s") < F.col("b.s")))
-        .select(F.col("a.s").alias("u"), F.col("b.s").alias("v"))
+        postings_pairs(raw, "p", "s", 256, "part-degree")
+        .select(F.col("s_a").alias("u"), F.col("s_b").alias("v"))
         .distinct()
         .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )

@@ -1506,29 +1506,20 @@ def rich_club_q(spark, sf_dir):
     spread across the periphery?  Assortativity (shipped) gives the
     correlation; φ(k) profiles WHERE in the degree ladder the club
     forms.  Edges are the capped part-keyed postings self-join
-    (cap_key_fanout ≤ 256, the Adamic–Adar guard, replayed in the
-    oracle by the same degree filter); degrees, club membership, and
-    edge counts are key-equi joins plus a 3-row broadcast threshold
-    sweep."""
-    from aws_glue_jobs_incremental_database_etl_spark.operators.skew import cap_key_fanout
+    (``postings_pairs`` with max_df=256, the Adamic–Adar guard,
+    replayed in the oracle by the same degree filter); degrees, club
+    membership, and edge counts are key-equi joins plus a 3-row
+    broadcast threshold sweep."""
+    from aws_glue_jobs_incremental_database_etl_spark.operators.skew import postings_pairs
 
     li = load_table(spark, sf_dir, "lineitem")
     e = li.select(
         F.col("l_partkey").cast("bigint").alias("p"),
         F.col("l_suppkey").cast("bigint").alias("s"),
     ).distinct()
-    e, _ = cap_key_fanout(
-        e, "p", max_df=256, what="part-degree", return_counts=True
-    )
-    a, b = e.alias("a"), e.alias("b")
     edges = (
-        # hint("merge"): corpus-scaled self-join — never broadcast on a
-        # plan-time size estimate (round-10 sf10 probe finding)
-        a.join(
-            b.hint("merge"),
-            (F.col("a.p") == F.col("b.p")) & (F.col("a.s") < F.col("b.s")),
-        )
-        .select(F.col("a.s").alias("u"), F.col("b.s").alias("v"))
+        postings_pairs(e, "p", "s", 256, "part-degree")
+        .select(F.col("s_a").alias("u"), F.col("s_b").alias("v"))
         .distinct()
         # edges feed deg AND the φ(k) edge count, deg feeds nk AND both
         # ek sides: without lineage cuts every consumer re-runs the

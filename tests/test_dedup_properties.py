@@ -12,6 +12,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from aws_glue_jobs_incremental_database_etl_spark.operators.dedup import (
+    containment_near_dup_pairs,
     jaccard_near_dup_pairs,
     jaccard_near_dup_pairs_prefix,
     minhash_near_dup_pairs,
@@ -28,9 +29,10 @@ def _corpus():
     return st.lists(_doc(), min_size=2, max_size=8)
 
 
-def _brute_force(texts, k=3, threshold=0.7):
+def _brute_force(texts, k=3, threshold=0.7, containment=False):
     """Reference semantics: k-token shingles (distinct; whole doc if
-    fewer than k tokens), exact Jaccard, pairs id_a < id_b."""
+    fewer than k tokens), exact Jaccard (or containment, shared over
+    the smaller set), pairs id_a < id_b."""
     shingle_sets = []
     for t in texts:
         toks = t.strip().lower().split()
@@ -43,9 +45,9 @@ def _brute_force(texts, k=3, threshold=0.7):
     for i in range(len(texts)):
         for j in range(i + 1, len(texts)):
             a, b = shingle_sets[i], shingle_sets[j]
-            union = len(a | b)
-            jac = (len(a & b) / union) if union else 0.0
-            if jac >= threshold:
+            denom = min(len(a), len(b)) if containment else len(a | b)
+            score = (len(a & b) / denom) if denom else 0.0
+            if score >= threshold:
                 out.add((i, j))
     return out
 
@@ -63,8 +65,13 @@ def test_exact_jaccard_variants_match_brute_force(spark, texts):
         (r.id_a, r.id_b)
         for r in jaccard_near_dup_pairs_prefix(df, "doc_id", "text", 0.7).collect()
     }
+    got_containment = {
+        (r.id_a, r.id_b)
+        for r in containment_near_dup_pairs(df, "doc_id", "text", 0.5).collect()
+    }
     assert got_postings == expect
     assert got_prefix == expect
+    assert got_containment == _brute_force(texts, threshold=0.5, containment=True)
 
 
 @given(_corpus())

@@ -658,53 +658,50 @@ def test_skew_stats_and_salt_recommendation(spark):
     assert recommend_salt(uniform, ["k"], target_share=0.05) == 1
 
 
-def test_cap_key_fanout_drops_hub_keys_and_warns(spark, caplog):
-    """The postings-self-join fan-out guard: a hub key past max_df is
-    anti-joined out (warning fired with the drop count), under-cap
-    keys pass through untouched, max_df=None opts out."""
+def test_postings_pairs_caps_hub_keys_and_warns(spark, caplog):
+    """The capped postings self-join: a hub key past max_df is dropped
+    whole (warning fired with the drop count), a key at the cap is
+    kept, max_df=None opts out silently, ``_df`` is each kept key's
+    fan-out, and carried windows see only the kept postings."""
     import logging
 
+    from pyspark.sql.window import Window
+
     from aws_glue_jobs_incremental_database_etl_spark.operators.skew import (
-        cap_key_fanout,
+        postings_pairs,
     )
 
-    # key 7 is the hub: 30 items; keys 1..5 hold 3 items each
+    # key 7 is the hub: 30 items; keys 1..5 hold items 0..2 each, so
+    # items 0..2 sit in 6 keys before the cap and 5 after it
     rows = [(7, i) for i in range(30)] + [
         (k, i) for k in range(1, 6) for i in range(3)
     ]
     df = spark.createDataFrame(rows, "k long, item long")
+    n_keys = F.count(F.lit(1)).over(Window.partitionBy("item")).alias("n")
     with caplog.at_level(logging.WARNING):
-        capped = cap_key_fanout(df, "k", max_df=10, what="unit-test")
-        out = capped.collect()
+        pairs = postings_pairs(df, "k", "item", 10, "unit-test", carry=(n_keys,))
+        out = pairs.collect()
+    assert pairs.columns == ["k", "_df", "item_a", "n_a", "item_b", "n_b"]
     assert {r.k for r in out} == {1, 2, 3, 4, 5}
-    assert len(out) == 15
+    assert len(out) == 15  # 3 pairs per kept key
+    assert all(r.item_a < r.item_b for r in out)
+    assert {r.k: r._df for r in out} == {k: 3 for k in range(1, 6)}
+    assert {(r.n_a, r.n_b) for r in out} == {(5, 5)}
     assert any(
         "dropped 1 over-cap unit-test keys" in r.message for r in caplog.records
     )
-    # broadcast anti-join — the postings frame is never re-shuffled
-    plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    # the merge hint holds: AQE never broadcasts the self-join, even
+    # when the runtime size is tiny
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan
 
     caplog.clear()
     with caplog.at_level(logging.WARNING):
-        assert cap_key_fanout(df, "k", max_df=None).count() == 45
-        assert cap_key_fanout(df, "k", max_df=30).count() == 45  # at cap: keep
+        uncapped = postings_pairs(df, "k", "item", None, "unit-test").collect()
+        at_cap = postings_pairs(df, "k", "item", 30, "unit-test").count()
     assert not caplog.records
-
-    # return_counts shares the cap's count-by-key with the caller
-    # (VERDICT r8 #6): counts cover the KEPT keys only, with the
-    # same values a post-cap count-by-key would produce
-    kept, counts = cap_key_fanout(
-        df, "k", max_df=10, what="unit-test", return_counts=True
-    )
-    got = {r.k: r._df for r in counts.collect()}
-    assert got == {k: 3 for k in range(1, 6)}
-    assert kept.count() == 15
-    kept_n, counts_n = cap_key_fanout(
-        df, "k", max_df=None, return_counts=True
-    )
-    assert kept_n.count() == 45
-    assert {r.k: r._df for r in counts_n.collect()}[7] == 30
+    assert len(uncapped) == at_cap == 30 * 29 // 2 + 15
+    assert {r.k: r._df for r in uncapped}[7] == 30
 
 
 def test_repetition_signals_known_values(spark):

@@ -12,6 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from aws_glue_jobs_incremental_database_etl_spark import registry
+from aws_glue_jobs_incremental_database_etl_spark.registry.wave2 import (
+    _RECURSIVE_DECAY_SQL,
+)
 
 
 def test_argmax_unique_selector_deterministic(spark, sf_dir):
@@ -70,7 +73,7 @@ def test_recursive_decay_small_case(spark):
     df.createOrReplaceTempView("orders")
     out = {
         r["o_custkey"]: r
-        for r in spark.sql(registry._RECURSIVE_DECAY_SQL).collect()
+        for r in spark.sql(_RECURSIVE_DECAY_SQL).collect()
     }
     # cents: 10000 -> floor(10000/2) + 4000 = 9000
     assert out[1]["n_orders"] == 2 and out[1]["final_balance_cents"] == 9000
