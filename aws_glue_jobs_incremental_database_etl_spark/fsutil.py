@@ -31,6 +31,19 @@ def join_path(base: str, *parts: str) -> str:
     return out
 
 
+def dir_bytes(path: str) -> int:
+    """Total size of the data files under the local directory ``path``,
+    at any depth (a directory-style ``name.parquet/part-*`` table counts
+    its part files); ``.``/``_`` files (checksums, ``_SUCCESS``) are
+    skipped.  0 for a missing directory."""
+    total = 0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if not f.startswith((".", "_")):
+                total += os.path.getsize(os.path.join(root, f))
+    return total
+
+
 class LocalFS:
     """``os``/``shutil``-backed filesystem for scheme-less local
     paths — no JVM round-trips on the (default) local fast path."""

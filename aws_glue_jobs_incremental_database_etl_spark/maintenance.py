@@ -28,16 +28,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .fsutil import dir_bytes
 from .sinks import SUPPORTED_FORMATS
-
-
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith((".", "_")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
 
 
 def _data_file_count(path: str) -> int:
@@ -93,7 +85,7 @@ def compact_partitioned_table(
     cluster = list(cluster_by or [])
     zorder = list(zorder_by or [])
 
-    in_bytes = _dir_bytes(path)
+    in_bytes = dir_bytes(path)
     files_before = _data_file_count(path)
     n_out = max(1, math.ceil(in_bytes / target_file_bytes))
 

@@ -42,6 +42,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .materialize import cached
 from .sinks import SUPPORTED_FORMATS
 
 
@@ -274,116 +275,113 @@ def merge_upsert(
                 "latest-wins order"
             )
         collapsed = updates
-    collapsed = collapsed.persist()
+    with cached(collapsed) as collapsed:
+        if delete_col is not None:
+            is_del = F.coalesce(F.col(delete_col).cast("boolean"), F.lit(False))
+            inserts = collapsed.filter(~is_del).drop(delete_col)
+            del_keys = collapsed.filter(is_del).select(*keys)
+        else:
+            inserts = collapsed
+            del_keys = None
+        all_keys = collapsed.select(*keys)
 
-    if delete_col is not None:
-        is_del = F.coalesce(F.col(delete_col).cast("boolean"), F.lit(False))
-        inserts = collapsed.filter(~is_del).drop(delete_col)
-        del_keys = collapsed.filter(is_del).select(*keys)
-    else:
-        inserts = collapsed
-        del_keys = None
-    all_keys = collapsed.select(*keys)
+        target_exists = os.path.exists(path)
+        obs = Observation()
+        deleted = 0
 
-    target_exists = os.path.exists(path)
-    obs = Observation()
-    deleted = 0
+        if not target_exists:
+            out = inserts.observe(obs, F.count(F.lit(1)).alias("n"))
+            writer = out.write.mode("overwrite").format(fmt)
+            if spec:
+                writer = writer.partitionBy(*spec)
+            writer.save(path)
+            return {
+                "rows_written": int(obs.get["n"]),
+                "rows_deleted": 0,
+                "partitions_rewritten": 0,
+            }
 
-    if not target_exists:
-        out = inserts.observe(obs, F.count(F.lit(1)).alias("n"))
-        writer = out.write.mode("overwrite").format(fmt)
+        # ---- 2. partition-pruned read of the touched slice ----------------
+        reader = spark.read.format(fmt)
+        if fmt == "csv":
+            reader = reader.option("header", "true").option("inferSchema", "true")
+        target = reader.load(path)
+        affected: list = []
+        if spec:
+            affected = collapsed.select(*spec).distinct().collect()
+            if len(affected) > max_affected_partitions:
+                raise ValueError(
+                    f"batch touches {len(affected)} partitions "
+                    f"(> max_affected_partitions={max_affected_partitions}); "
+                    "split the batch or raise the cap"
+                )
+            cond = reduce(
+                lambda a, b: a | b,
+                [
+                    reduce(
+                        lambda a, b: a & b,
+                        [F.col(k).eqNullSafe(F.lit(row[k])) for k in spec],
+                    )
+                    for row in affected
+                ],
+            )
+            target = target.filter(cond)
+
+        # ---- 3. merge ------------------------------------------------------
+        kept = target.join(all_keys, on=keys, how="left_anti")
+        if del_keys is not None:
+            deleted = target.join(del_keys, on=keys, how="left_semi").count()
+        merged = kept.unionByName(inserts, allowMissingColumns=True).observe(
+            obs, F.count(F.lit(1)).alias("n")
+        )
+
+        # ---- 4. staged write + per-partition swap --------------------------
+        stamp = int(time.time() * 1000)
+        staging = f"{path}.__merge_{stamp}"
+        writer = merged.write.mode("overwrite").format(fmt)
         if spec:
             writer = writer.partitionBy(*spec)
-        writer.save(path)
-        collapsed.unpersist()
+        writer.save(staging)
+
+        def _partdir(base: str, row) -> str:
+            parts = []
+            for k in spec:
+                v = "__HIVE_DEFAULT_PARTITION__" if row[k] is None else str(row[k])
+                if "/" in v or "=" in v:
+                    # Spark escapes such values in directory names
+                    # (%2F/%3D); rather than replicate the escaping table,
+                    # refuse — partition columns with path metacharacters
+                    # are a layout smell anyway
+                    raise ValueError(
+                        f"partition value {v!r} for {k!r} contains path "
+                        "metacharacters; cast/sanitize the partition column "
+                        "before merging"
+                    )
+                parts.append(f"{k}={v}")
+            return os.path.join(base, *parts)
+
+        trash = f"{path}.__merge_trash_{stamp}"
+        if spec:
+            os.makedirs(trash, exist_ok=True)
+            for i, row in enumerate(affected):
+                live, staged = _partdir(path, row), _partdir(staging, row)
+                if os.path.exists(live):
+                    os.rename(live, os.path.join(trash, str(i)))
+                if os.path.exists(staged):
+                    os.makedirs(os.path.dirname(live), exist_ok=True)
+                    os.rename(staged, live)
+            shutil.rmtree(staging, ignore_errors=True)
+        else:
+            os.rename(path, trash)
+            try:
+                os.rename(staging, path)
+            except Exception:
+                os.rename(trash, path)
+                raise
+        shutil.rmtree(trash, ignore_errors=True)
+
         return {
             "rows_written": int(obs.get["n"]),
-            "rows_deleted": 0,
-            "partitions_rewritten": 0,
+            "rows_deleted": int(deleted),
+            "partitions_rewritten": len(affected) if spec else 1,
         }
-
-    # ---- 2. partition-pruned read of the touched slice ----------------
-    reader = spark.read.format(fmt)
-    if fmt == "csv":
-        reader = reader.option("header", "true").option("inferSchema", "true")
-    target = reader.load(path)
-    affected: list = []
-    if spec:
-        affected = collapsed.select(*spec).distinct().collect()
-        if len(affected) > max_affected_partitions:
-            raise ValueError(
-                f"batch touches {len(affected)} partitions "
-                f"(> max_affected_partitions={max_affected_partitions}); "
-                "split the batch or raise the cap"
-            )
-        cond = reduce(
-            lambda a, b: a | b,
-            [
-                reduce(
-                    lambda a, b: a & b,
-                    [F.col(k).eqNullSafe(F.lit(row[k])) for k in spec],
-                )
-                for row in affected
-            ],
-        )
-        target = target.filter(cond)
-
-    # ---- 3. merge ------------------------------------------------------
-    kept = target.join(all_keys, on=keys, how="left_anti")
-    if del_keys is not None:
-        deleted = target.join(del_keys, on=keys, how="left_semi").count()
-    merged = kept.unionByName(inserts, allowMissingColumns=True).observe(
-        obs, F.count(F.lit(1)).alias("n")
-    )
-
-    # ---- 4. staged write + per-partition swap --------------------------
-    stamp = int(time.time() * 1000)
-    staging = f"{path}.__merge_{stamp}"
-    writer = merged.write.mode("overwrite").format(fmt)
-    if spec:
-        writer = writer.partitionBy(*spec)
-    writer.save(staging)
-
-    def _partdir(base: str, row) -> str:
-        parts = []
-        for k in spec:
-            v = "__HIVE_DEFAULT_PARTITION__" if row[k] is None else str(row[k])
-            if "/" in v or "=" in v:
-                # Spark escapes such values in directory names
-                # (%2F/%3D); rather than replicate the escaping table,
-                # refuse — partition columns with path metacharacters
-                # are a layout smell anyway
-                raise ValueError(
-                    f"partition value {v!r} for {k!r} contains path "
-                    "metacharacters; cast/sanitize the partition column "
-                    "before merging"
-                )
-            parts.append(f"{k}={v}")
-        return os.path.join(base, *parts)
-
-    trash = f"{path}.__merge_trash_{stamp}"
-    if spec:
-        os.makedirs(trash, exist_ok=True)
-        for i, row in enumerate(affected):
-            live, staged = _partdir(path, row), _partdir(staging, row)
-            if os.path.exists(live):
-                os.rename(live, os.path.join(trash, str(i)))
-            if os.path.exists(staged):
-                os.makedirs(os.path.dirname(live), exist_ok=True)
-                os.rename(staged, live)
-        shutil.rmtree(staging, ignore_errors=True)
-    else:
-        os.rename(path, trash)
-        try:
-            os.rename(staging, path)
-        except Exception:
-            os.rename(trash, path)
-            raise
-    shutil.rmtree(trash, ignore_errors=True)
-
-    collapsed.unpersist()
-    return {
-        "rows_written": int(obs.get["n"]),
-        "rows_deleted": int(deleted),
-        "partitions_rewritten": len(affected) if spec else 1,
-    }

@@ -12,16 +12,9 @@ label starts as its own id; every round each node takes the minimum
 label in its closed neighborhood; converged when no label changes.
 Rounds needed = graph diameter (near-dup clusters are tiny and
 dense, so 2-4 rounds in practice); each round is one shuffle keyed on
-node id.  ``localCheckpoint`` truncates the growing lineage each
-round — without it the plan doubles per iteration and Catalyst
-analysis dominates after ~10 rounds.  Every truncation in this
-package stores its blocks DISK_ONLY: the checkpointed frames are
-corpus-scaled (label maps, edge lists), and the default
-MEMORY_AND_DISK level parks them in the storageFraction-protected
-pool where they starve join/aggregate execution memory at scale
-(SparkOutOfMemoryError UNABLE_TO_ACQUIRE on the sf10 probe, round
-11); disk blocks ride the OS page cache at near-RAM speed without
-Spark-side accounting.
+node id.  ``materialize.checkpoint`` truncates the growing lineage
+each round — without it the plan doubles per iteration and Catalyst
+analysis dominates after ~10 rounds.
 
 Scale notes (100 TB corpora): ``connected_components`` is the simple
 propagation variant, O(rounds × |edges|) shuffle volume, the right
@@ -34,9 +27,12 @@ DataFrame primitives, O(log n) rounds on any graph shape.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..materialize import cached, checkpoint
 
 
 def connected_components(
@@ -57,7 +53,7 @@ def connected_components(
     # and every plan reference re-runs it) and materialize it ONCE:
     # both the self-loop derivation and the closed-neighborhood union
     # below read it.
-    sym = (
+    sym = checkpoint(
         edges.select(
             F.explode(
                 F.array(
@@ -72,7 +68,6 @@ def connected_components(
         )
         .select("_e.u", "_e.v")
         .distinct()
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     # Self-loops folded into the edge stream make the per-round update
     # a SINGLE join: min over the closed neighborhood {u} ∪ N(u) comes
@@ -93,45 +88,42 @@ def connected_components(
     # and the sort (the pagerank e_deg convention) — only the O(|V|)
     # label frame moves per round.  Before this, every round
     # re-shuffled and re-sorted the full closed-neighborhood edge list.
-    closed = (
+    with cached(
         sym.unionByName(loops)
         .repartition(F.col("v"))
         .sortWithinPartitions("v")
-        .persist()
-    )
-    labels = loops.select(F.col("u").alias("id"), F.col("u").alias("component"))
-    for _ in range(max_iterations):
-        new_labels = (
-            closed.join(labels.hint("merge"), closed.v == labels.id)
-            .groupBy("u")
-            .agg(
-                F.min("component").alias("component"),
-                # old label = the component riding the self-loop row
-                # (exactly one per u); change flag computed IN the
-                # update pass so convergence is a cheap scan of the
-                # round output, not a second join
-                F.min(F.when(F.col("v") == F.col("u"), F.col("component"))).alias(
-                    "_old"
-                ),
+    ) as closed:
+        labels = loops.select(F.col("u").alias("id"), F.col("u").alias("component"))
+        for _ in range(max_iterations):
+            new_labels = checkpoint(
+                closed.join(labels.hint("merge"), closed.v == labels.id)
+                .groupBy("u")
+                .agg(
+                    F.min("component").alias("component"),
+                    # old label = the component riding the self-loop row
+                    # (exactly one per u); change flag computed IN the
+                    # update pass so convergence is a cheap scan of the
+                    # round output, not a second join
+                    F.min(F.when(F.col("v") == F.col("u"), F.col("component"))).alias(
+                        "_old"
+                    ),
+                )
+                .select(
+                    F.col("u").alias("id"),
+                    "component",
+                    (F.col("component") < F.col("_old")).alias("_chg"),
+                )
+                # lazy: the convergence aggregate below is the single
+                # action that both materializes the round's blocks and
+                # answers "did anything change" — one job per round where
+                # the eager-checkpoint-then-count shape paid two
             )
-            .select(
-                F.col("u").alias("id"),
-                "component",
-                (F.col("component") < F.col("_old")).alias("_chg"),
-            )
-            # lazy: the convergence aggregate below is the single
-            # action that both materializes the round's blocks and
-            # answers "did anything change" — one job per round where
-            # the eager-checkpoint-then-count shape paid two
-            .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-        )
-        changed = new_labels.agg(
-            F.max(F.when(F.col("_chg"), 1).otherwise(0)).alias("c")
-        ).first()["c"]
-        labels = new_labels.select("id", "component")
-        if not changed:
-            break
-    closed.unpersist()
+            changed = new_labels.agg(
+                F.max(F.when(F.col("_chg"), 1).otherwise(0)).alias("c")
+            ).first()["c"]
+            labels = new_labels.select("id", "component")
+            if not changed:
+                break
     return labels
 
 
@@ -174,24 +166,24 @@ def connected_components_star(
       reconnects those smaller-or-equal neighbors (and itself) to m.
 
     Both phases are partial-aggregated groupBy + join — no windows,
-    no driver state; ``localCheckpoint`` truncates lineage per round.
+    no driver state; ``checkpoint`` truncates lineage per round.
     Converged when the edge multiset stops changing; the final graph
     is a forest of stars pointing at each component's minimum id.
     """
-    e = (
+    e = checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .distinct(),
+        eager=True,
     )
-    all_nodes = (
+    all_nodes = checkpoint(
         e.select(F.col("u").alias("id"))
         .unionByName(e.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .distinct(),
+        eager=True,
     )
 
     def _bidir(g: DataFrame) -> DataFrame:
@@ -232,11 +224,11 @@ def connected_components_star(
             )
             .select("p.u", "p.v")
         )
-        new_e = (
+        new_e = checkpoint(
             large.unionByName(small)
             .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+            .distinct(),
+            eager=True,
         )
         changed = (
             new_e.exceptAll(e).limit(1).count()
@@ -276,7 +268,7 @@ def pagerank(
     so the O(|E|) side never re-shuffles: per-round exchange volume is
     O(|V|) (the rank vector), not O(|E|) (the dominant term of the
     naive MapReduce formulation).  The node list is pre-partitioned on
-    ``id`` the same way for the rank rebuild join.  ``localCheckpoint``
+    ``id`` the same way for the rank rebuild join.  ``checkpoint``
     every ``checkpoint_every`` rounds truncates the growing plan
     lineage, exactly as ``connected_components`` does.  Node ids may
     be any orderable type; rank sums are doubles (round on output when
@@ -301,64 +293,64 @@ def pagerank(
         .unionByName(e.select(F.col("v").alias("id")))
         .distinct()
     )
-    if teleport is not None:
-        seeds = teleport.select(F.col(teleport_id).alias("id")).distinct()
-        n_seeds = seeds.join(nodes, "id").count()
-        if n_seeds == 0:
-            raise ValueError("no teleport seed appears in the graph")
-        # materialize the seed-flagged node list ONCE — every
-        # iteration's rank rebuild reads it
-        nodes = (
-            nodes.join(seeds.withColumn("_s", F.lit(1)).hint("merge"), "id", "left")
-            .select(
-                "id",
-                F.when(F.col("_s") == 1, F.lit(1.0 / n_seeds))
-                .otherwise(F.lit(0.0))
-                .alias("_t"),
+    with ExitStack() as scope:
+        if teleport is not None:
+            seeds = teleport.select(F.col(teleport_id).alias("id")).distinct()
+            n_seeds = seeds.join(nodes, "id").count()
+            if n_seeds == 0:
+                raise ValueError("no teleport seed appears in the graph")
+            # materialize the seed-flagged node list ONCE — every
+            # iteration's rank rebuild reads it
+            nodes = checkpoint(
+                nodes.join(seeds.withColumn("_s", F.lit(1)).hint("merge"), "id", "left")
+                .select(
+                    "id",
+                    F.when(F.col("_s") == 1, F.lit(1.0 / n_seeds))
+                    .otherwise(F.lit(0.0))
+                    .alias("_t"),
+                )
+                .repartition("id"),
+                eager=True,
             )
-            .repartition("id")
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+            base_col = F.lit(1.0 - damping) * F.col("_t")
+            ranks = nodes.select("id", F.col("_t").alias("rank"))
+        else:
+            nodes = scope.enter_context(cached(nodes.repartition("id")))
+            n = nodes.count()  # scalar: the teleport term is a literal
+            base_col = F.lit((1.0 - damping) / n)
+            ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+        outdeg = e.groupBy("u").agg(F.count(F.lit(1)).alias("_deg"))
+        e_deg = scope.enter_context(
+            cached(e.join(outdeg.hint("merge"), "u").repartition("u"))
         )
-        base_col = F.lit(1.0 - damping) * F.col("_t")
-        ranks = nodes.select("id", F.col("_t").alias("rank"))
-    else:
-        nodes = nodes.repartition("id").persist()
-        n = nodes.count()  # scalar: the teleport term is a literal
-        base_col = F.lit((1.0 - damping) / n)
-        ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    outdeg = e.groupBy("u").agg(F.count(F.lit(1)).alias("_deg"))
-    e_deg = e.join(outdeg.hint("merge"), "u").repartition("u").persist()
 
-    for i in range(iterations):
-        contribs = (
-            e_deg.join(ranks.hint("merge"), e_deg.u == ranks.id)
-            .select("v", (F.col("rank") / F.col("_deg")).alias("_c"))
-            .groupBy("v")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        ranks = (
-            nodes.join(contribs.hint("merge"), nodes.id == contribs.v, "left")
-            .select(
-                "id",
-                (
-                    base_col
-                    + F.lit(damping) * F.coalesce("_in", F.lit(0.0))
-                ).alias("rank"),
+        for i in range(iterations):
+            contribs = (
+                e_deg.join(ranks.hint("merge"), e_deg.u == ranks.id)
+                .select("v", (F.col("rank") / F.col("_deg")).alias("_c"))
+                .groupBy("v")
+                .agg(F.sum("_c").alias("_in"))
             )
-        )
-        if (
-            checkpoint_every
-            and (i + 1) % checkpoint_every == 0
-            and i + 1 < iterations
-        ):
-            ranks = ranks.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
-    # materialize the result, then release the per-call caches — a
-    # long-lived session calling pagerank repeatedly must not pin a
-    # fresh copy of the edge list in storage memory per call (same
-    # convention as connected_components)
-    ranks = ranks.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    nodes.unpersist()
-    e_deg.unpersist()
+            ranks = (
+                nodes.join(contribs.hint("merge"), nodes.id == contribs.v, "left")
+                .select(
+                    "id",
+                    (
+                        base_col
+                        + F.lit(damping) * F.coalesce("_in", F.lit(0.0))
+                    ).alias("rank"),
+                )
+            )
+            if (
+                checkpoint_every
+                and (i + 1) % checkpoint_every == 0
+                and i + 1 < iterations
+            ):
+                ranks = checkpoint(ranks, eager=True)
+        # materialize the result before the scope releases the per-call
+        # caches — a long-lived session calling pagerank repeatedly must
+        # not pin a fresh copy of the edge list per call
+        ranks = checkpoint(ranks, eager=True)
     return ranks
 
 
@@ -392,24 +384,24 @@ def local_clustering(
     # deg is read three times (both orientation sides + the output
     # join) and e twice — uncheckpointed, each reference would replay
     # the caller's edge construction (often itself a self-join)
-    e = (
+    e = checkpoint(
         edges.filter(F.col(src) != F.col(dst))
         .select(
             F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
         )
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .distinct(),
+        eager=True,
     )
-    deg = (
+    deg = checkpoint(
         e.select(F.col("a").alias("id"))
         .unionByName(e.select(F.col("b").alias("id")))
         .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .agg(F.count(F.lit(1)).alias("degree")),
+        eager=True,
     )
     # orient a→b iff (deg[a], a) < (deg[b], b)
     da, db = deg.alias("da"), deg.alias("db")
-    o = (
+    with cached(
         e.join(da.hint("merge"), F.col("a") == F.col("da.id"))
         .join(db.hint("merge"), F.col("b") == F.col("db.id"))
         .select(
@@ -434,62 +426,60 @@ def local_clustering(
             .otherwise(F.col("a"))
             .alias("hi"),
         )
-        .persist()
-    )
-    # wedges centered at the apex: x→y, x→z with y < z in the SAME
-    # (degree, id) order the orientation used — o is a DAG, so (y, z)
-    # ordered pairs double-count each wedge unless one side is fixed;
-    # plain column comparison suffices because hi ids at equal rank
-    # sort by id and the closing edge is looked up both ways below.
-    w1, w2 = o.alias("w1"), o.alias("w2")
-    wedges = w1.join(
-        w2.hint("merge"),
-        (F.col("w1.lo") == F.col("w2.lo"))
-        & (F.col("w1.hi") < F.col("w2.hi")),
-    ).select(
-        F.col("w1.lo").alias("x"),
-        F.col("w1.hi").alias("y"),
-        F.col("w2.hi").alias("z"),
-    )
-    # closing-edge lookup: wedges order (y, z) by id, the oriented
-    # edge list by (degree, id) — canonicalize BOTH to (min-id,
-    # max-id) so the probe is a pure equi-join (an OR of the two
-    # orientations would force a nested-loop join)
-    closing = o.select(
-        F.least("lo", "hi").alias("p"), F.greatest("lo", "hi").alias("q")
-    )
-    tri = wedges.join(
-        closing.hint("merge"),
-        (F.col("y") == F.col("p")) & (F.col("z") == F.col("q")),
-    ).select("x", "y", "z")
-    per_node = (
-        tri.select(F.explode(F.array("x", "y", "z")).alias("id"))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
-    out = (
-        deg.join(per_node.hint("merge"), "id", "left")
-        .select(
-            "id",
-            "degree",
-            F.coalesce("n_triangles", F.lit(0))
-            .cast("bigint")
-            .alias("n_triangles"),
-            F.when(
-                F.col("degree") >= 2,
-                F.round(
-                    2.0
-                    * F.coalesce("n_triangles", F.lit(0))
-                    / (F.col("degree") * (F.col("degree") - 1.0)),
-                    9,
-                ),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("coefficient"),
+    ) as o:
+        # wedges centered at the apex: x→y, x→z with y < z in the SAME
+        # (degree, id) order the orientation used — o is a DAG, so (y, z)
+        # ordered pairs double-count each wedge unless one side is fixed;
+        # plain column comparison suffices because hi ids at equal rank
+        # sort by id and the closing edge is looked up both ways below.
+        w1, w2 = o.alias("w1"), o.alias("w2")
+        wedges = w1.join(
+            w2.hint("merge"),
+            (F.col("w1.lo") == F.col("w2.lo"))
+            & (F.col("w1.hi") < F.col("w2.hi")),
+        ).select(
+            F.col("w1.lo").alias("x"),
+            F.col("w1.hi").alias("y"),
+            F.col("w2.hi").alias("z"),
         )
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    )
-    o.unpersist()
+        # closing-edge lookup: wedges order (y, z) by id, the oriented
+        # edge list by (degree, id) — canonicalize BOTH to (min-id,
+        # max-id) so the probe is a pure equi-join (an OR of the two
+        # orientations would force a nested-loop join)
+        closing = o.select(
+            F.least("lo", "hi").alias("p"), F.greatest("lo", "hi").alias("q")
+        )
+        tri = wedges.join(
+            closing.hint("merge"),
+            (F.col("y") == F.col("p")) & (F.col("z") == F.col("q")),
+        ).select("x", "y", "z")
+        per_node = (
+            tri.select(F.explode(F.array("x", "y", "z")).alias("id"))
+            .groupBy("id")
+            .agg(F.count(F.lit(1)).alias("n_triangles"))
+        )
+        out = checkpoint(
+            deg.join(per_node.hint("merge"), "id", "left")
+            .select(
+                "id",
+                "degree",
+                F.coalesce("n_triangles", F.lit(0))
+                .cast("bigint")
+                .alias("n_triangles"),
+                F.when(
+                    F.col("degree") >= 2,
+                    F.round(
+                        2.0
+                        * F.coalesce("n_triangles", F.lit(0))
+                        / (F.col("degree") * (F.col("degree") - 1.0)),
+                        9,
+                    ),
+                )
+                .otherwise(F.lit(0.0))
+                .alias("coefficient"),
+            ),
+            eager=True,
+        )
     return out
 
 
@@ -510,7 +500,7 @@ def label_propagation(
     SQL twin.  Per round: one join of the symmetric edge list against
     current labels + one (node, label) count + one per-node argmax —
     all partial-aggregated, shuffle volume O(|E|) per round like
-    pagerank.  ``localCheckpoint`` after each round truncates lineage.
+    pagerank.  ``checkpoint`` after each round truncates lineage.
 
     Note sync LPA can oscillate 2-cycles on bipartite structure; that
     is inherent to the synchronous schedule and does not affect
@@ -520,7 +510,7 @@ def label_propagation(
 
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    sym = (
+    with cached(
         edges.filter(F.col(src) != F.col(dst))
         .select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(
@@ -529,28 +519,26 @@ def label_propagation(
             )
         )
         .distinct()
-        .persist()
-    )
-    labels = sym.select(F.col("u").alias("id")).distinct().withColumn(
-        "label", F.col("id")
-    )
-    rank_w = Window.partitionBy("u").orderBy(
-        F.col("_n").desc(), F.col("label").asc()
-    )
-    for _ in range(iterations):
-        cnt = (
-            sym.join(labels.hint("merge"), sym.v == labels.id)
-            .groupBy("u", "label")
-            .agg(F.count(F.lit(1)).alias("_n"))
+    ) as sym:
+        labels = sym.select(F.col("u").alias("id")).distinct().withColumn(
+            "label", F.col("id")
         )
-        labels = (
-            cnt.withColumn("_rn", F.row_number().over(rank_w))
-            .filter(F.col("_rn") == 1)
-            .select(F.col("u").alias("id"), "label")
-            .localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
+        rank_w = Window.partitionBy("u").orderBy(
+            F.col("_n").desc(), F.col("label").asc()
         )
-    labels = labels.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    sym.unpersist()
+        for _ in range(iterations):
+            cnt = (
+                sym.join(labels.hint("merge"), sym.v == labels.id)
+                .groupBy("u", "label")
+                .agg(F.count(F.lit(1)).alias("_n"))
+            )
+            labels = checkpoint(
+                cnt.withColumn("_rn", F.row_number().over(rank_w))
+                .filter(F.col("_rn") == 1)
+                .select(F.col("u").alias("id"), "label"),
+                eager=True,
+            )
+        labels = checkpoint(labels, eager=True)
     return labels
 
 
@@ -575,11 +563,11 @@ def bfs_distances(
     exactly "shortest distance ≤ r", so a fixed round count has an
     exact unrolled SQL twin.  Nodes never reached within
     ``max_hops`` are absent from the output (no sentinel rows).
-    ``localCheckpoint`` per round truncates lineage.
+    ``checkpoint`` per round truncates lineage.
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
-    sym = (
+    with cached(
         edges.filter(F.col(src) != F.col(dst))
         .select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(
@@ -588,25 +576,23 @@ def bfs_distances(
             )
         )
         .distinct()
-        .persist()
-    )
-    dist = (
-        sources.select(F.col(id_col).alias("id"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("int"))
-    )
-    for _ in range(max_hops):
-        relaxed = (
-            sym.join(dist.hint("merge"), sym.v == dist.id)
-            .select(sym.u.alias("id"), (F.col("dist") + 1).alias("dist"))
-            .unionByName(dist)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
+    ) as sym:
+        dist = (
+            sources.select(F.col(id_col).alias("id"))
+            .distinct()
+            .withColumn("dist", F.lit(0).cast("int"))
         )
-        dist = relaxed
-    dist = dist.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    sym.unpersist()
+        for _ in range(max_hops):
+            relaxed = checkpoint(
+                sym.join(dist.hint("merge"), sym.v == dist.id)
+                .select(sym.u.alias("id"), (F.col("dist") + 1).alias("dist"))
+                .unionByName(dist)
+                .groupBy("id")
+                .agg(F.min("dist").alias("dist")),
+                eager=True,
+            )
+            dist = relaxed
+        dist = checkpoint(dist, eager=True)
     return dist
 
 
@@ -635,7 +621,7 @@ def kcore(
         raise ValueError("k must be >= 1")
     if peel_rounds < 1:
         raise ValueError("peel_rounds must be >= 1")
-    e = (
+    e = checkpoint(
         edges.filter(F.col(src) != F.col(dst))
         .select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(
@@ -643,17 +629,17 @@ def kcore(
                 F.col(dst).alias("u"), F.col(src).alias("v")
             )
         )
-        .distinct()
-        .localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
+        .distinct(),
+        eager=True,
     )
     deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
     for _ in range(peel_rounds):
         keep = deg.filter(F.col("degree") >= k).select("u")
-        e = (
+        e = checkpoint(
             e.join(keep.hint("merge"), "u")
             .join(keep.select(F.col("u").alias("v")).hint("merge"), "v")
-            .select("u", "v")
-            .localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
+            .select("u", "v"),
+            eager=True,
         )
         deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
     return deg.filter(F.col("degree") >= k).select(
@@ -750,13 +736,13 @@ def dbscan_from_pairs(
             f"{id_type.simpleString()} — hash or surrogate-key string "
             "ids first"
         )
-    sym = (
+    sym = checkpoint(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(
             pairs.select(F.col(dst).alias("u"), F.col(src).alias("v"))
         )
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .distinct(),
+        eager=True,
     )
     ncount = sym.groupBy("u").agg(F.count(F.lit(1)).alias("_n"))
     core = ncount.filter(F.col("_n") >= min_pts).select(

@@ -42,11 +42,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..materialize import checkpoint
 from .skew import postings_pairs
 
 
@@ -177,10 +177,10 @@ def minhash_near_dup_pairs(
     rows = num_hashes // bands
     # "sh" is the xxhash64'd shingle set: band join and exact-Jaccard
     # verify both run on 8-byte longs, never re-shuffling shingle text.
-    # persist(): the banded frame feeds BOTH sides of the self-join —
-    # without the cache Spark recomputes shingling + signatures per
-    # branch (measured 2-3× the whole query's cost).
-    sig = (
+    # Checkpointed: the banded frame feeds BOTH sides of the self-join —
+    # without it Spark recomputes shingling + signatures per branch
+    # (measured 2-3× the whole query's cost).
+    sig = checkpoint(
         _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")), "id")
         .withColumn("_toks", tokens_of(F.col("text")))
         .withColumn(
@@ -192,7 +192,6 @@ def minhash_near_dup_pairs(
         )
         .withColumn("mh", minhash_signature_hashed(F.col("sh"), num_hashes))
         .drop("text", "_toks")
-        .persist()
     )
     banded = sig.select(
         "id",
@@ -247,7 +246,7 @@ def _shared_shingle_counts(
     # sizes where the exact algorithm is even applicable).
     # Materialized: uncached, the isnotnull filter Catalyst infers for
     # the explode re-tokenizes each document.
-    sized = (
+    sized = checkpoint(
         _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")), "id")
         .select("id", tokens_of(F.col("text")).alias("_toks"))
         .select(
@@ -258,7 +257,6 @@ def _shared_shingle_counts(
             ).alias("sh"),
         )
         .withColumn("n_sh", F.size("sh"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     postings = sized.select("id", "n_sh", F.explode("sh").alias("shingle"))
     return (
@@ -361,7 +359,8 @@ def jaccard_near_dup_pairs_prefix(
     shingle → length-filtered self-join → pair dedup → verify join
     back to the signatures → exact Jaccard.
     """
-    sized = (
+    # consumed by the prefix index AND both verify joins
+    sized = checkpoint(
         _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")), "id")
         .select("id", tokens_of(F.col("text")).alias("_toks"))
         .select(
@@ -376,7 +375,6 @@ def jaccard_near_dup_pairs_prefix(
             ).alias("sh"),
         )
         .withColumn("n_sh", F.size("sh"))
-        .persist()  # consumed by the prefix index AND both verify joins
     )
     # prefix length |A| - ceil(τ|A|) + 1
     prefix_len = F.col("n_sh") - F.ceil(F.col("n_sh") * F.lit(float(threshold))).cast(
@@ -578,9 +576,9 @@ def simhash_near_dup_pairs(
     any pair within distance ≤ 3 shares at least one exact 16-bit
     chunk (pigeonhole), so candidates come from equality buckets —
     no all-pairs."""
-    # persist(): both self-join sides read the signatures; the cache
-    # halves the Pandas-UDF evaluations.
-    sig = (
+    # Checkpointed: both self-join sides read the signatures, so the
+    # Pandas UDF runs once per document.
+    sig = checkpoint(
         _spread(
             df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")), "id"
         )
@@ -594,7 +592,6 @@ def simhash_near_dup_pairs(
                 )
             ).alias("sig"),
         )
-        .persist()
     )
     chunks = sig.select(
         "id",
@@ -845,10 +842,10 @@ def semantic_dedup(
         assigned = assign_nearest_centroid_arrow(df, centroids, vec_col)
     else:
         assigned, _ = ivf_assign(df, n_clusters, vec_col, seed, max_iter)
-    # persist: the losers branch and the final anti join both consume
-    # this frame — without the cache the corpus scan + KMeans transform
-    # (the most expensive map stage) would run twice
-    assigned = assigned.persist()
+    # the losers branch and the final anti join both consume this frame
+    # — uncut, the corpus scan + KMeans transform (the most expensive
+    # map stage) would run twice
+    assigned = checkpoint(assigned)
 
     # loser ids keep the caller's id type (string doc ids are fine —
     # the min-id winner rule only needs a total order, which the

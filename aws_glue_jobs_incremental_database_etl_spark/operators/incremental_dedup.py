@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import json
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,6 +40,7 @@ from .dedup import (
 from ..fsutil import HadoopFS as _HadoopFS  # noqa: F401  (re-export)
 from ..fsutil import LocalFS as _LocalFS  # noqa: F401  (re-export)
 from ..fsutil import join_path as _join
+from ..materialize import cached, checkpoint
 
 
 def _fs_for(spark: SparkSession, path: str):
@@ -143,7 +143,7 @@ def _compact_index(spark: SparkSession, path: str) -> int:
     ``_load_snapshot``/``indexed_ids`` result pins, so compact only
     when no earlier-returned LAZY index frame is outstanding —
     ``dedup_batch`` survivors are safe (their losers side is
-    localCheckpoint-severed from the pinned files), raw snapshot
+    checkpoint-severed from the pinned files), raw snapshot
     frames must be materialized first.
 
     Returns the number of superseded entries (0 = nothing to do)."""
@@ -314,80 +314,79 @@ class MinHashIndex:
         """
         spark = batch_df.sparkSession
         _ensure_meta(_fs_for(spark, self.path), self.path, self._meta())
-        new_sig = self._signatures(batch_df, id_col, text_col).persist()
-        new_banded = self._banded(new_sig)
+        with cached(self._signatures(batch_df, id_col, text_col)) as new_sig:
+            new_banded = self._banded(new_sig)
 
-        index = self._load(spark)
-        if index is not None:
-            ref_banded = self._banded(index.select("id", "sh", "mh")).withColumn(
-                "is_old", F.lit(True)
-            )
-            all_banded = new_banded.withColumn("is_old", F.lit(False)).unionByName(
-                ref_banded
-            )
-        else:
-            all_banded = new_banded.withColumn("is_old", F.lit(False))
+            index = self._load(spark)
+            if index is not None:
+                ref_banded = self._banded(index.select("id", "sh", "mh")).withColumn(
+                    "is_old", F.lit(True)
+                )
+                all_banded = new_banded.withColumn("is_old", F.lit(False)).unionByName(
+                    ref_banded
+                )
+            else:
+                all_banded = new_banded.withColumn("is_old", F.lit(False))
 
-        a, b = new_banded.alias("a"), all_banded.alias("b")
-        cand = (
-            a.join(
-                b.hint("merge"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bsig") == F.col("b.bsig"))
-                & (F.col("a.id") != F.col("b.id"))
-                # dominators only: any old doc, or a smaller new id
-                & (F.col("b.is_old") | (F.col("b.id") < F.col("a.id"))),
+            a, b = new_banded.alias("a"), all_banded.alias("b")
+            cand = (
+                a.join(
+                    b.hint("merge"),
+                    (F.col("a.band") == F.col("b.band"))
+                    & (F.col("a.bsig") == F.col("b.bsig"))
+                    & (F.col("a.id") != F.col("b.id"))
+                    # dominators only: any old doc, or a smaller new id
+                    & (F.col("b.is_old") | (F.col("b.id") < F.col("a.id"))),
+                )
+                .select(
+                    F.col("a.id").alias("id"),
+                    F.col("a.sh").alias("sh_a"),
+                    F.col("b.sh").alias("sh_b"),
+                )
+                .dropDuplicates(["id", "sh_b"])
             )
-            .select(
-                F.col("a.id").alias("id"),
-                F.col("a.sh").alias("sh_a"),
-                F.col("b.sh").alias("sh_b"),
+            # Eager checkpoint BEFORE the index append below: it
+            # materializes losers — the survivors frame is returned lazily
+            # and must never observe the signatures this very call appends
+            # — AND severs its lineage from the pinned snapshot files, so
+            # a later compact()'s GC of those files cannot break a
+            # still-lazy survivors frame.  When the session has a RELIABLE
+            # checkpoint dir configured (sparkContext.setCheckpointDir —
+            # HDFS/object store on a real cluster), use checkpoint(): the
+            # blocks land on replicated storage and survive executor loss.
+            # Otherwise fall back to a local checkpoint, whose blocks are
+            # executor-local and NON-replicated: on a multi-executor
+            # cluster an executor loss makes a still-lazy survivors frame
+            # unrecoverable (job failure, never a wrong answer) — at the
+            # 100 TB design point, set a checkpoint dir.
+            losers = (
+                cand.withColumn("jaccard", ngram_jaccard(F.col("sh_a"), F.col("sh_b")))
+                .filter(F.col("jaccard") >= self.threshold)
+                .select("id")
+                .distinct()
             )
-            .dropDuplicates(["id", "sh_b"])
-        )
-        # Eager checkpoint BEFORE the index append below: it
-        # materializes losers — the survivors frame is returned lazily
-        # and must never observe the signatures this very call appends
-        # — AND severs its lineage from the pinned snapshot files, so
-        # a later compact()'s GC of those files cannot break a
-        # still-lazy survivors frame.  When the session has a RELIABLE
-        # checkpoint dir configured (sparkContext.setCheckpointDir —
-        # HDFS/object store on a real cluster), use checkpoint(): the
-        # blocks land on replicated storage and survive executor loss.
-        # Otherwise fall back to localCheckpoint(), whose blocks are
-        # executor-local and NON-replicated: on a multi-executor
-        # cluster an executor loss makes a still-lazy survivors frame
-        # unrecoverable (job failure, never a wrong answer) — at the
-        # 100 TB design point, set a checkpoint dir.
-        losers = (
-            cand.withColumn("jaccard", ngram_jaccard(F.col("sh_a"), F.col("sh_b")))
-            .filter(F.col("jaccard") >= self.threshold)
-            .select("id")
-            .distinct()
-        )
-        sc = batch_df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is not None:
-            losers = losers.checkpoint(eager=True)
-        else:
-            losers = losers.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
-        survivors = batch_df.join(
-            losers.withColumnRenamed("id", id_col), on=id_col, how="left_anti"
-        )
+            sc = batch_df.sparkSession.sparkContext
+            if sc.getCheckpointDir() is not None:
+                # reliable checkpoint, outside the local policy on purpose
+                losers = losers.checkpoint(eager=True)
+            else:
+                losers = checkpoint(losers, eager=True)
+            survivors = batch_df.join(
+                losers.withColumnRenamed("id", id_col), on=id_col, how="left_anti"
+            )
 
-        # append surviving signatures — but never re-append an id that
-        # is already indexed (at-least-once replays upstream)
-        to_index = new_sig.join(losers, on="id", how="left_anti")
-        if index is not None:
-            to_index = to_index.join(
-                index.select("id").hint("merge"), on="id", how="left_anti"
-            )
-        to_index.select("id", "sh", "mh").write.mode("append").parquet(self.path)
-        # the index append was new_sig's last consumer → drop its cache.
-        # losers is checkpointed: the survivors lineage reads its
-        # blocks, never the pinned snapshot files — so re-evaluation
-        # after the append (or after a compact() GC'd those files)
-        # still sees exactly the pre-append decision.
-        new_sig.unpersist()
+            # append surviving signatures — but never re-append an id that
+            # is already indexed (at-least-once replays upstream)
+            to_index = new_sig.join(losers, on="id", how="left_anti")
+            if index is not None:
+                to_index = to_index.join(
+                    index.select("id").hint("merge"), on="id", how="left_anti"
+                )
+            to_index.select("id", "sh", "mh").write.mode("append").parquet(self.path)
+        # losers is checkpointed: the survivors lineage reads its blocks,
+        # never new_sig or the pinned snapshot files — so re-evaluation
+        # after the append (or after a compact() GC'd those files) still
+        # sees exactly the pre-append decision.
         return survivors
 
 
@@ -484,58 +483,57 @@ class WinnowIndex:
         index double-counted ``shared`` and halved the threshold)."""
         spark = batch_df.sparkSession
         _ensure_meta(_fs_for(spark, self.path), self.path, self._meta())
-        new_fp = self._fps(batch_df, id_col, text_col).persist()
+        with cached(self._fps(batch_df, id_col, text_col)) as new_fp:
 
-        index = self._load(spark)
-        if index is not None:
-            ref = index.withColumn("is_old", F.lit(True))
-            all_fp = new_fp.withColumn("is_old", F.lit(False)).unionByName(
-                ref
-            )
-        else:
-            all_fp = new_fp.withColumn("is_old", F.lit(False))
+            index = self._load(spark)
+            if index is not None:
+                ref = index.withColumn("is_old", F.lit(True))
+                all_fp = new_fp.withColumn("is_old", F.lit(False)).unionByName(
+                    ref
+                )
+            else:
+                all_fp = new_fp.withColumn("is_old", F.lit(False))
 
-        a, b = new_fp.alias("a"), all_fp.alias("b")
-        shared = (
-            a.join(
-                b.hint("merge"),
-                (F.col("a.fp_hash") == F.col("b.fp_hash"))
-                & (F.col("a.id") != F.col("b.id"))
-                & (F.col("b.is_old") | (F.col("b.id") < F.col("a.id"))),
+            a, b = new_fp.alias("a"), all_fp.alias("b")
+            shared = (
+                a.join(
+                    b.hint("merge"),
+                    (F.col("a.fp_hash") == F.col("b.fp_hash"))
+                    & (F.col("a.id") != F.col("b.id"))
+                    & (F.col("b.is_old") | (F.col("b.id") < F.col("a.id"))),
+                )
+                .groupBy(
+                    F.col("a.id").alias("id"),
+                    F.col("b.id").alias("id_other"),
+                    F.col("a.n_fp").alias("n_a"),
+                    F.col("b.n_fp").alias("n_b"),
+                )
+                .agg(F.count(F.lit(1)).alias("shared"))
             )
-            .groupBy(
-                F.col("a.id").alias("id"),
-                F.col("b.id").alias("id_other"),
-                F.col("a.n_fp").alias("n_a"),
-                F.col("b.n_fp").alias("n_b"),
+            # eager checkpoint: materialize before the append below
+            # AND sever the survivors lineage from the pinned snapshot
+            # files so a later compact() GC cannot break it
+            losers = checkpoint(
+                shared.filter(
+                    F.col("shared")
+                    / F.least("n_a", "n_b").cast("double")
+                    >= self.threshold
+                )
+                .select("id")
+                .distinct(),
+                eager=True,
             )
-            .agg(F.count(F.lit(1)).alias("shared"))
-        )
-        # eager localCheckpoint: materialize before the append below
-        # AND sever the survivors lineage from the pinned snapshot
-        # files so a later compact() GC cannot break it
-        losers = (
-            shared.filter(
-                F.col("shared")
-                / F.least("n_a", "n_b").cast("double")
-                >= self.threshold
+            survivors = batch_df.join(
+                losers.withColumnRenamed("id", id_col), on=id_col, how="left_anti"
             )
-            .select("id")
-            .distinct()
-            .localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
-        )
-        survivors = batch_df.join(
-            losers.withColumnRenamed("id", id_col), on=id_col, how="left_anti"
-        )
-        to_index = new_fp.join(losers, on="id", how="left_anti")
-        if index is not None:
-            to_index = to_index.join(
-                index.select("id").distinct().hint("merge"),
-                on="id",
-                how="left_anti",
-            )
-        to_index.select("id", "fp_hash", "n_fp").write.mode(
-            "append"
-        ).parquet(self.path)
-        new_fp.unpersist()
+            to_index = new_fp.join(losers, on="id", how="left_anti")
+            if index is not None:
+                to_index = to_index.join(
+                    index.select("id").distinct().hint("merge"),
+                    on="id",
+                    how="left_anti",
+                )
+            to_index.select("id", "fp_hash", "n_fp").write.mode(
+                "append"
+            ).parquet(self.path)
         return survivors

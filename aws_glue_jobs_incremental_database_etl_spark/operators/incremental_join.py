@@ -36,9 +36,10 @@ import os
 import shutil
 import uuid
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..materialize import checkpoint
 
 
 def _heal(d: str) -> None:
@@ -121,12 +122,12 @@ class IncrementalJoinView:
         l_old = self._read(spark, self.left_dir, exclude_batch=bid)
         r_old = self._read(spark, self.right_dir, exclude_batch=bid)
         dl = (
-            left_delta.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+            checkpoint(left_delta, eager=True)
             if left_delta is not None
             else None
         )
         dr = (
-            right_delta.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+            checkpoint(right_delta, eager=True)
             if right_delta is not None
             else None
         )
@@ -208,12 +209,12 @@ class WeightedIncrementalJoinView(IncrementalJoinView):
         l_old = self._read(spark, self.left_dir, exclude_batch=bid)
         r_old = self._read(spark, self.right_dir, exclude_batch=bid)
         dl = (
-            left_delta.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+            checkpoint(left_delta, eager=True)
             if left_delta is not None
             else None
         )
         dr = (
-            right_delta.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+            checkpoint(right_delta, eager=True)
             if right_delta is not None
             else None
         )

@@ -22,12 +22,12 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine_similarity, dot_product
+from ..materialize import checkpoint
 
 
 def cosine_topk(
@@ -1072,11 +1072,11 @@ def top_principal_component(
     )
     n = float(df.count())
     a, b = xc.alias("a"), xc.alias("b")
-    cells = (
+    cells = checkpoint(
         a.join(b, F.col("a._id") == F.col("b._id"))
         .groupBy(F.col("a.i").alias("i"), F.col("b.i").alias("j"))
-        .agg((F.sum(F.col("a.c") * F.col("b.c")) / F.lit(n)).alias("val"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .agg((F.sum(F.col("a.c") * F.col("b.c")) / F.lit(n)).alias("val")),
+        eager=True,
     )
     spark = df.sparkSession
     v = spark.range(dim).select(
@@ -1084,14 +1084,14 @@ def top_principal_component(
         F.lit(1.0 / math.sqrt(dim)).alias("v"),
     )
     for _ in range(iterations):
-        w = (
+        w = checkpoint(
             cells.join(v, "j")
             .groupBy("i")
-            .agg(F.sum(F.col("val") * F.col("v")).alias("w"))
+            .agg(F.sum(F.col("val") * F.col("v")).alias("w")),
             # the normalizer and the next vector BOTH read w — without a
             # checkpoint the matvec subplan doubles per reference and
             # the plan grows 2^iterations (64 rows: materializing is free)
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+            eager=True,
         )
         norm = w.agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("_nv"))
         v = w.crossJoin(F.broadcast(norm)).select(
@@ -1138,12 +1138,15 @@ def lloyd_kmeans(
         raise ValueError("k must be >= 1")
     dim = df.select(F.size(vec_col)).first()[0]
     spark = df.sparkSession
-    x = df.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(
-            F.transform(F.col(vec_col), lambda v: v.cast("double"))
-        ).alias("j", "xj"),
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    x = checkpoint(
+        df.select(
+            F.col(id_col).alias("_id"),
+            F.posexplode(
+                F.transform(F.col(vec_col), lambda v: v.cast("double"))
+            ).alias("j", "xj"),
+        ),
+        eager=True,
+    )
     init = fixed_centroids(dim, k, seed)
     cent = spark.createDataFrame(
         [
@@ -1187,14 +1190,14 @@ def lloyd_kmeans(
         counts = assign.groupBy("c").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_members")
         )
-        cent = (
+        cent = checkpoint(
             cent.join(upd, ["c", "j"], "left")
             .select(
                 "c", "j", F.coalesce("new_cj", F.col("cj")).alias("cj")
-            )
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+            ),
+            eager=True,
         )
-        counts = counts.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        counts = checkpoint(counts, eager=True)
     return cent.join(counts, "c", "left").select(
         F.col("c").alias("cluster"),
         F.col("j").alias("dim_index"),
@@ -1243,11 +1246,11 @@ def principal_components(
     )
     n = float(df.count())
     a, b = xc.alias("a"), xc.alias("b")
-    cells = (
+    cells = checkpoint(
         a.join(b, F.col("a._id") == F.col("b._id"))
         .groupBy(F.col("a.i").alias("i"), F.col("b.i").alias("j"))
-        .agg((F.sum(F.col("a.c") * F.col("b.c")) / F.lit(n)).alias("val"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .agg((F.sum(F.col("a.c") * F.col("b.c")) / F.lit(n)).alias("val")),
+        eager=True,
     )
     outs = []
     for comp in range(k):
@@ -1256,11 +1259,11 @@ def principal_components(
             F.lit(1.0 / math.sqrt(dim)).alias("v"),
         )
         for _ in range(iterations):
-            w = (
+            w = checkpoint(
                 cells.join(v, "j")
                 .groupBy("i")
-                .agg(F.sum(F.col("val") * F.col("v")).alias("w"))
-                .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+                .agg(F.sum(F.col("val") * F.col("v")).alias("w")),
+                eager=True,
             )
             norm = w.agg(
                 F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("_nv")
@@ -1271,9 +1274,7 @@ def principal_components(
             )
         # quantize BEFORE the Rayleigh quotient and deflation: the
         # engine-identity contract for everything downstream
-        v = v.select("j", F.round("v", 6).alias("v")).localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
-        )
+        v = checkpoint(v.select("j", F.round("v", 6).alias("v")), eager=True)
         vi = v.select(F.col("j").alias("i"), F.col("v").alias("vi"))
         lam_row = (
             cells.join(vi, "i")
@@ -1294,7 +1295,7 @@ def principal_components(
             )
         )
         if comp + 1 < k:
-            cells = (
+            cells = checkpoint(
                 cells.join(vi, "i")
                 .join(v, "j")
                 .select(
@@ -1304,8 +1305,8 @@ def principal_components(
                         F.col("val")
                         - F.lit(lam) * F.col("vi") * F.col("v")
                     ).alias("val"),
-                )
-                .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+                ),
+                eager=True,
             )
     out = outs[0]
     for o in outs[1:]:

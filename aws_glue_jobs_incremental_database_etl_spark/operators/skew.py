@@ -26,10 +26,11 @@ from __future__ import annotations
 
 import logging
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..materialize import checkpoint
 
 
 def skew_stats(df: DataFrame, key_cols: list[str], top_k: int = 10) -> DataFrame:
@@ -117,14 +118,9 @@ def postings_pairs(
     (the minhash banded self-join died that way at sf10).
     """
     # Both join sides (and the over-cap count) read the postings: cut
-    # the lineage so the caller's plan runs once.  DISK_ONLY, the
-    # convention for corpus-scaled frames (storage-memory competition
-    # at sf10); a local checkpoint, not persist(), because its blocks
-    # are freed when the caller drops the frame, while a lazily
-    # returned persist has no safe place for its unpersist.
-    postings = postings.localCheckpoint(
-        eager=False, storageLevel=StorageLevel.DISK_ONLY
-    )
+    # the lineage so the caller's plan runs once (``materialize`` says
+    # why a returned frame is checkpointed, never persisted).
+    postings = checkpoint(postings)
     # Unless a carried window repartitions by item, the window's key
     # exchange and sort also serve the self-join, so the fan-out costs
     # no shuffle of its own

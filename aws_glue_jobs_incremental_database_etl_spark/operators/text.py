@@ -20,6 +20,7 @@ from ..functions.text import (
     text_fingerprint,
     token_count,
 )
+from ..materialize import checkpoint
 
 
 def document_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -410,9 +411,9 @@ def lm_cross_entropy(
     from .dedup import _spread
 
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    base = _spread(
-        df.select(F.col(id_col).alias("id"), toks.alias("_toks")), "id"
-    ).persist()
+    base = checkpoint(
+        _spread(df.select(F.col(id_col).alias("id"), toks.alias("_toks")), "id")
+    )
     uni = (
         base.select(F.explode("_toks").alias("w1"))
         .groupBy("w1")
@@ -790,6 +791,7 @@ def _dsir_cached_model(df, target, model, id_col, text_col, k):
     if hit is not None:
         _DSIR_CACHE.move_to_end(key)
         return hit
+    # Raw persist on purpose: the LRU, not one call, owns this lifetime.
     model = model.persist()
     _DSIR_CACHE[key] = model
     while len(_DSIR_CACHE) > _DSIR_CACHE_MAX:

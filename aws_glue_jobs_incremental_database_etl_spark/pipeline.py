@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from .bookmarks import BookmarkStore, watermark_aggregates, watermark_from
 from .catalog import FileCatalog
 from .config import TableConfig
+from .materialize import cached
 from .sharding import select_tables
 from .sinks import write_partitioned
 from .sources import read_table
@@ -295,14 +296,13 @@ class IncrementalPipeline:
         # (3) map/cast to catalog types (reference :199-203).
         mapped = apply_mapping(batch, identity_mappings(source_columns))
 
-        # Cache the batch once: it is the snapshot that the aggregate
-        # (4) and the write (5) both read, so the row count, the
-        # registered partitions, the watermark and the written rows
-        # agree — a JDBC source re-queries the database on every
-        # action.  At 100 TB use DISK_ONLY or recompute — here
-        # MEMORY_AND_DISK.
-        mapped.persist()
-        try:
+        # Cache the batch once, scoped to this run: it is the snapshot
+        # that the aggregate (4) and the write (5) both read, so the
+        # row count, the registered partitions, the watermark and the
+        # written rows agree — a JDBC source re-queries the database on
+        # every action.  ``cached`` releases the blocks when the write
+        # and the bookmark staging are done, also when either raises.
+        with cached(mapped) as mapped:
             # (4) ONE global aggregate over the batch: every column's
             # non-null count (DropNullFields, reference :205-208), the
             # row count, the next watermark and the distinct partition
@@ -399,8 +399,6 @@ class IncrementalPipeline:
                 self.bookmarks.stage(
                     ctx, watermark_from(stats[_WATERMARK], cfg.bookmark_keys)
                 )
-        finally:
-            mapped.unpersist()
 
         self._stamp_lineage_and_grant(res, tgt_name, t0)
         return res

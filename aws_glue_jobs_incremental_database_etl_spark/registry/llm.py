@@ -16,6 +16,7 @@ from pyspark.sql import functions as F  # noqa: F401
 from pyspark.sql.window import Window  # noqa: F401
 
 from ..functions import epoch_us  # noqa: F401
+from ..materialize import checkpoint
 from ..tables import load_table  # noqa: F401
 from ._core import (  # noqa: F401
     _LM_CE_SQL,
@@ -1006,7 +1007,7 @@ def curation_v3_q(spark, sf_dir):
             "nonempty_text": "COALESCE(trim(text), '') <> ''",
         },
     )
-    clean = clean.persist()
+    clean = checkpoint(clean)
     pairs = winnow_near_dup_pairs(
         clean, "doc_id", "text", k=5, window=4, threshold=0.4, max_df=50
     )

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F  # noqa: F401
 from pyspark.sql.window import Window  # noqa: F401
 
 from ..functions import epoch_us  # noqa: F401
+from ..materialize import checkpoint
 from ..tables import load_table  # noqa: F401
 from ._core import (  # noqa: F401
     _LM_CE_SQL,
@@ -1671,12 +1672,12 @@ def q22(spark, sf_dir):
 def q15(spark, sf_dir):
     """TPC-H Q15-style top supplier: the revenue "view" is computed
     once and reused for both the MAX scalar subquery and the final
-    join (cached → one lineitem scan); the max is a 1-row broadcast
+    join (checkpointed → one lineitem scan); the max is a 1-row broadcast
     cross join.  Revenue is rounded identically on both sides BEFORE
     the max/equality so ties resolve the same way in both engines."""
     l = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
-    rev = (
+    rev = checkpoint(
         l.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
             & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp_ntz"))
@@ -1694,7 +1695,6 @@ def q15(spark, sf_dir):
             .cast("double")
             .alias("total_revenue")
         )
-        .cache()
     )
     top = rev.agg(F.max("total_revenue").alias("max_rev"))
     return (
@@ -1769,13 +1769,13 @@ def q11(spark, sf_dir):
     scalar subquery in HAVING.
 
     Plan: one partial-aggregated shuffle keyed by part; the global
-    total is a second aggregate over the SAME cached per-part rollup
+    total is a second aggregate over the SAME checkpointed per-part rollup
     (not a second fact scan), folded back as a 1-row broadcast cross
     join.  The HAVING compare runs on exact DECIMAL(18,6) sums in
     both engines — a double-precision threshold would make boundary
     parts engine-dependent (addition-order sensitivity)."""
     l = load_table(spark, sf_dir, "lineitem")
-    per_part = (
+    per_part = checkpoint(
         l.groupBy(F.col("l_partkey").alias("partkey"))
         .agg(
             F.sum(
@@ -1784,7 +1784,6 @@ def q11(spark, sf_dir):
                 )
             ).alias("_val")
         )
-        .cache()
     )
     total = per_part.agg(F.sum("_val").alias("_total"))
     return (

@@ -16,10 +16,10 @@ from __future__ import annotations
 import shutil  # the expire-history gate cleans up its staged lake
 import tempfile
 
-from pyspark import StorageLevel
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..materialize import checkpoint
 from ..tables import load_table
 from ._core import O, Q, query, scratch_dir  # noqa: F401
 
@@ -386,13 +386,17 @@ def cronbach_alpha_q(spark, sf_dir):
     # the item and user aggregates (2×) — cut lineages so the distinct
     # count and the (user, type) cells each compute once (6 parquet
     # scans in the pre-cut plan)
-    n_df = e.select("user_id").distinct().agg(
-        F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    n_df = checkpoint(
+        e.select("user_id").distinct().agg(
+            F.count(F.lit(1)).alias("n")
+        )
+    )
     k_df = e.agg(F.countDistinct("event_type").alias("k"))
-    cnt = e.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    cnt = checkpoint(
+        e.groupBy("user_id", "event_type").agg(
+            F.count(F.lit(1)).alias("c")
+        )
+    )
     item = cnt.groupBy("event_type").agg(
         F.sum("c").alias("s1"), F.sum(F.col("c") * F.col("c")).alias("s2")
     )
@@ -1817,11 +1821,12 @@ def bradley_terry_q(spark, sf_dir):
     # lineage cut every consumer re-runs the events window + the
     # merge-hinted self-join — the before-plan held 182 parquet scans
     # of events (plans/r11/bradley_terry_event_types_before.txt).
-    # localCheckpoint computes the duel grid ONCE; DISK_ONLY keeps the
-    # corpus-scaled lineage out of storage memory (repo convention).
-    wins = duels.groupBy("w", "l").agg(
-        F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    # The checkpoint computes the duel grid ONCE.
+    wins = checkpoint(
+        duels.groupBy("w", "l").agg(
+            F.count(F.lit(1)).alias("n")
+        )
+    )
     sym = (
         wins.select(F.col("w").alias("i"), F.col("l").alias("j"), "n")
         .unionAll(
@@ -2019,9 +2024,11 @@ def rbo_q(spark, sf_dir):
     # whole corpus pipeline) run once, not once per consumer (the
     # before-plan held 28 parquet scans — plans/r11/rbo_bm25_vs_
     # classifier_docs_before.txt)
-    common = s.join(t, "id").select(
-        F.greatest("rs", "rt").alias("m")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    common = checkpoint(
+        s.join(t, "id").select(
+            F.greatest("rs", "rt").alias("m")
+        )
+    )
     depths = spark.range(1, 21).select(F.col("id").alias("d"))
     agreement = (
         depths.join(F.broadcast(common), F.col("m") <= F.col("d"), "left")
@@ -2112,10 +2119,10 @@ def ipf_raking_q(spark, sf_dir):
     # the final report join — cut the lineage so the events aggregate
     # runs once, not once per consumer (12 parquet scans in the
     # before-plan, plans/r11/ipf_raking_dow_type_events_before.txt)
-    cells = e.groupBy(
-        (F.weekday(F.to_date("ts")) + 1).alias("dow"), "event_type"
-    ).agg(F.count(F.lit(1)).cast("double").alias("n")).localCheckpoint(
-        eager=False, storageLevel=StorageLevel.DISK_ONLY
+    cells = checkpoint(
+        e.groupBy(
+            (F.weekday(F.to_date("ts")) + 1).alias("dow"), "event_type"
+        ).agg(F.count(F.lit(1)).cast("double").alias("n"))
     )
     tot = cells.agg(
         F.sum("n").alias("nt"), F.countDistinct("dow").alias("ndow")

@@ -20,10 +20,10 @@ from __future__ import annotations
 
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..materialize import checkpoint
 from ..tables import load_table
 from ._core import O, Q, query  # noqa: F401
 
@@ -83,21 +83,21 @@ def fisher_price_index_q(spark, sf_dir):
     base⋈current equi-join (merge-hinted per the corpus-join
     contract); indexes fold map-side to one row per year."""
     li = load_table(spark, sf_dir, "lineitem")
-    py = li.groupBy(
-        F.col("l_partkey").alias("part"), F.year("l_shipdate").alias("yr")
-    ).agg(
-        F.sum(
-            F.round(
-                F.col("l_extendedprice") / F.col("l_quantity") * 1000000
-            ).cast("bigint")
-        ).alias("sp"),
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum(F.round(F.col("l_quantity")).cast("bigint")).alias("q"),
-    ).filter(F.col("q") > 0).localCheckpoint(
+    py = checkpoint(
+        li.groupBy(
+            F.col("l_partkey").alias("part"), F.year("l_shipdate").alias("yr")
+        ).agg(
+            F.sum(
+                F.round(
+                    F.col("l_extendedprice") / F.col("l_quantity") * 1000000
+                ).cast("bigint")
+            ).alias("sp"),
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum(F.round(F.col("l_quantity")).cast("bigint")).alias("q"),
+        ).filter(F.col("q") > 0)
         # py feeds the base-year fold AND both matched-basket sides —
         # cut the lineage so the part×year aggregate runs once (same
         # multi-consumer shape as the Törnqvist twin)
-        eager=False, storageLevel=StorageLevel.DISK_ONLY
     )
     base_yr = py.agg(F.min("yr").alias("y0"))
     withy0 = py.join(F.broadcast(base_yr), F.lit(True))
@@ -211,7 +211,7 @@ def sample_entropy_q(spark, sf_dir):
     e = load_table(spark, sf_dir, "events")
     day = F.to_date("ts")
     mx = e.agg(F.max(day).alias("dmax"))
-    daily = (
+    daily = checkpoint(
         e.join(F.broadcast(mx), F.lit(True))
         .filter(day > F.date_sub(F.col("dmax"), 365))
         .groupBy("event_type", day.alias("day"))
@@ -219,7 +219,6 @@ def sample_entropy_q(spark, sf_dir):
         # daily feeds the σ fold AND the template windows; tt feeds
         # both pair-join sides — cut lineages so the events aggregate
         # runs once (8 parquet scans in the pre-cut plan)
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     sig = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -250,9 +249,7 @@ def sample_entropy_q(spark, sf_dir):
         F.lead("y", 1).over(w).cast("double").alias("y1"),
         F.lead("y", 2).over(w).cast("double").alias("y2"),
     )
-    tt = tmpl.filter(F.col("rn") <= F.col("n") - 2).localCheckpoint(
-        eager=False, storageLevel=StorageLevel.DISK_ONLY
-    )
+    tt = checkpoint(tmpl.filter(F.col("rn") <= F.col("n") - 2))
     a, b = tt.alias("a"), tt.alias("b")
     bmatch = (
         F.abs(F.col("a.y0") - F.col("b.y0")) <= F.col("a.r")
@@ -645,21 +642,23 @@ def distance_corr_q(spark, sf_dir):
     # t feeds both pair-join sides, pairs feeds rm/gm/cent, rm feeds
     # both centering sides — cut lineages so the daily aggregate and
     # the year-strata pair grid each compute once (9 parquet scans in
-    # the pre-cut plan); DISK_ONLY per repo convention
-    t = num.filter(F.col("n") >= 30).localCheckpoint(
-        eager=False, storageLevel=StorageLevel.DISK_ONLY
-    )
+    # the pre-cut plan)
+    t = checkpoint(num.filter(F.col("n") >= 30))
     a, b = t.alias("a"), t.alias("b")
-    pairs = a.join(b, F.col("a.yr") == F.col("b.yr")).select(
-        F.col("a.yr").alias("yr"),
-        F.col("a.rn").alias("j"),
-        F.col("b.rn").alias("k"),
-        F.abs(F.col("a.x").cast("double") - F.col("b.x")).alias("da"),
-        F.abs(F.col("a.y") - F.col("b.y")).alias("db"),
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    rm = pairs.groupBy("yr", "j").agg(
-        F.avg("da").alias("am"), F.avg("db").alias("bm")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    pairs = checkpoint(
+        a.join(b, F.col("a.yr") == F.col("b.yr")).select(
+            F.col("a.yr").alias("yr"),
+            F.col("a.rn").alias("j"),
+            F.col("b.rn").alias("k"),
+            F.abs(F.col("a.x").cast("double") - F.col("b.x")).alias("da"),
+            F.abs(F.col("a.y") - F.col("b.y")).alias("db"),
+        )
+    )
+    rm = checkpoint(
+        pairs.groupBy("yr", "j").agg(
+            F.avg("da").alias("am"), F.avg("db").alias("bm")
+        )
+    )
     gm = pairs.groupBy("yr").agg(
         F.avg("da").alias("ag"), F.avg("db").alias("bg")
     )
@@ -855,9 +854,7 @@ def err_bm25_q(spark, sf_dir):
     # consumed by the threshold grid AND the per-doc grade pass: cut
     # the lineage so the hashed-classifier pipeline runs once (same
     # multi-consumer recomputation as the _scored_docs family)
-    cl = hashed_classifier_score(d, model, dim=dim, bias=0.1).localCheckpoint(
-        eager=False, storageLevel=StorageLevel.DISK_ONLY
-    )
+    cl = checkpoint(hashed_classifier_score(d, model, dim=dim, bias=0.1))
     sgrid = cl.groupBy("score").agg(F.count(F.lit(1)).alias("c"))
     wv = Window.orderBy("score").rowsBetween(
         Window.unboundedPreceding, 0
@@ -1051,12 +1048,11 @@ def cka_linear_q(spark, sf_dir):
         "_id", "i", (F.col("xi") - F.col("mu")).alias("c")
     )
     a, b = xc.alias("a"), xc.alias("b")
-    cells = (
+    cells = checkpoint(
         a.hint("merge")
         .join(b, F.col("a._id") == F.col("b._id"))
         .groupBy(F.col("a.i").alias("i"), F.col("b.i").alias("j"))
         .agg(F.sum(F.col("a.c") * F.col("b.c")).alias("val"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     half = mu.agg(
         ((F.max("i") + 1) / 2).cast("int").alias("h")
@@ -1207,9 +1203,11 @@ def self_bleu_q(spark, sf_dir):
         .otherwise(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
         .alias("w"),
     )
-    docs = toks.filter(F.size("w") >= 2).select(
-        "doc_id", "w", F.size("w").alias("n_tok")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    docs = checkpoint(
+        toks.filter(F.size("w") >= 2).select(
+            "doc_id", "w", F.size("w").alias("n_tok")
+        )
+    )
     lens = docs.agg(
         F.count(F.lit(1)).alias("m"), F.sum("n_tok").alias("s")
     )

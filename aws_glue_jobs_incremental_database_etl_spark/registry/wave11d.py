@@ -19,11 +19,11 @@ from __future__ import annotations
 
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import epoch_us
+from ..materialize import checkpoint
 from ..tables import load_table
 from ._core import O, Q, query  # noqa: F401
 
@@ -471,12 +471,11 @@ def participation_ratio_q(spark, sf_dir):
         "_id", "i", (F.col("xi") - F.col("mu")).alias("c")
     )
     a, b = xc.alias("a"), xc.alias("b")
-    cells = (
+    cells = checkpoint(
         a.hint("merge")
         .join(b, F.col("a._id") == F.col("b._id"))
         .groupBy(F.col("a.i").alias("i"), F.col("b.i").alias("j"))
         .agg(F.sum(F.col("a.c") * F.col("b.c")).alias("val"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     folds = cells.agg(
         F.sum(

@@ -25,10 +25,10 @@ top-10 customers) — never corpus² — on the join side.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..materialize import checkpoint
 from ..tables import load_table
 from ._core import O, Q, query  # noqa: F401
 
@@ -829,12 +829,14 @@ def hosmer_lemeshow_q(spark, sf_dir):
     # distinct + score join) runs once, not once per consumer — the
     # before-plan held 32 parquet scans (plans/r11/hosmer_lemeshow_
     # quality_docs_before.txt)
-    prob = scored.join(
-        d.select("doc_id", "lang"), scored["id"] == F.col("doc_id")
-    ).select(
-        F.col("score").alias("p"),
-        F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    prob = checkpoint(
+        scored.join(
+            d.select("doc_id", "lang"), scored["id"] == F.col("doc_id")
+        ).select(
+            F.col("score").alias("p"),
+            F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
+        )
+    )
     cuts = prob.agg(
         *[
             F.expr(f"percentile(p, {q / 10.0})").alias(f"c{q}")

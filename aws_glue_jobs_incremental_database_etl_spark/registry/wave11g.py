@@ -27,10 +27,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark import StorageLevel
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..materialize import checkpoint
 from ..tables import load_table
 from ._core import _SHINGLE_INTER_SQL, O, Q, query  # noqa: F401
 
@@ -607,7 +607,7 @@ def tornqvist_price_index_q(spark, sf_dir):
     joined back on the bounded year key, one fold to one row per
     year."""
     li = load_table(spark, sf_dir, "lineitem")
-    py = (
+    py = checkpoint(
         li.groupBy(
             F.col("l_partkey").alias("part"),
             F.year("l_shipdate").alias("yr"),
@@ -628,7 +628,6 @@ def tornqvist_price_index_q(spark, sf_dir):
         # j feeds the revenue totals AND the index fold — cut lineages
         # so the part×year aggregate and the basket join each run once
         # (8 parquet scans in the pre-cut plan)
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     base_yr = py.agg(F.min("yr").alias("y0"))
     withy0 = py.join(F.broadcast(base_yr), F.lit(True))
@@ -643,9 +642,7 @@ def tornqvist_price_index_q(spark, sf_dir):
         (F.col("sp").cast("double") / F.col("cnt")).alias("pt"),
         F.col("q").alias("qt"),
     )
-    j = t.hint("merge").join(b, "part").localCheckpoint(
-        eager=False, storageLevel=StorageLevel.DISK_ONLY
-    )
+    j = checkpoint(t.hint("merge").join(b, "part"))
     rev = j.groupBy("yr").agg(
         F.sum(F.col("p0") * F.col("q0")).alias("r0"),
         F.sum(F.col("pt") * F.col("qt")).alias("rt"),

@@ -11,12 +11,12 @@ import tempfile  # noqa: F401  (several queries stage scratch dirs)
 
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 from pyspark.sql.window import Window  # noqa: F401
 
 from ..functions import epoch_us  # noqa: F401
+from ..materialize import checkpoint
 from ..tables import load_table  # noqa: F401
 from ._core import (  # noqa: F401
     _LM_CE_SQL,
@@ -321,9 +321,12 @@ def lm_buckets_q(spark, sf_dir):
     from ..operators.text import lm_cross_entropy
 
     d = load_table(spark, sf_dir, "documents")
-    scored = lm_cross_entropy(d, "doc_id", "text").select(
-        "id", F.col("cross_entropy").alias("ce")
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    scored = checkpoint(
+        lm_cross_entropy(d, "doc_id", "text").select(
+            "id", F.col("cross_entropy").alias("ce")
+        ),
+        eager=True,
+    )
     return (
         exact_ntile(scored, 3, "ce", "id", coarse_buckets=16)
         .groupBy("bucket")

@@ -11,12 +11,12 @@ import tempfile  # noqa: F401  (several queries stage scratch dirs)
 
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 from pyspark.sql.window import Window  # noqa: F401
 
 from ..functions import epoch_us  # noqa: F401
+from ..materialize import checkpoint
 from ..tables import load_table  # noqa: F401
 from ._core import (  # noqa: F401
     _LM_CE_SQL,
@@ -2849,7 +2849,7 @@ def quantile_normalize_q(spark, sf_dir):
     division (order-free, engine-identical)."""
     from ..operators.profile import exact_ntile, exact_ntile_grouped
 
-    docs = load_table(spark, sf_dir, "documents").persist()
+    docs = load_table(spark, sf_dir, "documents")
     # one approxQuantile sketch serves BOTH rankings (placement only)
     cuts = docs.approxQuantile("n_chars", [i / 32 for i in range(1, 32)], 1e-3)
     pooled = exact_ntile(
@@ -3013,7 +3013,7 @@ def hybrid_retrieval_q(spark, sf_dir):
 
     r1 = topk_ranked(lex, "s", "r1")
     r2 = topk_ranked(dense, "c", "r2")
-    fused = (
+    fused = checkpoint(
         r1.join(r2, "id", "full")
         .select(
             "id",
@@ -3028,9 +3028,7 @@ def hybrid_retrieval_q(spark, sf_dir):
         # ≤20 rows, but mmr_greedy's pairwise frame reads it through
         # BOTH self-join sides — without a lineage cut each side
         # re-runs BM25 + the dense cosine pass over the corpus (the
-        # before-plan held 17 parquet scans).  DISK_ONLY per repo
-        # convention.
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        # before-plan held 17 parquet scans).
     )
     cand = fused.select(F.col("id").alias("vec_id"), F.col("rrf").alias("rel"))
     sel = mmr_greedy(cand, emb, k=5, lam=0.5)

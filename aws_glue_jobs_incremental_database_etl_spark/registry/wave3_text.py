@@ -11,12 +11,12 @@ import tempfile  # noqa: F401  (several queries stage scratch dirs)
 
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 from pyspark.sql.window import Window  # noqa: F401
 
 from ..functions import epoch_us  # noqa: F401
+from ..materialize import checkpoint
 from ..tables import load_table  # noqa: F401
 from ._core import (  # noqa: F401
     _LM_CE_SQL,
@@ -765,14 +765,17 @@ def pmi_q(spark, sf_dir):
     machinery; unigram and pair totals are two scalar aggregates
     fanned back broadcast."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.filter(
-        F.coalesce(F.trim("text"), F.lit("")) != ""
-    ).select(
-        "doc_id",
-        F.posexplode(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-        ).alias("p", "word"),
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    toks = checkpoint(
+        d.filter(
+            F.coalesce(F.trim("text"), F.lit("")) != ""
+        ).select(
+            "doc_id",
+            F.posexplode(
+                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+            ).alias("p", "word"),
+        ),
+        eager=True,
+    )
     uni = toks.groupBy("word").agg(F.count(F.lit(1)).alias("cu"))
     n_tok = float(toks.count())
     ctx = toks.select(
@@ -784,11 +787,11 @@ def pmi_q(spark, sf_dir):
     t2 = toks.select(
         "doc_id", F.col("p").alias("cp"), F.col("word").alias("context")
     )
-    pairs = (
+    pairs = checkpoint(
         ctx.join(t2, ["doc_id", "cp"])
         .groupBy("center", "context")
-        .agg(F.count(F.lit(1)).alias("cpair"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .agg(F.count(F.lit(1)).alias("cpair")),
+        eager=True,
     )
     n_pair = float(pairs.agg(F.sum("cpair")).first()[0])
     ua = uni.select(F.col("word").alias("center"), F.col("cu").alias("ca"))
@@ -1495,9 +1498,12 @@ def incremental_components_q(spark, sf_dir):
     p = load_table(spark, sf_dir, "part").withColumn(
         "_blk", F.concat_ws("#", "p_brand", "p_type")
     )
-    pairs = edit_distance_join(
-        p, "p_partkey", "p_name", "_blk", max_dist=2
-    ).select("id_a", "id_b").localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    pairs = checkpoint(
+        edit_distance_join(
+            p, "p_partkey", "p_name", "_blk", max_dist=2
+        ).select("id_a", "id_b"),
+        eager=True,
+    )
     mid = p.agg(
         (F.min("p_partkey") + F.max("p_partkey")) / 2
     ).first()[0]

@@ -11,12 +11,12 @@ import tempfile  # noqa: F401  (several queries stage scratch dirs)
 
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 from pyspark.sql.window import Window  # noqa: F401
 
 from ..functions import epoch_us  # noqa: F401
+from ..materialize import checkpoint
 from ..tables import load_table  # noqa: F401
 from ._core import (  # noqa: F401
     _LM_CE_SQL,
@@ -1110,14 +1110,15 @@ def lof_q(spark, sf_dir):
     # report join — without lineage cuts every consumer re-runs the
     # whole knn_exact Arrow-kernel pass (the before-plan held 18
     # parquet scans, plans/r11/lof_outliers_embeddings_before.txt).
-    # Same DISK_ONLY localCheckpoint the lof_ivf twin already uses.
-    nk = knn_exact(emb, "vec_id", "embedding", k=10).select(
-        "ida",
-        "idb",
-        (F.sqrt(F.col("d2").cast("double")) / 1_000_000).alias("d"),
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    nk = checkpoint(
+        knn_exact(emb, "vec_id", "embedding", k=10).select(
+            "ida",
+            "idb",
+            (F.sqrt(F.col("d2").cast("double")) / 1_000_000).alias("d"),
+        )
+    )
     kd = nk.groupBy(F.col("ida").alias("id")).agg(F.max("d").alias("kdist"))
-    lrd = (
+    lrd = checkpoint(
         nk.join(kd.select(F.col("id").alias("idb"), "kdist"), "idb")
         .groupBy(F.col("ida").alias("id"))
         .agg(
@@ -1125,7 +1126,6 @@ def lof_q(spark, sf_dir):
                 F.lit(10.0) / F.sum(F.greatest(F.col("kdist"), F.col("d")))
             ).alias("lrd")
         )
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     lof = (
         nk.join(lrd.select(F.col("id").alias("ida"), F.col("lrd").alias("lrd_a")), "ida")
@@ -1242,11 +1242,12 @@ def naive_bayes_q(spark, sf_dir):
     )
     # tc feeds ls, gl AND the matched join; tg feeds dt AND matched —
     # without lineage cuts each consumer re-runs the bigram explode +
-    # count (the before-plan held 22 parquet scans).  DISK_ONLY, the
-    # repo convention for corpus-scaled lineage cuts.
-    tc = train_g.groupBy("g", "lang").agg(
-        F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    # count (the before-plan held 22 parquet scans).
+    tc = checkpoint(
+        train_g.groupBy("g", "lang").agg(
+            F.count(F.lit(1)).alias("c")
+        )
+    )
     ls = tc.groupBy("lang").agg(F.sum("c").alias("tok"))
     tr = cl.filter(F.col("doc_id") % 2 == 0)
     pri = tr.groupBy("lang").agg(F.count(F.lit(1)).alias("nd"))
@@ -1256,9 +1257,11 @@ def naive_bayes_q(spark, sf_dir):
         cl.filter((F.col("doc_id") % 2 == 1) & (F.length("clean") >= 2))
         .select("doc_id", F.explode(grams).alias("g"))
     )
-    tg = test_g.groupBy("doc_id", "g").agg(
-        F.count(F.lit(1)).alias("cnt")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    tg = checkpoint(
+        test_g.groupBy("doc_id", "g").agg(
+            F.count(F.lit(1)).alias("cnt")
+        )
+    )
     dt = (
         cl.filter(F.col("doc_id") % 2 == 1)
         .select("doc_id", F.col("lang").alias("actual"))
@@ -2315,11 +2318,11 @@ def lof_ivf_q(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").withColumn(
         "e", F.transform("embedding", lambda x: x.cast("double"))
     )
-    # localCheckpoint: the assigned frame feeds both self-join sides
+    # checkpoint: the assigned frame feeds both self-join sides
     # AND the final label join; uncheckpointed, the 8x64-term
     # assignment chain re-evaluates per reference (measured 38 s ->
     # ~3 s at sf0.01 across both engines with the twin MATERIALIZED)
-    e = (
+    e = checkpoint(
         assign_nearest_centroid(emb, cents, vec_col="e")
         .select(
             "vec_id",
@@ -2332,11 +2335,10 @@ def lof_ivf_q(spark, sf_dir):
                 ),
             ).alias("v"),
         )
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     from ..operators.similarity import knn_exact_grouped
 
-    nk = (
+    nk = checkpoint(
         knn_exact_grouped(
             e.select("vec_id", "cluster", F.col("v").alias("embedding"))
             .withColumn(
@@ -2355,7 +2357,6 @@ def lof_ivf_q(spark, sf_dir):
             "idb",
             (F.sqrt(F.col("d2").cast("double")) / 1_000_000).alias("dd"),
         )
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     kd = nk.groupBy(F.col("ida").alias("id")).agg(F.max("dd").alias("kdist"))
     lrd = (
@@ -2437,11 +2438,8 @@ def _scored_docs(spark, sf_dir):
     # lineage cut each consumer re-runs the hashed-classifier token
     # explode + vocab distinct + score join — the before-plans held
     # 28-32 parquet scans per gate (plans/r11/{hosmer_lemeshow,rbo,
-    # kendall_tau}_*_before.txt).  One doc-sized materialization,
-    # DISK_ONLY (repo convention for corpus-scaled lineage cuts).
-    return sc.join(lab, "doc_id").localCheckpoint(
-        eager=False, storageLevel=StorageLevel.DISK_ONLY
-    )
+    # kendall_tau}_*_before.txt).  One doc-sized materialization.
+    return checkpoint(sc.join(lab, "doc_id"))
 
 
 def _score_bin(score):
@@ -2968,19 +2966,17 @@ def khop_q(spark, sf_dir):
         .distinct()
         .filter((F.col("id") - 10000000) % 10 == 0)
     )
-    h1 = (
+    h1 = checkpoint(
         seeds.join(und, seeds["id"] == und["u"])
         .select("id", F.col("v").alias("n"))
         .distinct()
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
-    h2 = (
+    h2 = checkpoint(
         h1.join(und, h1["n"] == und["u"])
         .select("id", und["v"].alias("n2"))
         .filter(F.col("n2") != F.col("id"))
         .select("id", F.col("n2").alias("n"))
         .distinct()
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     h3 = (
         h2.join(und, h2["n"] == und["u"])

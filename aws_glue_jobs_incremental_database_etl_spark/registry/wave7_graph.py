@@ -11,12 +11,12 @@ import tempfile  # noqa: F401  (several queries stage scratch dirs)
 
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 from pyspark.sql.window import Window  # noqa: F401
 
 from ..functions import epoch_us  # noqa: F401
+from ..materialize import checkpoint
 from ..tables import load_table  # noqa: F401
 from ._core import (  # noqa: F401
     _LM_CE_SQL,
@@ -261,15 +261,13 @@ def ngram_novelty_q(spark, sf_dir):
     )
     # stage tokens as a real column: Catalyst inlines multi-referenced
     # lambda subtrees (the shingle expr reads its input 4x)
-    # one tokenize+shingle pass, staged (lazy localCheckpoint, the
-    # GC-scoped multi-consumer convention): the n_sh branch reads
-    # size(sh) map-only, the n_new branch explodes — neither
+    # one tokenize+shingle pass, staged (lazy checkpoint): the n_sh
+    # branch reads size(sh) map-only, the n_new branch explodes — neither
     # re-tokenizes
-    staged = (
+    staged = checkpoint(
         d.withColumn("_toks", tokens_of(F.col("text")))
         .withColumn("sh", shingles_from_tokens(F.col("_toks"), 3))
         .select("doc_id", "source", "sh")
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     n_new = (
         staged.select("doc_id", F.explode("sh").alias("g"))
@@ -557,14 +555,13 @@ def facility_location_q(spark, sf_dir):
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    sims = (
+    sims = checkpoint(
         emb.join(F.broadcast(cand), F.lit(True))
         .select(
             F.col("vec_id").alias("x"),
             "c",
             F.greatest(dot, F.lit(0).cast("long")).alias("sp"),
         )
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     best = sims.select("x").distinct().select(
         "x", F.lit(0).cast("long").alias("best")
@@ -585,12 +582,12 @@ def facility_location_q(spark, sf_dir):
         pick = gains.orderBy(F.col("gain").desc(), F.col("c").asc()).first()
         chosen.append(pick["c"])
         rows.append((rnd, pick["c"], int(pick["gain"])))
-        best = (
+        best = checkpoint(
             best.join(
                 sims.filter(F.col("c") == pick["c"]).select("x", "sp"), "x"
             )
-            .select("x", F.greatest("best", "sp").alias("best"))
-            .localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
+            .select("x", F.greatest("best", "sp").alias("best")),
+            eager=True,
         )
     return spark.createDataFrame(
         [

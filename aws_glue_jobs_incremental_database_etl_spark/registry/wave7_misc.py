@@ -11,12 +11,12 @@ import tempfile  # noqa: F401  (several queries stage scratch dirs)
 
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 from pyspark.sql.window import Window  # noqa: F401
 
 from ..functions import epoch_us  # noqa: F401
+from ..materialize import checkpoint
 from ..tables import load_table  # noqa: F401
 from ._core import (  # noqa: F401
     _LM_CE_SQL,
@@ -593,11 +593,10 @@ def ktruss_q(spark, sf_dir):
     # parallel top-k + driver merge instead of the row_number window's
     # single-partition sort of the whole co-order pair frame (the
     # (w, u, v) order is total, so the selected set is identical)
-    e0 = (
+    e0 = checkpoint(
         co.orderBy(F.col("w").desc(), F.col("u").asc(), F.col("v").asc())
         .limit(500)
         .select("u", "v")
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
 
     def truss_round(e):
@@ -613,10 +612,12 @@ def ktruss_q(spark, sf_dir):
         first_lo = (F.col("du") < F.col("dv")) | (
             (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
         )
-        o = ed.select(
-            F.when(first_lo, F.col("u")).otherwise(F.col("v")).alias("lo"),
-            F.when(first_lo, F.col("v")).otherwise(F.col("u")).alias("hi"),
-        ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        o = checkpoint(
+            ed.select(
+                F.when(first_lo, F.col("u")).otherwise(F.col("v")).alias("lo"),
+                F.when(first_lo, F.col("v")).otherwise(F.col("u")).alias("hi"),
+            )
+        )
         w1, w2 = o.alias("w1"), o.alias("w2")
         wedges = w1.join(
             w2,
@@ -627,11 +628,13 @@ def ktruss_q(spark, sf_dir):
             F.col("w1.hi").alias("y"),
             F.col("w2.hi").alias("z"),
         )
-        tri = wedges.join(
-            e,
-            (F.least("y", "z") == F.col("u"))
-            & (F.greatest("y", "z") == F.col("v")),
-        ).select("x", "y", "z").localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        tri = checkpoint(
+            wedges.join(
+                e,
+                (F.least("y", "z") == F.col("u"))
+                & (F.greatest("y", "z") == F.col("v")),
+            ).select("x", "y", "z")
+        )
         se = (
             tri.select(
                 F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v")
@@ -650,9 +653,7 @@ def ktruss_q(spark, sf_dir):
             )
         )
         sup = se.groupBy("u", "v").agg(F.count(F.lit(1)).alias("sup"))
-        keep = sup.filter(F.col("sup") >= 2).select("u", "v").localCheckpoint(
-            eager=False, storageLevel=StorageLevel.DISK_ONLY
-        )
+        keep = checkpoint(sup.filter(F.col("sup") >= 2).select("u", "v"))
         return tri, keep
 
     tri1, keep1 = truss_round(e0)
@@ -1063,10 +1064,10 @@ def hits_q(spark, sf_dir):
     # the distinct edge list feeds all three power-round joins and a2
     # feeds the norm fold + the report — cut lineages so the distinct
     # runs once (6 parquet scans in the pre-cut plan)
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
-    ).distinct().localCheckpoint(
-        eager=False, storageLevel=StorageLevel.DISK_ONLY
+    li = checkpoint(
+        load_table(spark, sf_dir, "lineitem").select(
+            F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
+        ).distinct()
     )
     a1 = li.groupBy("s").agg(F.count(F.lit(1)).alias("a"))
     h1 = (
@@ -1074,11 +1075,10 @@ def hits_q(spark, sf_dir):
         .groupBy("p")
         .agg(F.sum("a").alias("h"))
     )
-    a2 = (
+    a2 = checkpoint(
         li.join(h1, "p")
         .groupBy("s")
         .agg(F.sum("h").alias("a"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     norm = a2.agg(F.sum("a").alias("z"))
     return (

@@ -12,12 +12,12 @@ import tempfile  # noqa: F401
 
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
-from pyspark import StorageLevel  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 from pyspark.sql.window import Window  # noqa: F401
 
 from ..functions import epoch_us  # noqa: F401
+from ..materialize import checkpoint
 from ..tables import load_table  # noqa: F401
 from ._core import (  # noqa: F401
     _LM_CE_SQL,
@@ -786,7 +786,7 @@ def char_trigram_sim_q(spark, sf_dir):
     s = d.select(
         "source", F.lower(F.trim(F.col("text"))).alias("t")
     ).filter(F.length("t") >= 3)
-    grams = (
+    grams = checkpoint(
         s.select(
             "source",
             F.explode(
@@ -801,8 +801,6 @@ def char_trigram_sim_q(spark, sf_dir):
         # grams feeds norms AND both sides of the gram-keyed self-join:
         # without a lineage cut each consumer re-runs the trigram
         # explode + count from parquet (8 scans in the before-plan).
-        # DISK_ONLY, the repo convention for corpus-scaled frames.
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     norms = grams.groupBy("source").agg(
         F.sum(F.col("c").cast("decimal(38,0)") * F.col("c")).alias("nrm")
@@ -1410,20 +1408,20 @@ def kmv_jaccard_q(spark, sf_dir):
     the per-partition bottom-64s; hv is distinct within day_a), so
     the oracle's single global rank is unchanged."""
     e = load_table(spark, sf_dir, "events")
-    h = e.select(
-        F.to_date("ts").alias("day"),
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("hv"),
-    ).distinct().localCheckpoint(
+    h = checkpoint(
+        e.select(
+            F.to_date("ts").alias("day"),
+            F.conv(
+                F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
+                16,
+                10,
+            )
+            .cast("long")
+            .alias("hv"),
+        ).distinct()
         # h feeds the day frame (both pair-join sides) AND the 2-row
         # explode — cut the lineage so the md5+distinct pass runs once
         # (6 parquet scans in the pre-cut plan)
-        eager=False, storageLevel=StorageLevel.DISK_ONLY
     )
     days = h.select("day").distinct()
     pairs = days.alias("d1").join(
@@ -2082,39 +2080,31 @@ def closeness_q(spark, sf_dir):
     # consumers, and the joins reference their columns ACROSS the
     # reuse (e["v"] against h1⋈e), so each needs a lineage-TRUNCATING
     # materialization, not a mere persist (persist keeps the plan and
-    # the parent⋈derived column references turn ambiguous).  The
-    # truncating blocks go to DISK_ONLY, not the default
-    # MEMORY_AND_DISK: the edge list is CORPUS-scaled, and parking it
-    # in storage memory starved the hop-join execution pool at sf10
-    # (SparkOutOfMemoryError UNABLE_TO_ACQUIRE, r11 probe —
-    # storageFraction protects cached blocks from eviction).  Spark
-    # 4's localCheckpoint(storageLevel=...) gives all three at once:
-    # one computation, a truncated plan, and zero storage-memory
-    # competition (a reliable checkpoint() would recompute its input
-    # a second time — measured +60% at sf1).
+    # the parent⋈derived column references turn ambiguous).  A local
+    # checkpoint gives one computation and a truncated plan; a
+    # reliable checkpoint() would recompute its input a second time
+    # (measured +60% at sf1).
     # The co-supply relation is symmetric, so only the u < v half is
     # joined and deduped — half the pair fan-out (17.4M → 8.7M rows at
     # sf0.1) and half the distinct's shuffle — and the checkpointed
     # half is mirrored into the full directed edge list by a union
     # (two in-memory scans of the same blocks).  Identical edge set
     # (guide §2.3: shuffle fewer bytes).
-    half = (
+    half = checkpoint(
         postings_pairs(raw, "p", "s", 256, "part-degree")
         .select(F.col("s_a").alias("u"), F.col("s_b").alias("v"))
         .distinct()
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     e = half.unionByName(
         half.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
     deg = e.groupBy(F.col("u").alias("s")).agg(F.count(F.lit(1)).alias("d"))
     anchors = deg.orderBy(F.col("d").desc(), F.col("s").asc()).limit(20)
-    h1 = (
+    h1 = checkpoint(
         anchors.select(F.col("s").alias("id"))
         .join(e, F.col("id") == F.col("u"))
         .select("id", F.col("v").alias("n"))
         .distinct()
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     h2 = (
         h1.join(e, h1["n"] == e["u"])
@@ -2129,9 +2119,7 @@ def closeness_q(spark, sf_dir):
     # "Unable to grow the pointer array" → executor loss) where this
     # formulation completes in one 8 GB JVM (SCALE.md round-11 probe,
     # 424 s GC-bound) — the sf0.1 win was not worth the decade-2 OOM
-    h2new = h2.exceptAll(h1).distinct().localCheckpoint(
-        eager=False, storageLevel=StorageLevel.DISK_ONLY
-    )
+    h2new = checkpoint(h2.exceptAll(h1).distinct())
     h3 = (
         h2new.join(e, h2new["n"] == e["u"])
         .select("id", e["v"].alias("n2"))
@@ -2139,11 +2127,10 @@ def closeness_q(spark, sf_dir):
         .select("id", F.col("n2").alias("n"))
         .distinct()
     )
-    h3new = (
+    h3new = checkpoint(
         h3.exceptAll(h2new)
         .exceptAll(h1)
         .distinct()
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     c1 = h1.groupBy("id").agg(F.count(F.lit(1)).alias("n1"))
     c2 = h2new.groupBy("id").agg(F.count(F.lit(1)).alias("n2"))
@@ -3120,7 +3107,7 @@ def textrank_q(spark, sf_dir):
         .groupBy(F.col("a.w").alias("u"), F.col("b.w").alias("v"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    e = (
+    e = checkpoint(
         adj.select("u", "v", "c")
         .unionAll(
             adj.select(
@@ -3129,7 +3116,6 @@ def textrank_q(spark, sf_dir):
         )
         .groupBy("u", "v")
         .agg(F.sum("c").alias("c"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     nodes = e.select(F.col("u").alias("id")).distinct()
     n_nodes = nodes.agg(

@@ -13,11 +13,11 @@ from __future__ import annotations
 
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 from pyspark.sql.window import Window  # noqa: F401
 
+from ..materialize import checkpoint
 from ..tables import load_table  # noqa: F401
 from ._core import (  # noqa: F401
     O,
@@ -1304,23 +1304,25 @@ def davies_bouldin_q(spark, sf_dir):
     # tree is identical (same left-to-right Add chain, same
     # ElementAt/Cast nodes), so the IEEE float result and the oracle
     # hash are unchanged.
-    c = e.groupBy(F.col("label").alias("cl")).agg(
-        F.expr(
-            "array("
-            + ",".join(
-                f"CAST(SUM(element_at(v, {i + 1})) AS BIGINT)"
-                for i in range(_EMB_DIM)
-            )
-            + ")"
-        ).alias("cent"),
-        F.count(F.lit(1)).alias("n"),
-        # k-row frame read by the point-distance pass, both k² pair-
-        # join sides and the final report — cut the lineage so the
-        # 64-sum centroid aggregate runs once (14 parquet scans in the
-        # pre-cut plan); localCheckpoint, NOT persist: the columnar
-        # cache build for the 64-long array column measured 2-4×
-        # slower than the checkpoint's one-shot RDD materialization
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    c = checkpoint(
+        e.groupBy(F.col("label").alias("cl")).agg(
+            F.expr(
+                "array("
+                + ",".join(
+                    f"CAST(SUM(element_at(v, {i + 1})) AS BIGINT)"
+                    for i in range(_EMB_DIM)
+                )
+                + ")"
+            ).alias("cent"),
+            F.count(F.lit(1)).alias("n"),
+            # k-row frame read by the point-distance pass, both k² pair-
+            # join sides and the final report — cut the lineage so the
+            # 64-sum centroid aggregate runs once (14 parquet scans in the
+            # pre-cut plan); a checkpoint, NOT persist: the columnar
+            # cache build for the 64-long array column measured 2-4×
+            # slower than the checkpoint's one-shot RDD materialization
+        )
+    )
     _pt = (
         "(CAST(element_at(v, {i}) AS DOUBLE)"
         " - CAST(element_at(cent, {i}) AS DOUBLE) / n)"
@@ -1335,9 +1337,11 @@ def davies_bouldin_q(spark, sf_dir):
         F.col("label").alias("own"),
         (F.sqrt(d2) / 1_000_000).alias("d"),
     )
-    s = dist.groupBy(F.col("own").alias("label")).agg(
-        F.count(F.lit(1)).alias("n_points"), F.avg("d").alias("s_i")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    s = checkpoint(
+        dist.groupBy(F.col("own").alias("label")).agg(
+            F.count(F.lit(1)).alias("n_points"), F.avg("d").alias("s_i")
+        )
+    )
     a, b = c.alias("a"), c.alias("b")
     _ct = (
         "(CAST(element_at(a.cent, {i}) AS DOUBLE) / a.n"

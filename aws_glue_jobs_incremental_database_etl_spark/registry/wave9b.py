@@ -15,11 +15,11 @@ import tempfile  # noqa: F401  (the txn time-travel gate stages a lake)
 
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 from pyspark.sql.window import Window  # noqa: F401
 
+from ..materialize import checkpoint
 from ..tables import load_table  # noqa: F401
 from ._core import (  # noqa: F401
     O,
@@ -89,9 +89,7 @@ def mood_median_q(spark, sf_dir):
     # column totals AND the χ² fold — cut lineages so the cents
     # histogram and the contingency cells each compute once (6 parquet
     # scans in the pre-cut plan)
-    grid = obs.groupBy("v").agg(F.count(F.lit(1)).alias("c")).localCheckpoint(
-        eager=False, storageLevel=StorageLevel.DISK_ONLY
-    )
+    grid = checkpoint(obs.groupBy("v").agg(F.count(F.lit(1)).alias("c")))
     wv = Window.orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -102,11 +100,13 @@ def mood_median_q(spark, sf_dir):
     med = cum.filter(2 * F.col("f") >= F.col("n")).agg(
         F.min("v").alias("m")
     )
-    cells = obs.join(F.broadcast(med), F.lit(True)).groupBy("g").agg(
-        F.sum(F.when(F.col("v") > F.col("m"), 1).otherwise(0)).alias("a"),
-        F.count(F.lit(1)).alias("n_g"),
-        F.first("m").alias("m"),
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    cells = checkpoint(
+        obs.join(F.broadcast(med), F.lit(True)).groupBy("g").agg(
+            F.sum(F.when(F.col("v") > F.col("m"), 1).otherwise(0)).alias("a"),
+            F.count(F.lit(1)).alias("n_g"),
+            F.first("m").alias("m"),
+        )
+    )
     tot = cells.agg(F.sum("a").alias("ta"), F.sum("n_g").alias("n"))
     ea = F.col("n_g") * F.col("ta").cast("double") / F.col("n")
     eb = F.col("n_g") * (F.col("n") - F.col("ta")).cast("double") / F.col("n")
@@ -1517,23 +1517,20 @@ def rich_club_q(spark, sf_dir):
         F.col("l_partkey").cast("bigint").alias("p"),
         F.col("l_suppkey").cast("bigint").alias("s"),
     ).distinct()
-    edges = (
+    edges = checkpoint(
         postings_pairs(e, "p", "s", 256, "part-degree")
         .select(F.col("s_a").alias("u"), F.col("s_b").alias("v"))
         .distinct()
         # edges feed deg AND the φ(k) edge count, deg feeds nk AND both
         # ek sides: without lineage cuts every consumer re-runs the
         # capped part-keyed self-join — the before-plan held 28 parquet
-        # scans (plans/r11/rich_club_suppliers_before.txt).  DISK_ONLY,
-        # the closeness/khop convention for corpus-scaled frames.
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        # scans (plans/r11/rich_club_suppliers_before.txt).
     )
-    deg = (
+    deg = checkpoint(
         edges.select(F.col("u").alias("s"))
         .unionAll(edges.select(F.col("v").alias("s")))
         .groupBy("s")
         .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     ks = spark.range(1).select(
         F.explode(F.array(F.lit(4), F.lit(8), F.lit(16))).alias("k")

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .fsutil import dir_bytes
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -47,27 +49,6 @@ _SCHEMA_CACHE: dict[tuple[str, int, int], T.StructType] = {}
 # sf_dir -> total parquet bytes (immutable testdata; cached forever).
 _DIR_BYTES: dict[str, int] = {}
 
-# id(session) -> last initialPartitionNum set on it (see
-# tune_shuffle_for_input).
-_LAST_TUNED: dict[int, int] = {}
-
-
-def _dir_bytes(sf_dir: str) -> int:
-    b = _DIR_BYTES.get(sf_dir)
-    if b is None:
-        b = 0
-        try:
-            with os.scandir(sf_dir) as it:
-                for e in it:
-                    try:
-                        b += e.stat().st_size
-                    except OSError:
-                        pass
-        except OSError:
-            pass
-        _DIR_BYTES[sf_dir] = b
-    return b
-
 
 def tune_shuffle_for_input(spark: SparkSession, sf_dir: str) -> None:
     """Derive AQE's ``initialPartitionNum`` from the INPUT SIZE instead
@@ -90,16 +71,14 @@ def tune_shuffle_for_input(spark: SparkSession, sf_dir: str) -> None:
             "SPARK_GRAFT_INITIAL_PARTITIONS", str(max(256, 8 * cpus))
         )
     )
-    n = min(cap, max(cpus, _dir_bytes(sf_dir) // (1 << 20)))
-    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    # memo of the last value set per live session: load_table runs
-    # hundreds of times per bench and each conf.get/.set is a py4j
-    # round-trip
-    if _LAST_TUNED.get(id(spark)) == n:
-        return
+    in_bytes = _DIR_BYTES.get(sf_dir)
+    if in_bytes is None:
+        in_bytes = _DIR_BYTES[sf_dir] = dir_bytes(sf_dir)
+    n = min(cap, max(cpus, in_bytes // (1 << 20)))
     try:
-        spark.conf.set(key, str(n))
-        _LAST_TUNED[id(spark)] = n
+        spark.conf.set(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(n)
+        )
     except Exception:
         pass  # non-settable session build — keep going
 
