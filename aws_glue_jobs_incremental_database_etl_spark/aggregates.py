@@ -27,20 +27,18 @@ last committed one is SKIPPED, making the fold exactly-once end to
 end.  Without a batch_id (ad-hoc batch folds), run from exactly-once
 inputs (txn.py staging) or dedup upstream.
 
-State publishes as versioned ``state-<n>`` directories via staging +
-ONE atomic rename (the ``sketch_fold_writer`` commit discipline): a
-crash at any point leaves the previous committed version readable —
-no cur→trash/staging→cur window where the summary is missing.
+State is versioned ``state-<n>`` directories committed through
+``fsutil.publish``.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .fsutil import join_path, publish, versions
 
 _MERGEABLE = ("sum", "count", "min", "max", "approx_distinct")
 
@@ -112,20 +110,11 @@ class IncrementalAggregate:
 
     # -- the operation -----------------------------------------------------
 
-    def _committed(self) -> list[int]:
-        if not os.path.isdir(self.path):
-            return []
-        return sorted(
-            int(d.split("-", 1)[1])
-            for d in os.listdir(self.path)
-            if d.startswith("state-")
-        )
-
     def _current_dir(self) -> str:
-        vs = self._committed()
+        vs = versions(self.path, "state-")
         if not vs:
             raise FileNotFoundError(f"no committed summary under {self.path}")
-        return os.path.join(self.path, f"state-{vs[-1]}")
+        return join_path(self.path, f"state-{vs[-1]}")
 
     def apply_batch(
         self, batch: DataFrame, batch_id: int | None = None
@@ -148,7 +137,7 @@ class IncrementalAggregate:
         summary is orders of magnitude smaller than its fact table.
         """
         spark = batch.sparkSession
-        committed = self._committed()
+        committed = versions(self.path, "state-", spark)
         if batch_id is not None:
             batch_id = int(batch_id)
             if committed and batch_id <= committed[-1]:
@@ -168,15 +157,14 @@ class IncrementalAggregate:
             if batch_id is not None
             else (committed[-1] + 1 if committed else 1)
         )
-        staging = os.path.join(self.path, f".staging-{new_v}")
-        if os.path.exists(staging):
-            shutil.rmtree(staging)  # half-written crash leftovers
-        merged.write.mode("overwrite").parquet(staging)
-        os.rename(staging, os.path.join(self.path, f"state-{new_v}"))
-        for old in committed:  # GC strictly after the commit point
-            shutil.rmtree(
-                os.path.join(self.path, f"state-{old}"), ignore_errors=True
-            )
+        publish(
+            self.path,
+            "state-",
+            new_v,
+            merged.write.mode("overwrite").parquet,
+            replaces=[f"state-{v}" for v in committed],
+            spark=spark,
+        )
         return {
             "keys_total": spark.read.parquet(self._current_dir()).count(),
             "existed": 1 if committed else 0,

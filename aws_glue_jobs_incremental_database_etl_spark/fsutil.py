@@ -1,24 +1,49 @@
-"""Filesystem abstraction for the metadata-plumbing modules (the
-dedup-index snapshots/compaction and the staged-commit transaction
-log): plain local paths use the ``os``/``shutil`` fast path, any
-``scheme://`` path resolves through the Hadoop FileSystem API — so
-``file://`` (the hermetic object-store stand-in in tests), ``hdfs://``
-and ``s3a://`` (given the connector jars on the Spark classpath) all
-work with the same pinned-listing / staging-rename / manifest
-contracts.  An unsupported scheme fails loudly at ``getFileSystem``,
-never silently reads an empty directory.
+"""Filesystem abstraction and the one commit protocol for the
+metadata plumbing and every piece of incremental state (dedup-index
+compaction, the staged-commit transaction log, streaming sinks and
+sketch folds, the incremental aggregate, top-k and join view): plain
+local paths use the ``os``/``shutil`` fast path, any ``scheme://`` path
+resolves through the Hadoop FileSystem API — so ``file://`` (the
+hermetic object-store stand-in in tests), ``hdfs://`` and ``s3a://``
+(given the connector jars on the Spark classpath) all work with the
+same contracts.  An unsupported scheme fails loudly at
+``getFileSystem``, never silently reads an empty directory.
+
+The commit protocol (:func:`publish`), stated once:
+
+- **staging name** — an entry ``<root>/<prefix><id>`` is written into
+  ``<root>/.staging-<id>`` (dot-prefixed, so the parquet reader and
+  every listing skip it); debris of a crashed earlier attempt is
+  cleared first;
+- **commit point** — ONE rename of the staging dir to its final name;
+  before it readers see the previous state, after it the new one, so a
+  crash at any point leaves a complete committed state readable, and
+  an id whose final entry exists is a replay and is skipped;
+- **GC after commit** — entries the new one supersedes are named in
+  its ``_REPLACES`` manifest (an underscore file, invisible to the
+  parquet reader) and deleted strictly after the rename;
+- **heal before read** — a crash between the rename and the GC leaves
+  both generations on disk; readers of state that unions entries call
+  :func:`heal` first, which finishes the GC from the manifest.
+  Versioned state (:func:`versions`) reads only the newest entry and
+  needs no heal: the next publish supersedes every older one.
+
+Whole-tree swaps (:func:`swap_tree`) rename the live tree to a trash
+name, the staged tree to the live name, roll back if that fails, and
+delete the trash last; ``maintenance.vacuum_temp_trees`` reclaims what
+a crash leaks.
 
 Note on atomicity: ``rename`` is every caller's commit point — atomic
-on POSIX and HDFS, a copy on S3A; all callers pair it with an
-idempotent heal/recover pass, which is what absorbs the non-atomic
-window on object stores.
+on POSIX and HDFS, a copy on S3A; the replay skip and :func:`heal` are
+what absorb the non-atomic window on object stores.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Iterator
+import time
+from collections.abc import Callable, Iterable, Iterator
 
 
 def join_path(base: str, *parts: str) -> str:
@@ -240,3 +265,83 @@ def fs_for(path: str, spark=None):
                 "reach the Hadoop FileSystem API"
             )
     return HadoopFS(spark, path)
+
+
+def publish(
+    root: str,
+    prefix: str,
+    id,
+    write: Callable[[str], None],
+    *,
+    replaces: Iterable[str] = (),
+    spark=None,
+) -> str:
+    """Commit ``<root>/<prefix><id>`` by the protocol above: ``write``
+    fills the staging path, one rename publishes it, and each entry of
+    ``replaces`` (names under ``root``) is deleted after the rename.
+    An already-committed id is returned untouched (replay skip).
+    Returns the final path."""
+    fs = fs_for(root, spark)
+    name = f"{prefix}{id}"
+    final = join_path(root, name)
+    if fs.exists(final):
+        return final
+    staging = join_path(root, f".staging-{id}")
+    fs.delete(staging)
+    write(staging)
+    victims = [v for v in replaces if v != name]
+    if victims:
+        fs.write_text(join_path(staging, "_REPLACES"), "\n".join(victims))
+    fs.mkdirs(root)
+    fs.rename(staging, final)  # the commit point
+    for v in victims:
+        fs.delete(join_path(root, v))
+    return final
+
+
+def versions(root: str, prefix: str, spark=None) -> list[int]:
+    """Sorted int ids of the committed ``<prefix><n>`` entries under
+    ``root``; ``[]`` when ``root`` is missing."""
+    fs = fs_for(root, spark)
+    if not fs.isdir(root):
+        return []
+    return sorted(
+        int(e[len(prefix) :])
+        for e in fs.listdir(root)
+        if e.startswith(prefix) and e[len(prefix) :].isdigit()
+    )
+
+
+def heal(root: str, prefix: str, spark=None) -> None:
+    """Finish an interrupted GC: delete every entry still present that
+    a committed ``<prefix>*`` entry's ``_REPLACES`` manifest names.
+    Idempotent; a no-op when nothing is pending or ``root`` is
+    missing."""
+    fs = fs_for(root, spark)
+    if not fs.isdir(root):
+        return
+    for e in fs.listdir(root):
+        if not e.startswith(prefix):
+            continue
+        manifest = join_path(root, e, "_REPLACES")
+        if not fs.exists(manifest):
+            continue
+        for victim in fs.read_text(manifest).splitlines():
+            if victim and victim != e:
+                fs.delete(join_path(root, victim))
+
+
+def swap_tree(live: str, staged: str, spark=None) -> None:
+    """Replace the tree at ``live`` with the one at ``staged``: live →
+    ``<live>.__trash_<ms>``, staged → live (rolled back if it fails),
+    then the trash is deleted.  A crash leaves either the old or the
+    new complete tree at ``live``."""
+    fs = fs_for(live, spark)
+    trash = f"{live}.__trash_{int(time.time() * 1000)}"
+    fs.rename(live, trash)
+    try:
+        fs.rename(staged, live)
+    except Exception:
+        fs.rename(trash, live)
+        raise
+    fs.delete(trash)

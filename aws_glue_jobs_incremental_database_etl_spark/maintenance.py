@@ -28,7 +28,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .fsutil import dir_bytes
+from .fsutil import dir_bytes, swap_tree
 from .sinks import SUPPORTED_FORMATS
 
 
@@ -128,17 +128,7 @@ def compact_partitioned_table(
     if fmt == "csv":
         writer = writer.option("header", "true")
     writer.format(fmt).save(tmp)
-
-    # atomic-ish swap: old → trash, new → live, trash deleted last so
-    # a crash mid-swap leaves either the old or the new complete tree
-    trash = f"{path}.__trash_{int(time.time() * 1000)}"
-    os.rename(path, trash)
-    try:
-        os.rename(tmp, path)
-    except Exception:
-        os.rename(trash, path)  # roll back
-        raise
-    shutil.rmtree(trash, ignore_errors=True)
+    swap_tree(path, tmp)
 
     return {
         "files_before": files_before,

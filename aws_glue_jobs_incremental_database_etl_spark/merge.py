@@ -42,6 +42,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .fsutil import swap_tree
 from .materialize import cached
 from .sinks import SUPPORTED_FORMATS
 
@@ -207,17 +208,9 @@ def scd2_apply(
     # count the old generation BEFORE the swap — its files move away
     n_history, n_current = history.count(), current.count()
 
-    stamp = int(time.time() * 1000)
-    staging = f"{path}.__merge_{stamp}"
+    staging = f"{path}.__merge_{int(time.time() * 1000)}"
     out.write.parquet(staging)
-    trash = f"{path}.__merge_trash_{stamp}"
-    os.rename(path, trash)
-    try:
-        os.rename(staging, path)
-    except Exception:
-        os.rename(trash, path)
-        raise
-    shutil.rmtree(trash, ignore_errors=True)
+    swap_tree(path, staging)
 
     final = spark.read.parquet(path)
     total = final.count()
@@ -360,8 +353,8 @@ def merge_upsert(
                 parts.append(f"{k}={v}")
             return os.path.join(base, *parts)
 
-        trash = f"{path}.__merge_trash_{stamp}"
         if spec:
+            trash = f"{path}.__merge_trash_{stamp}"
             os.makedirs(trash, exist_ok=True)
             for i, row in enumerate(affected):
                 live, staged = _partdir(path, row), _partdir(staging, row)
@@ -371,14 +364,9 @@ def merge_upsert(
                     os.makedirs(os.path.dirname(live), exist_ok=True)
                     os.rename(staged, live)
             shutil.rmtree(staging, ignore_errors=True)
+            shutil.rmtree(trash, ignore_errors=True)
         else:
-            os.rename(path, trash)
-            try:
-                os.rename(staging, path)
-            except Exception:
-                os.rename(trash, path)
-                raise
-        shutil.rmtree(trash, ignore_errors=True)
+            swap_tree(path, staging)
 
         return {
             "rows_written": int(obs.get["n"]),

@@ -35,45 +35,9 @@ from .dedup import (
     shingles_from_tokens,
     tokens_of,
 )
-
-
-from ..fsutil import HadoopFS as _HadoopFS  # noqa: F401  (re-export)
-from ..fsutil import LocalFS as _LocalFS  # noqa: F401  (re-export)
+from ..fsutil import fs_for, heal, publish, versions
 from ..fsutil import join_path as _join
 from ..materialize import cached, checkpoint
-
-
-def _fs_for(spark: SparkSession, path: str):
-    """Pick the index filesystem backend (``fsutil``): plain paths use
-    the local ``os`` fast path; any ``scheme://`` path resolves
-    through the Hadoop FileSystem API (VERDICT r7 #3 — previously
-    remote schemes raised).  An unsupported scheme still fails loudly
-    (at ``getFileSystem``), never silently reads an empty index."""
-    if "://" in path:
-        return _HadoopFS(spark, path)
-    return _LocalFS()
-
-
-def _heal_index(fs, path: str) -> None:
-    """Finish an interrupted compaction GC: a committed ``compact-<n>``
-    directory lists the loose part files / older compact dirs it
-    superseded in its ``_REPLACES`` manifest — delete any still
-    present (a crash landed between the compaction commit and its GC;
-    reading both would double-count fingerprints and inflate
-    ``shared``).  Idempotent; no-op when nothing is pending."""
-    if not fs.isdir(path):
-        return
-    for e in fs.listdir(path):
-        p = _join(path, e)
-        if not (e.startswith("compact-") and fs.isdir(p)):
-            continue
-        manifest = _join(p, "_REPLACES")
-        if not fs.exists(manifest):
-            continue
-        for victim in fs.read_text(manifest).splitlines():
-            if not victim or victim == e:
-                continue
-            fs.delete(_join(path, victim))
 
 
 def _index_files(fs, path: str) -> list[str]:
@@ -109,15 +73,17 @@ def _load_snapshot(spark: SparkSession, path: str) -> DataFrame | None:
     index.  On object storage the same pin is the manifest listing; at
     100 TB a directory listing per batch is the normal metadata cost.
 
-    Manifest-aware: heals any interrupted compaction GC first, then
-    lists loose part files + committed ``compact-<n>`` contents
-    (:func:`_index_files`).  Scheme'd paths resolve through the Hadoop
-    FileSystem API (:func:`_fs_for`); an unsupported scheme raises
-    rather than silently reading an empty index."""
-    fs = _fs_for(spark, path)
+    Manifest-aware: heals any interrupted compaction GC first
+    (reading both generations would double-count fingerprints and
+    inflate ``shared``), then lists loose part files + committed
+    ``compact-<n>`` contents (:func:`_index_files`).  Scheme'd paths
+    resolve through the Hadoop FileSystem API (``fsutil.fs_for``); an
+    unsupported scheme raises rather than silently reading an empty
+    index."""
+    fs = fs_for(path, spark)
     if not fs.exists(path):
         return None
-    _heal_index(fs, path)
+    heal(path, "compact-", spark)
     files = _index_files(fs, path)
     if not files:
         return None
@@ -132,13 +98,11 @@ def _compact_index(spark: SparkSession, path: str) -> int:
     every ingested batch (VERDICT r6 #4; log-structured compaction,
     the ``IncrementalJoinView.compact`` pattern on a flat index dir).
 
-    Crash safety: the compacted dir carries a ``_REPLACES`` manifest
-    naming everything it supersedes, publishes via staging + ONE
-    atomic rename, and GCs the victims strictly after the commit;
-    ``_heal_index`` (run before every snapshot read) finishes the GC
-    if a crash interrupts it — no interleaving double-counts.
-    Concurrent appends are NOT coordinated against (same single-writer
-    contract as ``dedup_batch`` itself).  The GC also extends that
+    Crash safety: the compacted dir is committed by ``fsutil.publish``
+    superseding everything it folds, and every snapshot read heals
+    first — no interleaving double-counts.  Concurrent appends are NOT
+    coordinated against (same single-writer contract as
+    ``dedup_batch`` itself).  The GC also extends that
     contract in time: it deletes the very files a still-lazy
     ``_load_snapshot``/``indexed_ids`` result pins, so compact only
     when no earlier-returned LAZY index frame is outstanding —
@@ -147,10 +111,10 @@ def _compact_index(spark: SparkSession, path: str) -> int:
     frames must be materialized first.
 
     Returns the number of superseded entries (0 = nothing to do)."""
-    fs = _fs_for(spark, path)
+    fs = fs_for(path, spark)
     if not fs.isdir(path):
         return 0
-    _heal_index(fs, path)
+    heal(path, "compact-", spark)
     victims = [
         e
         for e in fs.listdir(path)
@@ -167,25 +131,17 @@ def _compact_index(spark: SparkSession, path: str) -> int:
     # ~64 MB target files: small indexes fold to one file, large ones
     # keep enough files for parallel reads
     n_out = max(1, min(256, total_bytes // (64 << 20) + 1))
-    next_id = 1 + max(
-        (
-            int(e.split("-", 1)[1])
-            for e in victims
-            if e.startswith("compact-") and e.split("-", 1)[1].isdigit()
-        ),
-        default=0,
+    cid = f"compact-{1 + max(versions(path, 'compact-', spark), default=0)}"
+    publish(
+        path,
+        "",
+        cid,
+        spark.read.parquet(*files).coalesce(int(n_out)).write.mode(
+            "overwrite"
+        ).parquet,
+        replaces=victims,
+        spark=spark,
     )
-    cid = f"compact-{next_id}"
-    staging = _join(path, f".staging-{cid}")
-    if fs.exists(staging):
-        fs.delete(staging)
-    spark.read.parquet(*files).coalesce(int(n_out)).write.mode(
-        "overwrite"
-    ).parquet(staging)
-    fs.write_text(_join(staging, "_REPLACES"), "\n".join(victims))
-    fs.rename(staging, _join(path, cid))  # commit point
-    for e in victims:  # GC strictly after the commit
-        fs.delete(_join(path, e))
     return len(victims)
 
 
@@ -313,7 +269,7 @@ class MinHashIndex:
         corpus text.
         """
         spark = batch_df.sparkSession
-        _ensure_meta(_fs_for(spark, self.path), self.path, self._meta())
+        _ensure_meta(fs_for(self.path, spark), self.path, self._meta())
         with cached(self._signatures(batch_df, id_col, text_col)) as new_sig:
             new_banded = self._banded(new_sig)
 
@@ -482,7 +438,7 @@ class WinnowIndex:
         wrong answer — survivors re-executing against the post-append
         index double-counted ``shared`` and halved the threshold)."""
         spark = batch_df.sparkSession
-        _ensure_meta(_fs_for(spark, self.path), self.path, self._meta())
+        _ensure_meta(fs_for(self.path, spark), self.path, self._meta())
         with cached(self._fps(batch_df, id_col, text_col)) as new_fp:
 
             index = self._load(spark)

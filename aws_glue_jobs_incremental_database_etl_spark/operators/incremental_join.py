@@ -21,45 +21,27 @@ O(corpus).  Store the accumulators bucketed by the join key and even
 that filtered scan prunes to touched buckets.
 
 Exactly-once: state lives in three ``batch=<id>``-partitioned parquet
-dirs (``left/``, ``right/``, ``view/``).  Every commit is
-write-to-staging + one atomic rename; the VIEW partition doubles as
-the batch's commit marker, so a replayed ``batch_id`` is skipped, and
-a crash between an accumulator commit and the view commit replays
-safely because accumulator reads EXCLUDE the in-flight batch's own
-partition (the identity always sees pre-batch state).  This is
-``sketch_fold_writer``'s contract adapted to append-dir state.
+dirs (``left/``, ``right/``, ``view/``), each partition committed by
+``fsutil.publish``.  The VIEW partition doubles as the batch's commit
+marker, so a replayed ``batch_id`` is skipped, and a crash between an
+accumulator commit and the view commit replays safely because
+accumulator reads EXCLUDE the in-flight batch's own partition (the
+identity always sees pre-batch state).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fsutil import heal, publish, versions
 from ..materialize import checkpoint
 
-
-def _heal(d: str) -> None:
-    """Finish an interrupted compaction GC: any committed
-    ``batch=compact-*`` partition lists the partitions it superseded
-    in its ``_REPLACES`` manifest — delete any still present (a crash
-    landed between the compaction commit and its GC; reading both
-    would double-count).  Idempotent; no-op when nothing is pending."""
-    if not os.path.isdir(d):
-        return
-    for e in os.listdir(d):
-        if not e.startswith("batch=compact-"):
-            continue
-        manifest = os.path.join(d, e, "_REPLACES")
-        if not os.path.exists(manifest):
-            continue
-        with open(manifest) as f:
-            for victim in f.read().splitlines():
-                if victim and victim != e:
-                    shutil.rmtree(os.path.join(d, victim), ignore_errors=True)
+# compacted partitions: the entries whose ``_REPLACES`` manifests heal reads
+_COMPACT = "batch=compact-"
 
 
 class IncrementalJoinView:
@@ -80,7 +62,7 @@ class IncrementalJoinView:
         """Committed state at ``d``, minus ``exclude_batch``'s own
         partition (replay safety), minus the engine-added ``batch``
         partition column."""
-        _heal(d)  # finish any interrupted compaction GC before reading
+        heal(d, _COMPACT)
         if not os.path.isdir(d) or not any(
             e.startswith("batch=") for e in os.listdir(d)
         ):
@@ -92,15 +74,7 @@ class IncrementalJoinView:
         return df.drop("batch")
 
     def _commit(self, df: DataFrame, root: str, batch_id: str) -> None:
-        final = os.path.join(root, f"batch={batch_id}")
-        if os.path.exists(final):
-            return  # replay: this piece already committed
-        tmp = os.path.join(root, f".staging-{batch_id}")
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)  # half-written crash leftovers
-        df.write.mode("overwrite").parquet(tmp)
-        os.makedirs(root, exist_ok=True)
-        os.rename(tmp, final)
+        publish(root, "batch=", batch_id, df.write.mode("overwrite").parquet)
 
     # -- the fold ----------------------------------------------------------
 
@@ -284,13 +258,9 @@ class WeightedIncrementalJoinView(IncrementalJoinView):
         delta-vs-accumulated join (VERDICT r4 #4; the retraction
         analogue of log-structured compaction).
 
-        Crash safety: the compacted partition carries a ``_REPLACES``
-        manifest (an underscore file — invisible to the parquet
-        reader) listing the partitions it supersedes, and publishes
-        via staging + ONE atomic rename; the superseded partitions
-        are deleted strictly after the commit, and ``_heal`` (run
-        before every read/fold) finishes that deletion if a crash
-        interrupted it — so no interleaving double-counts.
+        Crash safety: the compacted partition is committed by
+        ``fsutil.publish`` superseding the partitions it nets, and
+        every read heals first, so no interleaving double-counts.
 
         The LATEST partition is never compacted: its ``batch=<id>``
         marker is what makes a Structured-Streaming replay of the
@@ -304,7 +274,7 @@ class WeightedIncrementalJoinView(IncrementalJoinView):
             ("left", self.left_dir),
             ("right", self.right_dir),
         ):
-            _heal(d)
+            heal(d, _COMPACT)
             parts = sorted(
                 e
                 for e in (os.listdir(d) if os.path.isdir(d) else [])
@@ -318,20 +288,17 @@ class WeightedIncrementalJoinView(IncrementalJoinView):
                 parts, key=lambda e: os.path.getmtime(os.path.join(d, e))
             )
             victims = [e for e in parts if e != newest]
-            n_compact = sum(1 for e in parts if e.startswith("batch=compact-"))
-            cid = f"compact-{n_compact + 1}"
+            cid = f"compact-{max(versions(d, _COMPACT), default=0) + 1}"
             netted = self._net_rows(
                 spark.read.parquet(*[os.path.join(d, e) for e in victims])
             )
-            tmp = os.path.join(d, f".staging-{cid}")
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp)
-            netted.write.mode("overwrite").parquet(tmp)
-            with open(os.path.join(tmp, "_REPLACES"), "w") as f:
-                f.write("\n".join(victims))
-            os.rename(tmp, os.path.join(d, f"batch={cid}"))  # commit
-            for e in victims:  # GC strictly after the commit point
-                shutil.rmtree(os.path.join(d, e), ignore_errors=True)
+            publish(
+                d,
+                "batch=",
+                cid,
+                netted.write.mode("overwrite").parquet,
+                replaces=victims,
+            )
             stats[name] = len(victims)
         return stats
 
@@ -348,7 +315,7 @@ def read_changes(view: IncrementalJoinView, spark: SparkSession) -> DataFrame:
     import os as _os
 
     d = view.view_dir
-    _heal(d)
+    heal(d, _COMPACT)
     if not _os.path.isdir(d) or not any(
         e.startswith("batch=") for e in _os.listdir(d)
     ):

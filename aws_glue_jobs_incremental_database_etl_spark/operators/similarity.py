@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..fsutil import join_path, publish, versions
 from ..functions.vectors import cosine_similarity, dot_product
 from ..materialize import checkpoint
 
@@ -702,40 +703,16 @@ def cosine_topk_incremental(
     is monotone-mergeable — ``topk(A ∪ B) = topk(topk(A) ∪ topk(B))``
     under the same total order (round(cosine) DESC, id ASC) — so the
     historical corpus is NEVER re-scanned: per batch the cost is one
-    map-only pass over the delta plus a ≤2k-row merge.  State
-    publishes as versioned ``topk-<n>`` directories via
-    write-to-staging + ONE atomic rename (the ``sketch_fold_writer``
-    commit discipline): the new version is only visible after its
-    single rename, so a crash at ANY point leaves the previous
-    committed version readable — there is no window where no state
-    dir exists (the flaw of a cur→old, tmp→cur two-rename scheme).
-    Superseded versions are GC'd strictly after the commit point.
+    map-only pass over the delta plus a ≤2k-row merge.  State is
+    versioned ``topk-<n>`` directories committed by ``fsutil.publish``.
     Returns the new top-k DataFrame (read from the committed state).
     """
-    import os
-    import shutil
-
-    def _versions() -> list[int]:
-        if not os.path.isdir(state_path):
-            return []
-        return sorted(
-            int(d.split("-", 1)[1])
-            for d in os.listdir(state_path)
-            if d.startswith("topk-")
-        )
-
     delta = cosine_topk(batch, query_vec, k, id_col, vec_col, round_to)
-    committed = _versions()
-    legacy = os.path.join(state_path, "topk")  # pre-versioning layout
+    committed = versions(state_path, "topk-", spark)
     if committed:
         prev = spark.read.parquet(
-            os.path.join(state_path, f"topk-{committed[-1]}")
+            join_path(state_path, f"topk-{committed[-1]}")
         )
-    elif os.path.exists(legacy):
-        prev = spark.read.parquet(legacy)
-    else:
-        prev = None
-    if prev is not None:
         merged = (
             prev.unionByName(delta)
             .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
@@ -743,18 +720,14 @@ def cosine_topk_incremental(
         )
     else:
         merged = delta
-    new_v = (committed[-1] + 1) if committed else 1
-    tmp = os.path.join(state_path, f".staging-{new_v}")
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)  # half-written crash leftovers
-    merged.write.mode("overwrite").parquet(tmp)
-    cur = os.path.join(state_path, f"topk-{new_v}")
-    os.rename(tmp, cur)  # the single commit point
-    for old in committed:  # GC strictly after the commit
-        shutil.rmtree(
-            os.path.join(state_path, f"topk-{old}"), ignore_errors=True
-        )
-    shutil.rmtree(legacy, ignore_errors=True)
+    cur = publish(
+        state_path,
+        "topk-",
+        (committed[-1] + 1) if committed else 1,
+        merged.write.mode("overwrite").parquet,
+        replaces=[f"topk-{v}" for v in committed],
+        spark=spark,
+    )
     return spark.read.parquet(cur)
 
 

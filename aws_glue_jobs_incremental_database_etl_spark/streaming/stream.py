@@ -12,6 +12,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..fsutil import fs_for, join_path, publish, versions
+
 
 def incremental_file_stream(
     spark: SparkSession,
@@ -69,6 +71,22 @@ def stream_dedup(
     return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
+def _drain(
+    stream_df: DataFrame, checkpoint: str, fn, output_mode: str = "update"
+) -> None:
+    """Run ``fn`` as the ``foreachBatch`` sink over everything currently
+    available, then stop: one bookmark-delimited run, with the
+    checkpoint as the bookmark."""
+    (
+        stream_df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def run_available_now(
     stream_df: DataFrame,
     checkpoint: str,
@@ -88,23 +106,20 @@ def run_available_now(
     duplicate rows; a plain ``mode("append")`` here was the one
     remaining at-least-once writer, migrated round 5).  Read update
     output back with ``spark.read.parquet(f"{out_dir}/batch-*")``."""
-    if output_mode == "append":
-        writer = (
-            stream_df.writeStream.format("parquet")
-            .option("checkpointLocation", checkpoint)
-            .option("path", out_dir)
-            .outputMode("append")
+    if output_mode != "append":
+        _drain(
+            stream_df, checkpoint, exactly_once_batch_writer(out_dir), output_mode
         )
-    else:
-        writer = (
-            stream_df.writeStream.foreachBatch(
-                exactly_once_batch_writer(out_dir)
-            )
-            .option("checkpointLocation", checkpoint)
-            .outputMode(output_mode)
-        )
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+        return
+    (
+        stream_df.writeStream.format("parquet")
+        .option("checkpointLocation", checkpoint)
+        .option("path", out_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def stream_interval_join(
@@ -195,14 +210,7 @@ def run_aggregate_maintenance(
             # is skipped inside apply_batch (exactly-once fold)
             aggregate.apply_batch(batch, batch_id=batch_id)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, checkpoint, _fold)
 
 
 def run_cdc_merge(
@@ -244,14 +252,7 @@ def run_cdc_merge(
                 delete_col=delete_col,
             )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, checkpoint, _apply)
 
 
 def run_streaming_ingestion(
@@ -307,7 +308,7 @@ def run_streaming_ingestion(
     between the corpus commit and the compaction replays the epoch
     into the skip path (compaction simply waits for the next cadence
     hit), and a crash INSIDE compaction heals on the next index read
-    (the ``_REPLACES`` manifest contract).
+    (``fsutil.heal``).
     """
     from ..operators.incremental_dedup import MinHashIndex, WinnowIndex
     from ..operators.text import quality_filter
@@ -320,36 +321,28 @@ def run_streaming_ingestion(
         raise ValueError(f"engine must be minhash or winnow, got {engine}")
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
-        final = os.path.join(out_dir, f"batch-{batch_id}")
-        if os.path.exists(final):
-            return  # replayed epoch, fully committed: skip wholesale
+        spark = batch.sparkSession
+        if fs_for(out_dir, spark).exists(join_path(out_dir, f"batch-{batch_id}")):
+            return  # replayed epoch, fully committed: skip before the index
         if min_quality is not None:
             batch = quality_filter(batch, text_col, min_quality)
         survivors = index.dedup_batch(batch, id_col, text_col)
-        tmp = os.path.join(out_dir, f".staging-{batch_id}")
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        survivors.write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)  # the commit point
+        publish(
+            out_dir,
+            "batch-",
+            batch_id,
+            survivors.write.mode("overwrite").parquet,
+            spark=spark,
+        )
         if (
             compact_every_n_batches
             and (batch_id + 1) % compact_every_n_batches == 0
         ):
             # strictly after the corpus commit: the survivors lineage
             # is already severed from the files compaction GCs
-            index.compact(batch.sparkSession)
+            index.compact(spark)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, checkpoint, _ingest)
 
 
 def streaming_cms_token_counts(
@@ -371,89 +364,63 @@ def streaming_cms_token_counts(
 
     Replay safety is EXACTLY-ONCE, not just at-least-once: the folded
     sketch is stateful, so re-merging a replayed batch would double
-    count.  The maintainer therefore commits each fold as
-    ``state-<batch_id>`` via staging + atomic rename (the same commit
-    point as ``exactly_once_batch_writer``) and SKIPS any batch id at
-    or below the last committed state — a crash after the rename but
-    before the checkpoint commit replays the batch into a no-op.
-    Read the current sketch with :func:`read_sketch`.
+    count; :func:`sketch_fold_writer` skips any batch id at or below
+    the last committed state.  Read the current sketch with
+    :func:`read_sketch`.
     """
     from ..functions.cms import cms_build, cms_merge
 
-    q = (
-        stream_df.writeStream.foreachBatch(
-            sketch_fold_writer(
-                sketch_path,
-                lambda b: cms_build(b, key_col, d=d, w=w),
-                cms_merge,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def _committed_sketch_ids(sketch_path: str) -> list[int]:
-    import os
-
-    if not os.path.isdir(sketch_path):
-        return []
-    return sorted(
-        int(d.split("-", 1)[1])
-        for d in os.listdir(sketch_path)
-        if d.startswith("state-")
+    _drain(
+        stream_df,
+        checkpoint,
+        sketch_fold_writer(
+            sketch_path,
+            lambda b: cms_build(b, key_col, d=d, w=w),
+            cms_merge,
+        ),
     )
 
 
 def read_sketch(spark, sketch_path: str) -> DataFrame:
     """Current value of a sketch maintained by ``sketch_fold_writer``:
     the highest committed ``state-<batch_id>`` directory."""
-    import os
-
-    ids = _committed_sketch_ids(sketch_path)
+    ids = versions(sketch_path, "state-", spark)
     if not ids:
         raise FileNotFoundError(f"no committed sketch state under {sketch_path}")
-    return spark.read.parquet(os.path.join(sketch_path, f"state-{ids[-1]}"))
+    return spark.read.parquet(join_path(sketch_path, f"state-{ids[-1]}"))
 
 
 def sketch_fold_writer(sketch_path: str, build_delta, merge):
     """foreachBatch updater folding per-batch deltas into a persisted
     bounded sketch with EXACTLY-ONCE semantics: batch ids at or below
     the last committed state are skipped (Structured Streaming replays
-    a batch id with identical data, so skip ≡ dedup), and each new
-    state publishes by write-to-staging + one atomic rename — a crash
-    mid-write loses only the staging dir, never the current sketch.
-    Superseded states are garbage-collected after the rename; a crash
-    between rename and GC leaves extra old dirs that the next commit
-    removes.  One sketch path belongs to one stream/checkpoint (batch
-    ids are only monotone within a checkpoint)."""
-    import os
-    import shutil
+    a batch id with identical data, so skip ≡ dedup), and each fold is
+    committed as ``state-<batch_id>`` by ``fsutil.publish``, superseding
+    every older state.  One sketch path belongs to one
+    stream/checkpoint (batch ids are only monotone within a
+    checkpoint)."""
 
     def _update(batch: DataFrame, batch_id: int) -> None:
-        committed = _committed_sketch_ids(sketch_path)
+        spark = batch.sparkSession
+        committed = versions(sketch_path, "state-", spark)
         if committed and batch_id <= committed[-1]:
             return  # replay of an already-folded batch
         delta = build_delta(batch)
         if committed:
-            prev = batch.sparkSession.read.parquet(
-                os.path.join(sketch_path, f"state-{committed[-1]}")
+            prev = spark.read.parquet(
+                join_path(sketch_path, f"state-{committed[-1]}")
             )
             merged = merge(prev, delta)
         else:
             merged = delta
-        tmp = os.path.join(sketch_path, f".staging-{batch_id}")
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)  # half-written crash leftovers
-        merged.write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, os.path.join(sketch_path, f"state-{batch_id}"))
-        for old in committed:  # GC strictly after the commit point
-            shutil.rmtree(
-                os.path.join(sketch_path, f"state-{old}"), ignore_errors=True
-            )
+        publish(
+            sketch_path,
+            "state-",
+            batch_id,
+            merged.write.mode("overwrite").parquet,
+            replaces=[f"state-{v}" for v in committed],
+            spark=spark,
+        )
 
     return _update
 
@@ -478,49 +445,39 @@ def streaming_histogram_quantiles(
     ``read_sketch(...)`` — monitoring percentiles over an unbounded
     ingest without ever re-scanning history.  Same exactly-once
     batch-id-committed fold as the CMS maintainer
-    (``sketch_fold_writer``): replayed batches skip, commits are
-    atomic renames, stale states are GC'd.
+    (``sketch_fold_writer``).
     """
     from ..operators.profile import histogram_sketch, sketch_merge
 
-    q = (
-        stream_df.writeStream.foreachBatch(
-            sketch_fold_writer(
-                sketch_path,
-                lambda b: histogram_sketch(b, value_col, lo, hi, bins),
-                sketch_merge,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream_df,
+        checkpoint,
+        sketch_fold_writer(
+            sketch_path,
+            lambda b: histogram_sketch(b, value_col, lo, hi, bins),
+            sketch_merge,
+        ),
     )
-    q.awaitTermination()
 
 
 def exactly_once_batch_writer(out_dir: str):
     """Batch-id-keyed idempotent writer — the foreachBatch half of an
     EXACTLY-ONCE streaming file sink (upgrade over the at-least-once
-    appends elsewhere in this module): each micro-batch lands in its
-    own ``batch-<id>`` directory via write-to-staging + one atomic
-    rename, and a REPLAYED batch (failure after write, before the
-    checkpoint commit) sees the final directory and skips.  Correct
-    because Structured Streaming guarantees a replayed batch id
-    carries identical data — so skip ≡ dedup.  Same manifest-rename
-    commit point as ``txn.StagedCommit``, scoped per batch."""
-    import os
-    import shutil
+    appends elsewhere in this module): each micro-batch is committed
+    as its own ``batch-<id>`` directory by ``fsutil.publish``, and a
+    REPLAYED batch (failure after write, before the checkpoint commit)
+    finds it committed and skips.  Correct because Structured
+    Streaming guarantees a replayed batch id carries identical data —
+    so skip ≡ dedup."""
 
     def _write(batch: DataFrame, batch_id: int) -> None:
-        final = os.path.join(out_dir, f"batch-{batch_id}")
-        if os.path.exists(final):
-            return  # replay of a committed batch: exactly-once skip
-        tmp = os.path.join(out_dir, f".staging-{batch_id}")
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)  # half-written crash leftovers
-        batch.write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)  # the commit point
+        publish(
+            out_dir,
+            "batch-",
+            batch_id,
+            batch.write.mode("overwrite").parquet,
+            spark=batch.sparkSession,
+        )
 
     return _write
 
@@ -531,14 +488,12 @@ def exactly_once_append(
     """Drain a stream into ``out_dir`` with exactly-once file-sink
     semantics (availableNow trigger); read the result back with
     ``spark.read.parquet(f"{out_dir}/batch-*")``."""
-    q = (
-        stream_df.writeStream.foreachBatch(exactly_once_batch_writer(out_dir))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream_df,
+        checkpoint,
+        exactly_once_batch_writer(out_dir),
+        output_mode="append",
     )
-    q.awaitTermination()
 
 
 def streaming_topk_maintenance(
@@ -562,8 +517,7 @@ def streaming_topk_maintenance(
     skipped on replay (a replayed id carries identical rows, and the
     fold is NOT idempotent at the row level — re-merging cannot
     corrupt a top-k, but skipping is still the cheaper and uniform
-    rule), and each new state publishes by staging + atomic rename.
-    Read the current top-k with :func:`read_sketch`.
+    rule).  Read the current top-k with :func:`read_sketch`.
     """
     from ..operators.similarity import cosine_topk
     from pyspark.sql import functions as F
@@ -575,20 +529,15 @@ def streaming_topk_maintenance(
             .limit(k)
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(
-            sketch_fold_writer(
-                state_path,
-                lambda b: cosine_topk(b, query_vec, k, id_col, vec_col),
-                merge,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream_df,
+        checkpoint,
+        sketch_fold_writer(
+            state_path,
+            lambda b: cosine_topk(b, query_vec, k, id_col, vec_col),
+            merge,
+        ),
     )
-    q.awaitTermination()
 
 
 def streaming_join_view_maintenance(
@@ -617,14 +566,7 @@ def streaming_join_view_maintenance(
             batch_id=batch_id,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, checkpoint, fold)
 
 
 def run_experiment_monitor(
@@ -635,9 +577,8 @@ def run_experiment_monitor(
     currently available, folding each micro-batch's day-level moment
     deltas (exact ×1e4 integers + decimal-widened squares, from
     ``operators.profile.experiment_daily_moments``) into the
-    persisted per-day moment state via :func:`sketch_fold_writer` —
-    exactly-once batch-id commits, staging + atomic-rename publishes,
-    replay-safe.  Because the fold is an ADDITIVE integer merge per
+    persisted per-day moment state via :func:`sketch_fold_writer`
+    (exactly-once batch-id commits).  Because the fold is an ADDITIVE integer merge per
     day, any batch split of the same events produces bit-identical
     state, and :func:`monitor_z_series` over that state equals the
     batch gate bit-for-bit (same shared z expressions)."""
@@ -649,14 +590,7 @@ def run_experiment_monitor(
     writer = sketch_fold_writer(
         state_path, experiment_daily_moments, merge_daily_moments
     )
-    q = (
-        stream_df.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, checkpoint, writer)
 
 
 def monitor_z_series(spark: SparkSession, state_path: str) -> DataFrame:
@@ -679,8 +613,8 @@ def run_drift_monitor(
     available, folding each micro-batch's (event_type, day)-level
     count/sum deltas (exact ×100 integers, from
     ``operators.profile.drift_daily_moments``) into persisted state
-    via :func:`sketch_fold_writer` — exactly-once batch-id commits,
-    staging + atomic-rename publishes, replay-safe.  The fold is an
+    via :func:`sketch_fold_writer` (exactly-once batch-id commits).
+    The fold is an
     ADDITIVE integer merge per (type, day), so any batch split of the
     same events produces bit-identical state, and
     :func:`drift_ph_series` over that state equals the batch gate
@@ -693,14 +627,7 @@ def run_drift_monitor(
     writer = sketch_fold_writer(
         state_path, drift_daily_moments, merge_drift_daily_moments
     )
-    q = (
-        stream_df.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, checkpoint, writer)
 
 
 def drift_ph_series(spark: SparkSession, state_path: str) -> DataFrame:
@@ -735,9 +662,8 @@ def run_srm_monitor(
     """Streaming twin of the sample-ratio-mismatch gate (registry
     ``srm_check_events``): drain everything currently available,
     folding each micro-batch's distinct (user_id, arm) assignments
-    into persisted state via :func:`sketch_fold_writer` —
-    exactly-once batch-id commits, staging + atomic-rename publishes,
-    replay-safe.  The fold is a SET UNION (a user's md5 arm never
+    into persisted state via :func:`sketch_fold_writer`
+    (exactly-once batch-id commits).  The fold is a SET UNION (a user's md5 arm never
     changes), so any batch split of the same events produces an
     identical state set, and :func:`srm_series` over it equals the
     batch gate bit-for-bit (same shared ``profile.srm_report``
@@ -749,14 +675,7 @@ def run_srm_monitor(
     writer = sketch_fold_writer(
         state_path, srm_user_arms, merge_srm_user_arms
     )
-    q = (
-        stream_df.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, checkpoint, writer)
 
 
 def srm_series(spark: SparkSession, state_path: str) -> DataFrame:
@@ -777,9 +696,8 @@ def run_hll_monitor(
     (registry ``hll_distinct_users_daily``): drain everything
     currently available, folding each micro-batch's per-(day, bucket)
     register deltas (``functions.hll.hll_build`` at b = 8) into
-    persisted state via :func:`sketch_fold_writer` — exactly-once
-    batch-id commits, staging + atomic-rename publishes, replay-safe.
-    The fold is a per-(day, bucket) MAX (idempotent, commutative,
+    persisted state via :func:`sketch_fold_writer` (exactly-once
+    batch-id commits).  The fold is a per-(day, bucket) MAX (idempotent, commutative,
     associative), so any batch split of the same events — including
     the same user appearing in every batch — produces bit-identical
     register state, and :func:`hll_daily_series` over it equals the
@@ -802,14 +720,7 @@ def run_hll_monitor(
         )
 
     writer = sketch_fold_writer(state_path, build, merge)
-    q = (
-        stream_df.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, checkpoint, writer)
 
 
 def hll_daily_series(spark: SparkSession, state_path: str) -> DataFrame:

@@ -223,3 +223,229 @@ def test_time_travel_and_expiry_over_viewfs(spark, tmp_path, sf_dir):
         read_table_asof(spark, lake, "tgt_orders", first_seq)
     cur = read_table_asof(spark, lake, "tgt_orders", last_seq)
     assert cur.count() == full.count()
+
+
+# -- the commit protocol (publish / versions / heal / swap_tree) ---------
+
+
+def _ls(p: str) -> list[str]:
+    """Entries of the local mirror, without the Hadoop backend's
+    ``.<name>.crc`` checksum side files."""
+    return sorted(n for n in os.listdir(p) if not n.endswith(".crc"))
+
+
+def _write_text_tree(fs, text: str):
+    """A ``publish`` writer that fills the staging dir through ``fs``."""
+
+    def write(staging: str) -> None:
+        fs.mkdirs(staging)
+        fs.write_text(f"{staging}/data", text)
+
+    return write
+
+
+def test_publish_clears_debris_skips_committed_and_gcs(backend, spark):
+    from aws_glue_jobs_incremental_database_etl_spark.fsutil import publish
+
+    fs, root, local = backend
+    os.makedirs(f"{local}/s/.staging-1/junk")  # a crashed attempt
+    final = publish(f"{root}/s", "state-", 1, _write_text_tree(fs, "v1"), spark=spark)
+    assert final == f"{root}/s/state-1"
+    assert _ls(f"{local}/s") == ["state-1"]
+    assert _ls(f"{local}/s/state-1") == ["data"]  # debris gone
+
+    def must_not_write(_staging):
+        raise AssertionError("a committed id was rewritten")
+
+    assert publish(f"{root}/s", "state-", 1, must_not_write, spark=spark) == final
+
+    publish(
+        f"{root}/s",
+        "state-",
+        2,
+        _write_text_tree(fs, "v2"),
+        replaces=["state-1"],
+        spark=spark,
+    )
+    assert _ls(f"{local}/s") == ["state-2"]
+    with open(f"{local}/s/state-2/_REPLACES") as f:
+        assert f.read() == "state-1"
+    with open(f"{local}/s/state-2/data") as f:
+        assert f.read() == "v2"
+
+
+def test_heal_finishes_gc_interrupted_after_commit(backend, spark, monkeypatch):
+    from aws_glue_jobs_incremental_database_etl_spark.fsutil import heal, publish
+
+    fs, root, local = backend
+    d = f"{root}/view"
+    for name in ("batch=a", "batch=b", "batch=c"):
+        fs.mkdirs(f"{d}/{name}")
+    victims = ["batch=a", "batch=b"]
+
+    real_delete = type(fs).delete
+
+    def crash_on_gc(self, p):
+        if p.rsplit("/", 1)[-1] in victims:
+            raise OSError("injected crash between commit and GC")
+        real_delete(self, p)
+
+    monkeypatch.setattr(type(fs), "delete", crash_on_gc)
+    with pytest.raises(OSError, match="injected"):
+        publish(
+            d, "batch=", "compact-1", _write_text_tree(fs, "net"),
+            replaces=victims, spark=spark,
+        )
+    monkeypatch.undo()
+    # committed, manifest present, victims still on disk
+    assert _ls(f"{local}/view") == [
+        "batch=a", "batch=b", "batch=c", "batch=compact-1",
+    ]
+    heal(d, "batch=other-", spark)  # other prefixes' manifests only
+    assert len(_ls(f"{local}/view")) == 4
+    heal(d, "batch=compact-", spark)
+    assert _ls(f"{local}/view") == ["batch=c", "batch=compact-1"]
+    heal(d, "batch=compact-", spark)  # idempotent
+    heal(f"{root}/missing", "batch=compact-", spark)  # no-op
+
+
+def test_versions_ignores_staging_and_foreign_entries(backend, spark):
+    from aws_glue_jobs_incremental_database_etl_spark.fsutil import versions
+
+    fs, root, _local = backend
+    assert versions(f"{root}/missing", "state-", spark) == []
+    for name in ("state-3", "state-10", ".staging-11", "state-x", "other-4"):
+        fs.mkdirs(f"{root}/s/{name}")
+    assert versions(f"{root}/s", "state-", spark) == [3, 10]
+
+
+def test_swap_tree_keeps_live_tree_when_staged_rename_raises(
+    backend, spark, monkeypatch
+):
+    from aws_glue_jobs_incremental_database_etl_spark.fsutil import swap_tree
+
+    fs, root, local = backend
+    live, staged = f"{root}/tbl", f"{root}/tbl.__compact_1"
+    fs.mkdirs(live)
+    fs.write_text(f"{live}/f", "old")
+    fs.mkdirs(staged)
+    fs.write_text(f"{staged}/f", "new")
+
+    real_rename = type(fs).rename
+
+    def failing_rename(self, src, dst):
+        if src == staged:
+            raise OSError("injected rename failure")
+        real_rename(self, src, dst)
+
+    monkeypatch.setattr(type(fs), "rename", failing_rename)
+    with pytest.raises(OSError, match="injected"):
+        swap_tree(live, staged, spark)
+    monkeypatch.undo()
+    assert _ls(local) == ["tbl", "tbl.__compact_1"]  # no trash
+    with open(f"{local}/tbl/f") as f:
+        assert f.read() == "old"
+
+    swap_tree(live, staged, spark)
+    assert _ls(local) == ["tbl"]
+    with open(f"{local}/tbl/f") as f:
+        assert f.read() == "new"
+
+
+def test_aggregate_and_sketch_fold_on_file_uri_root(spark, tmp_path):
+    """The incremental aggregate and the streaming sketch fold keep
+    their exactly-once fold on a ``file://`` root (the Hadoop backend),
+    not only on plain local paths."""
+    from pyspark.sql import functions as F
+
+    from aws_glue_jobs_incremental_database_etl_spark.aggregates import (
+        IncrementalAggregate,
+    )
+    from aws_glue_jobs_incremental_database_etl_spark.streaming.stream import (
+        read_sketch,
+        sketch_fold_writer,
+    )
+
+    rows = "k string, v long"
+    b0 = spark.createDataFrame([("a", 1), ("b", 2)], rows)
+    b1 = spark.createDataFrame([("a", 10)], rows)
+
+    agg_local = str(tmp_path / "summary")
+    agg = IncrementalAggregate("file://" + agg_local, ["k"], {"v": "sum"})
+    agg.apply_batch(b0, batch_id=0)
+    agg.apply_batch(b1, batch_id=1)
+    assert agg.apply_batch(b1, batch_id=1).get("replayed") == 1
+    got = {r["k"]: r["v_sum"] for r in agg.read(spark).collect()}
+    assert got == {"a": 11, "b": 2}
+    assert _ls(agg_local) == ["state-1"]
+
+    sketch_local = str(tmp_path / "sketch")
+    fold = sketch_fold_writer(
+        "file://" + sketch_local,
+        lambda b: b.groupBy("k").agg(F.sum("v").alias("v")),
+        lambda prev, delta: prev.unionByName(delta)
+        .groupBy("k")
+        .agg(F.sum("v").alias("v")),
+    )
+    fold(b0, 0)
+    fold(b1, 1)
+    fold(b1, 1)  # replayed epoch: skipped
+    got = {r["k"]: r["v"] for r in read_sketch(spark, "file://" + sketch_local).collect()}
+    assert got == {"a": 11, "b": 2}
+    assert _ls(sketch_local) == ["state-1"]
+
+
+# The two commits outside the protocol, matched by file and scope:
+# merge_upsert's per-partition swap and the executor-side writer commit
+# of the Python data source.
+_RAW_COMMIT_ALLOWED = {
+    ("merge.py", "merge_upsert"),
+    ("sources/python_datasource.py", "JsonLinesWriter"),
+}
+
+
+def test_no_hand_written_commit_outside_fsutil():
+    """Every staged write → rename → GC goes through ``fsutil``: a raw
+    ``os.rename(`` or a ``.staging-`` name anywhere else reintroduces
+    a per-site copy of the commit protocol."""
+    import ast
+
+    import aws_glue_jobs_incremental_database_etl_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    found = []
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, root).replace(os.sep, "/")
+            if rel == "fsutil.py":
+                continue
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+
+            def visit(node, scope):
+                for child in ast.iter_child_nodes(node):
+                    inner = scope
+                    if isinstance(
+                        child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                    ) and scope is None:
+                        inner = child.name
+                    hit = (
+                        isinstance(child, ast.Call)
+                        and isinstance(child.func, ast.Attribute)
+                        and child.func.attr == "rename"
+                        and isinstance(child.func.value, ast.Name)
+                        and child.func.value.id == "os"
+                    ) or (
+                        isinstance(child, ast.Constant)
+                        and isinstance(child.value, str)
+                        and ".staging-" in child.value
+                    )
+                    if hit and (rel, scope) not in _RAW_COMMIT_ALLOWED:
+                        found.append(f"{rel}:{child.lineno} (in {scope})")
+                    visit(child, inner)
+
+            visit(tree, None)
+    assert not found, "hand-written commit outside fsutil.py:\n" + "\n".join(found)

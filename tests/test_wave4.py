@@ -769,3 +769,34 @@ def test_join_view_change_feed(spark, tmp_path):
     assert set(feed.select("batch").distinct().toPandas()["batch"]) == {"e0", "e1"}
     assert feed.filter("batch = 'e1'").count() == 1  # only (2,21,b)
     assert feed.count() == v.read_view(spark).count()
+
+
+def test_weighted_join_view_compacts_repeatedly(spark, tmp_path):
+    """Each compaction takes the next free ``compact-<n>`` id: a third
+    compaction (one earlier compact partition left, superseded again)
+    must neither collide with it nor lose rows."""
+    import os
+
+    from aws_glue_jobs_incremental_database_etl_spark.operators.incremental_join import (
+        WeightedIncrementalJoinView,
+    )
+
+    rows = "k long, v long, _w int"
+    v = WeightedIncrementalJoinView(str(tmp_path / "w"), on="k")
+    v.apply_batch(
+        spark,
+        right_delta=spark.createDataFrame([(1, 0, 1)], rows)
+        .selectExpr("k", "v as u", "_w"),
+        batch_id=0,
+    )
+    for i in (1, 2, 3, 4):
+        v.apply_batch(
+            spark,
+            left_delta=spark.createDataFrame([(1, i, 1)], rows),
+            batch_id=i,
+        )
+        if i > 1:
+            assert v.compact(spark)["view"] >= 1
+    assert sorted(os.listdir(v.view_dir)) == ["batch=4", "batch=compact-3"]
+    net = {(r.k, r.v, r.u, r._net) for r in v.read_view_net(spark).collect()}
+    assert net == {(1, i, 0, 1) for i in (1, 2, 3, 4)}
