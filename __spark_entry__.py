@@ -19,32 +19,17 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from aws_glue_jobs_incremental_database_etl_spark import registry  # noqa: E402
+from aws_glue_jobs_incremental_database_etl_spark.session import runtime_sql_conf  # noqa: E402
 
 
 def _prepare(spark: SparkSession) -> None:
     # The driver may hand us a session without our tuned config — set
-    # every runtime-settable conf the queries rely on (correctness:
-    # nanos timestamps, UTC; performance: AQE, right-sized shuffles,
-    # dim-table broadcasts, Arrow for the pandas-UDF operators).
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    for k, v in {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.shuffle.partitions": cpus,
-        # AQE's initialPartitionNum (the shuffle-partition CEILING AQE
-        # coalesces down from — VERDICT r10 #1) is NOT pinned here: it
-        # is derived from the actual input volume per sf_dir by
-        # ``tables.tune_shuffle_for_input`` (called by every
-        # load_table), so small inputs skip the fixed-256 overhead
-        # while 10×+ inputs keep the full scale headroom.
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
-        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    }.items():
+    # every runtime-settable conf the queries rely on.  AQE's
+    # initialPartitionNum (the shuffle-partition CEILING AQE coalesces
+    # down from — VERDICT r10 #1) is NOT pinned here: it is derived
+    # from the actual input volume per sf_dir by
+    # ``tables.tune_shuffle_for_input`` (called by every load_table).
+    for k, v in runtime_sql_conf().items():
         try:
             spark.conf.set(k, v)
         except Exception:

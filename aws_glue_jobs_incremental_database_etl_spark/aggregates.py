@@ -22,13 +22,10 @@ don't belong in an incrementally-maintained summary.
 
 Replay safety (combining is NOT idempotent, unlike merge_upsert):
 pass ``batch_id`` (the Structured Streaming epoch id — what
-``run_aggregate_maintenance`` does) and a replayed id at or below the
-last committed one is SKIPPED, making the fold exactly-once end to
-end.  Without a batch_id (ad-hoc batch folds), run from exactly-once
-inputs (txn.py staging) or dedup upstream.
-
-State is versioned ``state-<n>`` directories committed through
-``fsutil.publish``.
+``run_aggregate_maintenance`` does) so a replayed epoch is skipped by
+the versioned fold (``fsutil.fold``) over ``state-<n>`` directories.
+Without a batch_id (ad-hoc batch folds), run from exactly-once inputs
+(txn.py staging) or dedup upstream.
 """
 
 from __future__ import annotations
@@ -38,7 +35,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .fsutil import join_path, publish, versions
+from .fsutil import fold, latest
 
 _MERGEABLE = ("sum", "count", "min", "max", "approx_distinct")
 
@@ -111,10 +108,10 @@ class IncrementalAggregate:
     # -- the operation -----------------------------------------------------
 
     def _current_dir(self) -> str:
-        vs = versions(self.path, "state-")
-        if not vs:
+        cur = latest(self.path, "state-")
+        if cur is None:
             raise FileNotFoundError(f"no committed summary under {self.path}")
-        return join_path(self.path, f"state-{vs[-1]}")
+        return cur
 
     def apply_batch(
         self, batch: DataFrame, batch_id: int | None = None
@@ -125,10 +122,10 @@ class IncrementalAggregate:
         table is never re-read.
 
         With ``batch_id`` (a monotone int — the streaming epoch id),
-        the id doubles as the state version and a replayed id at or
-        below the last committed version is skipped: exactly-once
-        under the Structured Streaming replay contract (a replayed id
-        carries identical data).
+        the id doubles as the state version, so a replayed id is
+        skipped (``"replayed": 1``): exactly-once under the Structured
+        Streaming replay contract (a replayed id carries identical
+        data).
 
         At very large summary cardinalities, partition the summary by
         a key-hash bucket column and prune the combine to the buckets
@@ -137,38 +134,22 @@ class IncrementalAggregate:
         summary is orders of magnitude smaller than its fact table.
         """
         spark = batch.sparkSession
-        committed = versions(self.path, "state-", spark)
-        if batch_id is not None:
-            batch_id = int(batch_id)
-            if committed and batch_id <= committed[-1]:
-                return {
-                    "keys_total": spark.read.parquet(self._current_dir()).count(),
-                    "existed": 1,
-                    "replayed": 1,
-                }
-        partial = self._partial(batch)
-        if committed:
-            current = spark.read.parquet(self._current_dir())
-            merged = self._combine(current, partial)
-        else:
-            merged = partial
-        new_v = (
-            batch_id
-            if batch_id is not None
-            else (committed[-1] + 1 if committed else 1)
-        )
-        publish(
+        existed = latest(self.path, "state-", spark) is not None
+        cur = fold(
             self.path,
             "state-",
-            new_v,
-            merged.write.mode("overwrite").parquet,
-            replaces=[f"state-{v}" for v in committed],
-            spark=spark,
+            batch_id,
+            lambda: self._partial(batch),
+            self._combine,
+            spark,
         )
-        return {
-            "keys_total": spark.read.parquet(self._current_dir()).count(),
-            "existed": 1 if committed else 0,
+        out = {
+            "keys_total": spark.read.parquet(cur or self._current_dir()).count(),
+            "existed": 1 if existed else 0,
         }
+        if cur is None:
+            out["replayed"] = 1
+        return out
 
     def read(self, spark: SparkSession, estimate_sketches: bool = True) -> DataFrame:
         """The current summary.  ``estimate_sketches`` surfaces each

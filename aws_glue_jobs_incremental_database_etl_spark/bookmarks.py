@@ -25,15 +25,14 @@ from __future__ import annotations
 
 import datetime as dt
 import decimal
-import json
-import os
-import tempfile
 from collections.abc import Sequence
 from functools import reduce
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .fsutil import locked, read_json, write_json
 
 # -- watermark value (de)serialization ------------------------------------
 # JSON can't hold timestamps/dates/decimals natively; tag them.
@@ -84,22 +83,19 @@ def watermark_from(values: Sequence[Any], bookmark_keys: list[str]) -> dict[str,
 class BookmarkStore:
     """File-backed watermark store keyed by ``(job_name, ctx)``.
 
-    ``commit()`` is atomic (write-temp + ``os.replace``), mirroring the
-    single end-of-job ``job.commit()`` in the reference: stage updates
-    with :meth:`stage`, persist them all with :meth:`commit`.
+    :meth:`commit` mirrors the single end-of-job ``job.commit()`` in the
+    reference: stage updates with :meth:`stage`, persist them all with
+    :meth:`commit`.
     """
 
     def __init__(self, path: str, job_name: str = "job") -> None:
         self.path = path
         self.job_name = job_name
-        self._state: dict[str, dict[str, Any]] = {}
+        self._state: dict[str, dict[str, Any]] = {
+            ctx: {k: _decode(v) for k, v in wm.items()}
+            for ctx, wm in read_json(path, {}).items()
+        }
         self._staged: dict[str, dict[str, Any]] = {}
-        if os.path.exists(path):
-            with open(path) as f:
-                raw = json.load(f)
-            self._state = {
-                ctx: {k: _decode(v) for k, v in wm.items()} for ctx, wm in raw.items()
-            }
 
     def _key(self, ctx: str) -> str:
         return f"{self.job_name}::{ctx}"
@@ -173,68 +169,31 @@ class BookmarkStore:
             self._staged[full_key] = merged
 
     def commit(self) -> None:
-        """Atomically persist ALL staged watermarks (the one job.commit()).
+        """Persist ALL staged watermarks (the one job.commit()) as one
+        locked read-modify-write of the bookmark document.
 
-        Re-reads and merges the on-disk state first so two job shards
-        (``job_index``/``num_jobs`` > 1) sharing one bookmark path
-        don't clobber each other's contexts: this instance only owns
-        the contexts it staged; everything else on disk is preserved.
-        Staged entries win over disk for the contexts they cover.
-
-        The read-merge-write runs under an exclusive ``flock`` on a
-        sidecar lockfile, closing the window where two shards
-        committing simultaneously each read the pre-both state (the
-        merge alone cannot fix a concurrent interleave).  On
-        filesystems without advisory locks (or non-POSIX hosts) the
-        lock degrades to merge-only — same guarantee as before, and
-        object-store deployments should give each shard its own
-        bookmark path anyway.
+        The on-disk state is re-read and merged under the lock so two
+        job shards (``job_index``/``num_jobs`` > 1) sharing one
+        bookmark path don't clobber each other's contexts: this
+        instance only owns the contexts it staged; everything else on
+        disk is preserved.  Staged entries win over disk for the
+        contexts they cover.  Where the lock degrades to none (see
+        ``fsutil.locked``), give each shard its own bookmark path.
         """
-        lock_fh = None
-        try:
-            import fcntl
-
-            os.makedirs(os.path.dirname(os.path.abspath(self.path)), exist_ok=True)
-            lock_fh = open(self.path + ".lock", "w")
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-        except Exception:
-            if lock_fh is not None:
-                lock_fh.close()
-                lock_fh = None
-        try:
-            self._commit_locked()
-        finally:
-            if lock_fh is not None:
-                try:
-                    import fcntl
-
-                    fcntl.flock(lock_fh, fcntl.LOCK_UN)
-                finally:
-                    lock_fh.close()
-
-    def _commit_locked(self) -> None:
-        if os.path.exists(self.path):
+        with locked(self.path):
             try:
-                with open(self.path) as f:
-                    on_disk = json.load(f)
-                for ctx, wm in on_disk.items():
-                    if ctx not in self._staged:
-                        self._state[ctx] = {k: _decode(v) for k, v in wm.items()}
-            except (json.JSONDecodeError, OSError):
-                pass  # unreadable state → keep our in-memory view
-        self._state.update(self._staged)
-        self._staged.clear()
-        payload = {
-            ctx: {k: _encode(v) for k, v in wm.items()}
-            for ctx, wm in self._state.items()
-        }
-        d = os.path.dirname(os.path.abspath(self.path))
-        os.makedirs(d, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=d, suffix=".bookmark.tmp")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(payload, f, indent=2, default=str)
-            os.replace(tmp, self.path)
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+                on_disk = read_json(self.path, {})
+            except (ValueError, OSError):
+                on_disk = {}  # unreadable state → keep our in-memory view
+            for ctx, wm in on_disk.items():
+                if ctx not in self._staged:
+                    self._state[ctx] = {k: _decode(v) for k, v in wm.items()}
+            self._state.update(self._staged)
+            self._staged.clear()
+            write_json(
+                self.path,
+                {
+                    ctx: {k: _encode(v) for k, v in wm.items()}
+                    for ctx, wm in self._state.items()
+                },
+            )

@@ -7,8 +7,11 @@ reference drives (SURVEY.md §2.9 E1–E6, E9): tables with
 descriptors, lineage properties, and a no-op permissions hook (Lake
 Formation has no local analogue).
 
-State is one JSON file per database under the catalog root — small
-metadata, driver-side only; the data plane never touches it.
+State is one JSON document per database under the catalog root —
+small metadata, driver-side only; the data plane never touches it.
+Every mutation is one locked read-modify-write of its database's
+document (``fsutil`` documents): two shards loading different tables
+into one database must not lose each other's updates.
 """
 
 from __future__ import annotations
@@ -17,9 +20,11 @@ import datetime as dt
 import json
 import os
 import re
-import tempfile
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 from typing import Any
+
+from .fsutil import fs_for, locked, read_json, write_json
 
 Column = dict[str, str]
 
@@ -93,7 +98,7 @@ class FileCatalog:
 
     def __init__(self, root: str) -> None:
         self.root = root
-        os.makedirs(root, exist_ok=True)
+        fs_for(root).mkdirs(root)
 
     # -- persistence ------------------------------------------------------
 
@@ -101,22 +106,23 @@ class FileCatalog:
         return os.path.join(self.root, f"{database}.json")
 
     def _load(self, database: str) -> dict[str, Any]:
-        p = self._db_path(database)
-        if not os.path.exists(p):
-            return {"tables": {}}
-        with open(p) as f:
-            return json.load(f)
+        return read_json(self._db_path(database), {"tables": {}})
 
     def _save(self, database: str, state: dict[str, Any]) -> None:
-        p = self._db_path(database)
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".cat.tmp")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(state, f, indent=2, default=str)
-            os.replace(tmp, p)
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+        write_json(self._db_path(database), state)
+
+    @contextmanager
+    def _edit(self, database: str, name: str) -> Iterator[dict[str, Any]]:
+        """Table ``name``'s entry for one read-modify-write under the
+        database's lock, saved when the body returns.  The body must
+        not call another mutating method (the lock is not
+        re-entrant)."""
+        with locked(self._db_path(database)):
+            state = self._load(database)
+            if name not in state["tables"]:
+                raise KeyError(f"table not found: {database}.{name}")
+            yield state["tables"][name]
+            self._save(database, state)
 
     # -- tables (E1, E2, E4, E5, E6) --------------------------------------
 
@@ -145,7 +151,6 @@ class FileCatalog:
         ``:363-422``): format wiring, lineage parameters, ordered
         partition keys, CSV header-skip property, optional
         SourceConnection propagation (``:401-412``)."""
-        state = self._load(database)
         params = dict(parameters or {})
         if source_connection:
             params["SourceConnection"] = source_connection
@@ -160,33 +165,29 @@ class FileCatalog:
             "CreateTime": dt.datetime.now(dt.timezone.utc).isoformat(),
             "Partitions": {},
         }
-        state["tables"][name] = table
-        self._save(database, state)
+        with locked(self._db_path(database)):
+            state = self._load(database)
+            state["tables"][name] = table
+            self._save(database, state)
         return table
 
     def update_table(self, database: str, name: str, table_input: dict[str, Any]) -> None:
         """Replace a table entry, dropping read-only keys — parity with
         ``update_table_job_info``'s key stripping (reference
         ``:487-491``)."""
-        state = self._load(database)
-        if name not in state["tables"]:
-            raise KeyError(f"table not found: {database}.{name}")
-        existing = state["tables"][name]
-        cleaned = {
-            k: v for k, v in table_input.items() if k not in self._READONLY_KEYS
-        }
-        merged = dict(existing)
-        merged.update(cleaned)
-        state["tables"][name] = merged
-        self._save(database, state)
+        with self._edit(database, name) as t:
+            t.update(
+                (k, v)
+                for k, v in table_input.items()
+                if k not in self._READONLY_KEYS
+            )
 
     def update_table_columns(
         self, database: str, name: str, columns: Sequence[Column]
     ) -> None:
         """Swap in an evolved column list (the write half of E2)."""
-        t = self.get_table(database, name)
-        t["StorageDescriptor"]["Columns"] = [dict(c) for c in columns]
-        self.update_table(database, name, t)
+        with self._edit(database, name) as t:
+            t["StorageDescriptor"]["Columns"] = [dict(c) for c in columns]
 
     def get_tables(self, database: str, name_regex: str | None = None) -> list[str]:
         """List table names, optionally filtered by an anchored regex —
@@ -210,18 +211,17 @@ class FileCatalog:
         """Stamp lineage properties (reference ``:480-503``):
         LastUpdatedByJob / LastUpdatedByJobRun / TransformTime /
         LastTransformCompletedOn; TableType defaulted if missing."""
-        t = self.get_table(database, name)
-        t.setdefault("TableType", "EXTERNAL_TABLE")
-        t["Parameters"].update(
-            {
-                "LastUpdatedByJob": job_name,
-                "LastUpdatedByJobRun": job_run_id,
-                "TransformTime": transform_time,
-                "LastTransformCompletedOn": completed_on
-                or dt.datetime.now(dt.timezone.utc).isoformat(),
-            }
-        )
-        self.update_table(database, name, t)
+        with self._edit(database, name) as t:
+            t.setdefault("TableType", "EXTERNAL_TABLE")
+            t["Parameters"].update(
+                {
+                    "LastUpdatedByJob": job_name,
+                    "LastUpdatedByJobRun": job_run_id,
+                    "TransformTime": transform_time,
+                    "LastTransformCompletedOn": completed_on
+                    or dt.datetime.now(dt.timezone.utc).isoformat(),
+                }
+            )
 
     # -- partitions (E3) ---------------------------------------------------
 
@@ -251,30 +251,27 @@ class FileCatalog:
         """:meth:`add_partition` for every values dict of a batch, with
         one load and one save of the database file instead of one
         rewrite per partition."""
-        state = self._load(database)
-        if table not in state["tables"]:
-            raise KeyError(f"table not found: {database}.{table}")
-        t = state["tables"][table]
-        fmt = fmt or _format_of(t)
-        data_columns = [
-            c
-            for c in t["StorageDescriptor"]["Columns"]
-            if c["Name"] not in partition_spec
-        ]
-        parts = t.setdefault("Partitions", {})
-        out = []
-        for values in values_list:
-            loc = partition_location(
-                t["StorageDescriptor"]["Location"], partition_spec, values
-            )
-            key = "/".join(str(values[k]) for k in partition_spec)
-            parts[key] = {
-                "Values": [str(values[k]) for k in partition_spec],
-                "StorageDescriptor": get_storage_descriptor(fmt, data_columns, loc),
-            }
-            out.append(parts[key])
-        if out:
-            self._save(database, state)
+        with self._edit(database, table) as t:
+            fmt = fmt or _format_of(t)
+            data_columns = [
+                c
+                for c in t["StorageDescriptor"]["Columns"]
+                if c["Name"] not in partition_spec
+            ]
+            parts = t.setdefault("Partitions", {})
+            out = []
+            for values in values_list:
+                loc = partition_location(
+                    t["StorageDescriptor"]["Location"], partition_spec, values
+                )
+                key = "/".join(str(values[k]) for k in partition_spec)
+                parts[key] = {
+                    "Values": [str(values[k]) for k in partition_spec],
+                    "StorageDescriptor": get_storage_descriptor(
+                        fmt, data_columns, loc
+                    ),
+                }
+                out.append(parts[key])
         return out
 
     def get_partitions(self, database: str, table: str) -> dict[str, Any]:
@@ -289,9 +286,8 @@ class FileCatalog:
         analogue; recorded as a table parameter only."""
         if not creator_arn:
             return
-        t = self.get_table(database, table)
-        t["Parameters"]["PermissionsGrantedTo"] = creator_arn
-        self.update_table(database, table, t)
+        with self._edit(database, table) as t:
+            t["Parameters"]["PermissionsGrantedTo"] = creator_arn
 
 
 def _format_of(table: dict[str, Any]) -> str:

@@ -1,7 +1,8 @@
-"""Filesystem abstraction and the one commit protocol for the
-metadata plumbing and every piece of incremental state (dedup-index
-compaction, the staged-commit transaction log, streaming sinks and
-sketch folds, the incremental aggregate, top-k and join view): plain
+"""Filesystem abstraction and the one state layer for the metadata
+plumbing and every piece of incremental state (the catalog, bookmarks
+and staged-commit log documents, dedup-index compaction, streaming
+sinks and sketch folds, the incremental aggregate, top-k and join
+view): plain
 local paths use the ``os``/``shutil`` fast path, any ``scheme://`` path
 resolves through the Hadoop FileSystem API — so ``file://`` (the
 hermetic object-store stand-in in tests), ``hdfs://`` and ``s3a://``
@@ -28,6 +29,25 @@ The commit protocol (:func:`publish`), stated once:
   Versioned state (:func:`versions`) reads only the newest entry and
   needs no heal: the next publish supersedes every older one.
 
+A versioned fold (:func:`fold`) is the protocol applied to state
+that is one ``<prefix><n>`` entry at a time: a batch id at or below the
+newest committed version is a replay and is skipped before any work;
+otherwise the batch's delta is merged with the newest version (when
+there is one) and published as ``<prefix><batch_id>``, superseding
+every older version.  A missing batch id means newest + 1.
+
+Small state documents (catalog databases, bookmarks, txn manifests,
+index metadata) are JSON files replaced whole: :func:`write_json`
+writes a unique ``<path>.<rand>.tmp`` sibling and ONE ``replace`` of
+it is the commit point, so readers (:func:`read_json`) see the old or
+the new document, never a torn one.  A read-modify-write shared by
+several writers runs inside :func:`locked`, an exclusive ``flock`` on
+``<path>.lock``; it degrades to no lock where ``flock`` is unavailable
+or the path has a scheme (object-store deployments give each writer
+its own document).  The lock is per open file, so a body that enters
+it again in the same process blocks forever: no ``locked`` body calls
+code that locks.
+
 Whole-tree swaps (:func:`swap_tree`) rename the live tree to a trash
 name, the staged tree to the live name, roll back if that fails, and
 delete the trash last; ``maintenance.vacuum_temp_trees`` reclaims what
@@ -40,10 +60,17 @@ what absorb the non-atomic window on object stores.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
+import uuid
 from collections.abc import Callable, Iterable, Iterator
+from contextlib import contextmanager
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 
 def join_path(base: str, *parts: str) -> str:
@@ -84,6 +111,9 @@ class LocalFS:
 
     def getsize(self, p: str) -> int:
         return os.path.getsize(p)
+
+    def getmtime(self, p: str) -> float:
+        return os.path.getmtime(p)
 
     def delete(self, p: str) -> None:
         if os.path.isdir(p):
@@ -171,6 +201,9 @@ class HadoopFS:
 
     def getsize(self, p: str) -> int:
         return int(self._fs.getFileStatus(self._jpath(p)).getLen())
+
+    def getmtime(self, p: str) -> float:
+        return self._fs.getFileStatus(self._jpath(p)).getModificationTime() / 1000
 
     def delete(self, p: str) -> None:
         self._fs.delete(self._jpath(p), True)
@@ -345,3 +378,96 @@ def swap_tree(live: str, staged: str, spark=None) -> None:
         fs.rename(trash, live)
         raise
     fs.delete(trash)
+
+
+def fold(
+    root: str,
+    prefix: str,
+    batch_id: int | None,
+    build: Callable[[], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+    spark,
+) -> str | None:
+    """Advance the versioned state under ``root`` by one batch (the
+    fold rule above): ``build()`` makes the batch's delta, ``merge(prev,
+    delta)`` combines it with the newest version.  Returns the committed
+    path, or ``None`` when ``batch_id`` is a replay."""
+    committed = versions(root, prefix, spark)
+    newest = committed[-1] if committed else None
+    if batch_id is None:
+        batch_id = (newest or 0) + 1
+    elif newest is not None and int(batch_id) <= newest:
+        return None
+    state = build()
+    if newest is not None:
+        prev = spark.read.parquet(join_path(root, f"{prefix}{newest}"))
+        state = merge(prev, state)
+    return publish(
+        root,
+        prefix,
+        int(batch_id),
+        state.write.mode("overwrite").parquet,
+        replaces=[f"{prefix}{v}" for v in committed],
+        spark=spark,
+    )
+
+
+def latest(root: str, prefix: str, spark=None) -> str | None:
+    """Path of the newest committed ``<prefix><n>`` version under
+    ``root``; ``None`` when there is none."""
+    committed = versions(root, prefix, spark)
+    return join_path(root, f"{prefix}{committed[-1]}") if committed else None
+
+
+def read_json(path: str, default=None, spark=None):
+    """The JSON document at ``path``; ``default`` when it is missing."""
+    fs = fs_for(path, spark)
+    if not fs.exists(path):
+        return default
+    return json.loads(fs.read_text(path))
+
+
+def write_json(path: str, obj, spark=None) -> None:
+    """Replace the JSON document at ``path`` with ``obj``: a unique
+    ``<path>.<rand>.tmp`` sibling, then one ``replace`` (the commit
+    point).  The tmp file is deleted if anything raises."""
+    fs = fs_for(path, spark)
+    fs.mkdirs(_parent(path))
+    tmp = f"{path}.{uuid.uuid4().hex[:12]}.tmp"
+    try:
+        fs.write_text(tmp, json.dumps(obj, indent=2, default=str))
+        fs.replace(tmp, path)
+    except BaseException:
+        fs.delete(tmp)
+        raise
+
+
+@contextmanager
+def locked(path: str) -> Iterator[None]:
+    """Hold an exclusive ``flock`` on ``<path>.lock`` for the body: the
+    writers of one document serialise their read-modify-writes.  No
+    lock where ``flock`` is unavailable or ``path`` has a scheme.  Never
+    enter it again inside its own body (see the module docstring)."""
+    fh = None
+    if "://" not in path:
+        try:
+            import fcntl
+
+            os.makedirs(_parent(path), exist_ok=True)
+            fh = open(path + ".lock", "w")
+            fcntl.flock(fh, fcntl.LOCK_EX)
+        except (ImportError, OSError):
+            if fh is not None:
+                fh.close()
+                fh = None
+    try:
+        yield
+    finally:
+        if fh is not None:
+            fh.close()  # closing the only descriptor releases the lock
+
+
+def _parent(path: str) -> str:
+    if "://" not in path:
+        return os.path.dirname(os.path.abspath(path))
+    return path.rstrip("/").rsplit("/", 1)[0]

@@ -23,8 +23,6 @@ already-indexed ids are never re-appended.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,7 +33,7 @@ from .dedup import (
     shingles_from_tokens,
     tokens_of,
 )
-from ..fsutil import fs_for, heal, publish, versions
+from ..fsutil import fs_for, heal, publish, read_json, versions, write_json
 from ..fsutil import join_path as _join
 from ..materialize import cached, checkpoint
 
@@ -145,7 +143,7 @@ def _compact_index(spark: SparkSession, path: str) -> int:
     return len(victims)
 
 
-def _ensure_meta(fs, path: str, meta: dict) -> None:
+def _ensure_meta(spark, path: str, meta: dict) -> None:
     """Pin the index's fingerprint-domain config on disk and validate
     it on every reopen.  Without this, an index built under one
     config silently reopened under another (e.g. a default hash_fn
@@ -154,8 +152,8 @@ def _ensure_meta(fs, path: str, meta: dict) -> None:
     instead of failing loudly.  ``_META.json`` is an underscore file:
     invisible to the parquet file listing."""
     mp = _join(path, "_META.json")
-    if fs.exists(mp):
-        on_disk = json.loads(fs.read_text(mp))
+    on_disk = read_json(mp, None, spark)
+    if on_disk is not None:
         if on_disk != meta:
             raise ValueError(
                 f"index at {path!r} was created with {on_disk}, "
@@ -164,14 +162,14 @@ def _ensure_meta(fs, path: str, meta: dict) -> None:
                 "Reopen with the original parameters or rebuild."
             )
         return
+    fs = fs_for(path, spark)
     if fs.isdir(path) and _index_files(fs, path):
         raise ValueError(
             f"index at {path!r} has data but no _META.json (created "
             "by a pre-metadata version): write the original "
             "parameters to _META.json to adopt it, or rebuild."
         )
-    fs.mkdirs(path)
-    fs.write_text(mp, json.dumps(meta, sort_keys=True))
+    write_json(mp, meta, spark)
 
 
 class MinHashIndex:
@@ -269,7 +267,7 @@ class MinHashIndex:
         corpus text.
         """
         spark = batch_df.sparkSession
-        _ensure_meta(fs_for(self.path, spark), self.path, self._meta())
+        _ensure_meta(spark, self.path, self._meta())
         with cached(self._signatures(batch_df, id_col, text_col)) as new_sig:
             new_banded = self._banded(new_sig)
 
@@ -438,7 +436,7 @@ class WinnowIndex:
         wrong answer — survivors re-executing against the post-append
         index double-counted ``shared`` and halved the threshold)."""
         spark = batch_df.sparkSession
-        _ensure_meta(fs_for(self.path, spark), self.path, self._meta())
+        _ensure_meta(spark, self.path, self._meta())
         with cached(self._fps(batch_df, id_col, text_col)) as new_fp:
 
             index = self._load(spark)

@@ -31,17 +31,27 @@ identity always sees pre-batch state).
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import heal, publish, versions
+from ..fsutil import fs_for, heal, join_path, publish, versions
 from ..materialize import checkpoint
 
 # compacted partitions: the entries whose ``_REPLACES`` manifests heal reads
 _COMPACT = "batch=compact-"
+
+
+def _partitions(spark: SparkSession, d: str) -> list[str]:
+    """Committed ``batch=<id>`` partitions of the state dir ``d``
+    (sorted; ``[]`` when ``d`` is missing), after finishing any
+    interrupted compaction GC."""
+    heal(d, _COMPACT, spark)
+    fs = fs_for(d, spark)
+    if not fs.isdir(d):
+        return []
+    return [e for e in fs.listdir(d) if e.startswith("batch=")]
 
 
 class IncrementalJoinView:
@@ -50,9 +60,9 @@ class IncrementalJoinView:
     def __init__(self, path: str, on: str) -> None:
         self.path = path.rstrip("/")
         self.on = on
-        self.left_dir = os.path.join(self.path, "left")
-        self.right_dir = os.path.join(self.path, "right")
-        self.view_dir = os.path.join(self.path, "view")
+        self.left_dir = join_path(self.path, "left")
+        self.right_dir = join_path(self.path, "right")
+        self.view_dir = join_path(self.path, "view")
 
     # -- state plumbing ----------------------------------------------------
 
@@ -62,10 +72,7 @@ class IncrementalJoinView:
         """Committed state at ``d``, minus ``exclude_batch``'s own
         partition (replay safety), minus the engine-added ``batch``
         partition column."""
-        heal(d, _COMPACT)
-        if not os.path.isdir(d) or not any(
-            e.startswith("batch=") for e in os.listdir(d)
-        ):
+        if not _partitions(spark, d):
             return None
         df = spark.read.parquet(d)
         if exclude_batch is not None:
@@ -73,8 +80,15 @@ class IncrementalJoinView:
             df = df.filter(F.col("batch").cast("string") != exclude_batch)
         return df.drop("batch")
 
-    def _commit(self, df: DataFrame, root: str, batch_id: str) -> None:
-        publish(root, "batch=", batch_id, df.write.mode("overwrite").parquet)
+    def _commit(
+        self, spark: SparkSession, df: DataFrame, root: str, batch_id: str
+    ) -> None:
+        publish(
+            root, "batch=", batch_id, df.write.mode("overwrite").parquet, spark=spark
+        )
+
+    def _join(self, a: DataFrame, b: DataFrame) -> DataFrame:
+        return a.join(b, self.on)
 
     # -- the fold ----------------------------------------------------------
 
@@ -90,7 +104,9 @@ class IncrementalJoinView:
         foreachBatch epoch) for exactly-once replay; without one a
         random id is used (at-least-once, like plain appends)."""
         bid = str(uuid.uuid4()) if batch_id is None else str(batch_id)
-        if os.path.exists(os.path.join(self.view_dir, f"batch={bid}")):
+        if fs_for(self.view_dir, spark).exists(
+            join_path(self.view_dir, f"batch={bid}")
+        ):
             return  # replayed batch: fully committed already
         on = self.on
         l_old = self._read(spark, self.left_dir, exclude_batch=bid)
@@ -109,24 +125,24 @@ class IncrementalJoinView:
         parts = []
         if dl is not None and r_old is not None:
             keys = F.broadcast(dl.select(on).distinct())
-            parts.append(dl.join(r_old.join(keys, on, "semi"), on))
+            parts.append(self._join(dl, r_old.join(keys, on, "semi")))
         if dr is not None and l_old is not None:
             keys = F.broadcast(dr.select(on).distinct())
-            parts.append(l_old.join(keys, on, "semi").join(dr, on))
+            parts.append(self._join(l_old.join(keys, on, "semi"), dr))
         if dl is not None and dr is not None:
-            parts.append(dl.join(dr, on))
+            parts.append(self._join(dl, dr))
 
         # accumulators first; the view partition is the commit marker,
         # so a crash here replays into the exclude-own-batch reads
         if dl is not None:
-            self._commit(dl, self.left_dir, bid)
+            self._commit(spark, dl, self.left_dir, bid)
         if dr is not None:
-            self._commit(dr, self.right_dir, bid)
+            self._commit(spark, dr, self.right_dir, bid)
         if parts:
             delta_view = parts[0]
             for p in parts[1:]:
                 delta_view = delta_view.unionByName(p)
-            self._commit(delta_view, self.view_dir, bid)
+            self._commit(spark, delta_view, self.view_dir, bid)
         # parts empty (first-ever batch of one side): no view partition
         # is written — the join schema is unknown until both sides have
         # state, and every commit above is idempotent, so a replay of
@@ -163,6 +179,15 @@ class WeightedIncrementalJoinView(IncrementalJoinView):
         super().__init__(path, on)
         self.weight_col = weight_col
 
+    def _join(self, a: DataFrame, b: DataFrame) -> DataFrame:
+        w = self.weight_col
+        return (
+            a.withColumnRenamed(w, "_wl")
+            .join(b.withColumnRenamed(w, "_wr"), self.on)
+            .withColumn(w, F.col("_wl") * F.col("_wr"))
+            .drop("_wl", "_wr")
+        )
+
     def apply_batch(
         self,
         spark: SparkSession,
@@ -174,53 +199,7 @@ class WeightedIncrementalJoinView(IncrementalJoinView):
         for side, d in (("left", left_delta), ("right", right_delta)):
             if d is not None and w not in d.columns:
                 raise ValueError(f"{side} delta lacks weight column {w!r}")
-        import uuid as _uuid
-
-        bid = str(_uuid.uuid4()) if batch_id is None else str(batch_id)
-        if os.path.exists(os.path.join(self.view_dir, f"batch={bid}")):
-            return
-        on = self.on
-        l_old = self._read(spark, self.left_dir, exclude_batch=bid)
-        r_old = self._read(spark, self.right_dir, exclude_batch=bid)
-        dl = (
-            checkpoint(left_delta, eager=True)
-            if left_delta is not None
-            else None
-        )
-        dr = (
-            checkpoint(right_delta, eager=True)
-            if right_delta is not None
-            else None
-        )
-
-        def wjoin(a: DataFrame, b: DataFrame) -> DataFrame:
-            aw = a.withColumnRenamed(w, "_wl")
-            bw = b.withColumnRenamed(w, "_wr")
-            return (
-                aw.join(bw, on)
-                .withColumn(w, F.col("_wl") * F.col("_wr"))
-                .drop("_wl", "_wr")
-            )
-
-        parts = []
-        if dl is not None and r_old is not None:
-            keys = F.broadcast(dl.select(on).distinct())
-            parts.append(wjoin(dl, r_old.join(keys, on, "semi")))
-        if dr is not None and l_old is not None:
-            keys = F.broadcast(dr.select(on).distinct())
-            parts.append(wjoin(l_old.join(keys, on, "semi"), dr))
-        if dl is not None and dr is not None:
-            parts.append(wjoin(dl, dr))
-
-        if dl is not None:
-            self._commit(dl, self.left_dir, bid)
-        if dr is not None:
-            self._commit(dr, self.right_dir, bid)
-        if parts:
-            delta_view = parts[0]
-            for p in parts[1:]:
-                delta_view = delta_view.unionByName(p)
-            self._commit(delta_view, self.view_dir, bid)
+        super().apply_batch(spark, left_delta, right_delta, batch_id)
 
     def read_view_net(self, spark: SparkSession) -> DataFrame:
         """Rows with positive net multiplicity, carrying it as
@@ -251,8 +230,8 @@ class WeightedIncrementalJoinView(IncrementalJoinView):
     def compact(self, spark: SparkSession) -> dict[str, int]:
         """Rewrite history so reads stay O(live rows), not O(history):
         for each state dir (view + both accumulators), net ALL
-        committed batch partitions EXCEPT the most recent into one
-        ``batch=compact-<n>`` partition and drop the originals — once
+        committed partitions EXCEPT the newest ``batch=<id>`` one into
+        one ``batch=compact-<n>`` partition and drop the originals — once
         the retraction ratio grows, cancelled ±1 pairs stop being
         re-scanned and re-summed by every ``read_view_net`` and every
         delta-vs-accumulated join (VERDICT r4 #4; the retraction
@@ -262,9 +241,10 @@ class WeightedIncrementalJoinView(IncrementalJoinView):
         ``fsutil.publish`` superseding the partitions it nets, and
         every read heals first, so no interleaving double-counts.
 
-        The LATEST partition is never compacted: its ``batch=<id>``
-        marker is what makes a Structured-Streaming replay of the
-        in-flight epoch a no-op.  Change-feed consumers
+        The newest batch partition is never compacted, also by a second
+        compaction right after the first: its ``batch=<id>`` marker is
+        what makes a Structured-Streaming replay of the in-flight epoch
+        a no-op.  Change-feed consumers
         (``read_changes``) must be drained first — compaction rewrites
         the feed's history into one synthetic ``compact-<n>`` batch.
         """
@@ -274,23 +254,20 @@ class WeightedIncrementalJoinView(IncrementalJoinView):
             ("left", self.left_dir),
             ("right", self.right_dir),
         ):
-            heal(d, _COMPACT)
-            parts = sorted(
-                e
-                for e in (os.listdir(d) if os.path.isdir(d) else [])
-                if e.startswith("batch=")
-            )
-            if len(parts) <= 1:  # nothing to compact
-                stats[name] = 0
-                continue
-            # newest partition (by mtime — ids are opaque strings)
+            fs = fs_for(d, spark)
+            parts = _partitions(spark, d)
+            # newest by mtime: ids are opaque strings
+            fresh = [e for e in parts if not e.startswith(_COMPACT)]
             newest = max(
-                parts, key=lambda e: os.path.getmtime(os.path.join(d, e))
+                fresh, key=lambda e: fs.getmtime(join_path(d, e)), default=None
             )
             victims = [e for e in parts if e != newest]
-            cid = f"compact-{max(versions(d, _COMPACT), default=0) + 1}"
+            if len(victims) < 2 and all(v.startswith(_COMPACT) for v in victims):
+                stats[name] = 0  # nothing to compact
+                continue
+            cid = f"compact-{max(versions(d, _COMPACT, spark), default=0) + 1}"
             netted = self._net_rows(
-                spark.read.parquet(*[os.path.join(d, e) for e in victims])
+                spark.read.parquet(*[join_path(d, e) for e in victims])
             )
             publish(
                 d,
@@ -298,6 +275,7 @@ class WeightedIncrementalJoinView(IncrementalJoinView):
                 cid,
                 netted.write.mode("overwrite").parquet,
                 replaces=victims,
+                spark=spark,
             )
             stats[name] = len(victims)
         return stats
@@ -312,13 +290,8 @@ def read_changes(view: IncrementalJoinView, spark: SparkSession) -> DataFrame:
     maintained join.  Batch ids are opaque strings; consumers track
     the set they have seen (ids are only ordered if the caller makes
     them so, e.g. zero-padded epochs)."""
-    import os as _os
-
     d = view.view_dir
-    heal(d, _COMPACT)
-    if not _os.path.isdir(d) or not any(
-        e.startswith("batch=") for e in _os.listdir(d)
-    ):
+    if not _partitions(spark, d):
         raise FileNotFoundError(f"no view state at {d}")
     return spark.read.parquet(d).withColumn(
         "batch", F.col("batch").cast("string")

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..fsutil import join_path, publish, versions
+from ..fsutil import fold
 from ..functions.vectors import cosine_similarity, dot_product
 from ..materialize import checkpoint
 
@@ -703,30 +703,19 @@ def cosine_topk_incremental(
     is monotone-mergeable — ``topk(A ∪ B) = topk(topk(A) ∪ topk(B))``
     under the same total order (round(cosine) DESC, id ASC) — so the
     historical corpus is NEVER re-scanned: per batch the cost is one
-    map-only pass over the delta plus a ≤2k-row merge.  State is
-    versioned ``topk-<n>`` directories committed by ``fsutil.publish``.
+    map-only pass over the delta plus a ≤2k-row merge.  Each call is
+    one versioned fold (``fsutil.fold``) over ``topk-<n>`` directories.
     Returns the new top-k DataFrame (read from the committed state).
     """
-    delta = cosine_topk(batch, query_vec, k, id_col, vec_col, round_to)
-    committed = versions(state_path, "topk-", spark)
-    if committed:
-        prev = spark.read.parquet(
-            join_path(state_path, f"topk-{committed[-1]}")
-        )
-        merged = (
-            prev.unionByName(delta)
-            .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-            .limit(k)
-        )
-    else:
-        merged = delta
-    cur = publish(
+    cur = fold(
         state_path,
         "topk-",
-        (committed[-1] + 1) if committed else 1,
-        merged.write.mode("overwrite").parquet,
-        replaces=[f"topk-{v}" for v in committed],
-        spark=spark,
+        None,
+        lambda: cosine_topk(batch, query_vec, k, id_col, vec_col, round_to),
+        lambda prev, delta: prev.unionByName(delta)
+        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        .limit(k),
+        spark,
     )
     return spark.read.parquet(cur)
 

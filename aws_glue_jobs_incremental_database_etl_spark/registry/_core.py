@@ -79,6 +79,23 @@ _SHINGLE_INTER_SQL = """posts AS MATERIALIZED (
     )"""
 
 
+def normal_cdf(zc):
+    """Standard normal CDF Φ(z) of a Column: Abramowitz–Stegun 26.2.17
+    for z ≥ 0, mirrored for z < 0.  Explicit arithmetic with ``exp`` the
+    only libm call, the same tree as ``wave6_ts._PHI_SQL`` on the oracle
+    side, so the Spark and DuckDB p-values agree bit-for-bit."""
+
+    def tail(za):
+        k = 1.0 / (1.0 + 0.2316419 * za)
+        poly = (
+            (((1.330274429 * k - 1.821255978) * k + 1.781477937) * k
+             - 0.356563782) * k + 0.319381530
+        ) * k
+        return F.exp(-za * za / 2.0) * 0.3989422804014327 * poly
+
+    return F.when(zc >= 0, 1.0 - tail(zc)).otherwise(tail(-zc))
+
+
 def scratch_dir(prefix: str) -> str:
     """Session-lifetime scratch directory for gates that must return a
     LAZY frame whose backing files outlive the gate body (the txn

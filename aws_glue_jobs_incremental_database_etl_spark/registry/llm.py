@@ -7,7 +7,6 @@ shared dicts from ``._core``.
 
 from __future__ import annotations
 
-import tempfile  # noqa: F401  (several queries stage scratch dirs)
 
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
@@ -24,6 +23,7 @@ from ._core import (  # noqa: F401
     O,
     Q,
     query,
+    scratch_dir,
 )
 
 # =====================================================================
@@ -152,7 +152,7 @@ def incremental_topk_q(spark, sf_dir):
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    state = tempfile.mkdtemp(prefix="inc_topk_")
+    state = scratch_dir("inc_topk_")
     out = None
     for m in (0, 1, 2):
         out = cosine_topk_incremental(
@@ -1203,7 +1203,7 @@ def ivf_partitioned_topk_q(spark, sf_dir):
     )
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     cents = fixed_centroids(64, 8, seed=7)
-    loc = tempfile.mkdtemp(prefix="ivf_part_") + "/index"
+    loc = scratch_dir("ivf_part_") + "/index"
     build_ivf_index(emb, loc, cents)
     return cosine_topk_ivf_partitioned(
         spark, loc, qvec, cents, k=10, nprobe=2

@@ -7,7 +7,6 @@ shared dicts from ``._core``.
 
 from __future__ import annotations
 
-import tempfile  # noqa: F401  (several queries stage scratch dirs)
 
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
@@ -23,6 +22,7 @@ from ._core import (  # noqa: F401
     O,
     Q,
     query,
+    scratch_dir,
 )
 from .llm import _centroid_assign_sql  # noqa: F401
 
@@ -260,13 +260,11 @@ def incremental_dedup_q(spark, sf_dir):
     the triangle {45,267,413} (413 matches 45 directly), so the two
     semantics coincide.  Banding recall is 1 at τ=0.7 on this data
     (same argument as minhash_near_dup_docs)."""
-    import tempfile
-
     from ..operators.incremental_dedup import MinHashIndex
 
     d = load_table(spark, sf_dir, "documents")
     idx = MinHashIndex(
-        tempfile.mkdtemp(prefix="mh_idx_") + "/index", threshold=0.7, shingle_k=3
+        scratch_dir("mh_idx_") + "/index", threshold=0.7, shingle_k=3
     )
     s1 = idx.dedup_batch(d.filter(F.col("doc_id") < 250), "doc_id", "text")
     s2 = idx.dedup_batch(d.filter(F.col("doc_id") >= 250), "doc_id", "text")
@@ -1026,7 +1024,7 @@ def incremental_aggregate_q(spark, sf_dir):
         "price_dec", F.col("o_totalprice").cast("decimal(18,6)")
     )
     agg = IncrementalAggregate(
-        tempfile.mkdtemp(prefix="inc_agg_") + "/summary",
+        scratch_dir("inc_agg_") + "/summary",
         ["o_custkey"],
         {"price_dec": "sum", "o_orderkey": "count"},
     )
@@ -1131,7 +1129,7 @@ def scd2_q(spark, sf_dir):
             F.col("o_orderkey").between(5000, 5499), F.col("o_totalprice") + 1000.0
         ).otherwise(F.col("o_totalprice")),
     )
-    loc = tempfile.mkdtemp(prefix="scd2_") + "/dim"
+    loc = scratch_dir("scd2_") + "/dim"
     scd2_apply(
         spark, loc, v1.withColumn("v", F.lit(1).cast("bigint")),
         ["o_orderkey"], version_col="v",
@@ -1219,7 +1217,7 @@ def hll_q(spark, sf_dir):
 
     o = load_table(spark, sf_dir, "orders")
     agg = IncrementalAggregate(
-        tempfile.mkdtemp(prefix="hll_agg_") + "/summary",
+        scratch_dir("hll_agg_") + "/summary",
         ["o_orderstatus"],
         {"o_orderpriority": "approx_distinct", "o_orderkey": "count"},
     )
@@ -1330,7 +1328,7 @@ def merge_upsert_q(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    loc = tempfile.mkdtemp(prefix="merge_tgt_") + "/orders"
+    loc = scratch_dir("merge_tgt_") + "/orders"
     o.filter("o_orderkey <= 14000").withColumn(
         "v", F.lit(1).cast("bigint")
     ).write.partitionBy("o_orderstatus").parquet(loc)

@@ -14,7 +14,6 @@ fold (audited in plans/audit.py)."""
 from __future__ import annotations
 
 import shutil  # the expire-history gate cleans up its staged lake
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1646,7 +1645,7 @@ def etl_expire_history_q(spark, sf_dir):
     from ..pipeline import IncrementalPipeline
     from ..txn import expire_history, published_history, read_table_asof
 
-    work = tempfile.mkdtemp(prefix="etl_expire_")
+    work = scratch_dir("etl_expire_")
     try:
         full = load_table(spark, sf_dir, "orders")
         third = full.agg(

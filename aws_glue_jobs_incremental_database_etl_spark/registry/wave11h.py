@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..tables import load_table
-from ._core import O, Q, query  # noqa: F401
+from ._core import O, Q, normal_cdf, query  # noqa: F401
 from .wave6_ts import _PHI_SQL
 
 
@@ -426,26 +426,10 @@ def benjamini_yekutieli_q(spark, sf_dir):
         ).alias("zst"),
     )
 
-    def phi(zc):
-        def tail(za):
-            k = 1.0 / (1.0 + 0.2316419 * za)
-            poly = (
-                (
-                    ((1.330274429 * k - 1.821255978) * k + 1.781477937)
-                    * k
-                    - 0.356563782
-                )
-                * k
-                + 0.319381530
-            ) * k
-            return F.exp(-za * za / 2.0) * 0.3989422804014327 * poly
-
-        return F.when(zc >= 0, 1.0 - tail(zc)).otherwise(tail(-zc))
-
     p = z.select(
         "event_type",
         "dow",
-        (2.0 * (1.0 - phi(F.abs(F.col("zst"))))).alias("pval"),
+        (2.0 * (1.0 - normal_cdf(F.abs(F.col("zst"))))).alias("pval"),
     )
     wr = Window.orderBy(
         F.col("pval").asc(), F.col("event_type").asc(), F.col("dow").asc()

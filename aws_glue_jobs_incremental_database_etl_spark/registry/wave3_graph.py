@@ -7,7 +7,6 @@ shared dicts from ``._core``.
 
 from __future__ import annotations
 
-import tempfile  # noqa: F401  (several queries stage scratch dirs)
 
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
@@ -24,6 +23,7 @@ from ._core import (  # noqa: F401
     O,
     Q,
     query,
+    scratch_dir,
 )
 from .llm import _centroid_assign_sql, _curation_v3_oracle, _ivf_topk_oracle  # noqa: F401
 
@@ -1446,8 +1446,6 @@ def incremental_join_q(spark, sf_dir):
     semi-join pre-filtering of the accumulated side) — history is
     never re-joined with history.  The maintained view aggregated by
     market segment must equal the oracle's one-shot join."""
-    import tempfile as _tf
-
     from ..operators.incremental_join import IncrementalJoinView
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -1456,7 +1454,7 @@ def incremental_join_q(spark, sf_dir):
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
     )
-    v = IncrementalJoinView(_tf.mkdtemp(prefix="inc_join_"), on="o_custkey")
+    v = IncrementalJoinView(scratch_dir("inc_join_"), on="o_custkey")
     v.apply_batch(spark, left_delta=o.filter("o_orderkey % 3 = 0"))
     v.apply_batch(spark, right_delta=c.filter("o_custkey % 2 = 0"))
     v.apply_batch(
@@ -2081,7 +2079,7 @@ def ivf_append_q(spark, sf_dir):
     )
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     cents = fixed_centroids(64, 8, seed=7)
-    loc = tempfile.mkdtemp(prefix="ivf_append_") + "/index"
+    loc = scratch_dir("ivf_append_") + "/index"
     build_ivf_index(emb.filter("vec_id % 2 = 0"), loc, cents)
     append_to_ivf_index(emb.filter("vec_id % 2 = 1"), loc, cents)
     return cosine_topk_ivf_partitioned(
@@ -2117,7 +2115,7 @@ def ivfpq_partitioned_q(spark, sf_dir):
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     cents = fixed_centroids(64, 8, seed=7)
     cb = pq_codebooks(64, 4, 16, seed=11)
-    loc = tempfile.mkdtemp(prefix="ivfpq_part_") + "/index"
+    loc = scratch_dir("ivfpq_part_") + "/index"
     build_ivfpq_index(emb, loc, cents, cb)
     return ivfpq_topk_partitioned(
         spark, loc, list(qvec), cents, cb, k=10, nprobe=2
@@ -2151,7 +2149,7 @@ def ivfpq_append_q(spark, sf_dir):
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     cents = fixed_centroids(64, 8, seed=7)
     cb = pq_codebooks(64, 4, 16, seed=11)
-    loc = tempfile.mkdtemp(prefix="ivfpq_append_") + "/index"
+    loc = scratch_dir("ivfpq_append_") + "/index"
     build_ivfpq_index(emb.filter("vec_id % 2 = 0"), loc, cents, cb)
     append_to_ivfpq_index(emb.filter("vec_id % 2 = 1"), loc, cents, cb)
     return ivfpq_topk_partitioned(
@@ -2208,7 +2206,7 @@ def ivfpq_refine_q(spark, sf_dir):
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     cents = fixed_centroids(64, 8, seed=7)
     cb = pq_codebooks(64, 4, 16, seed=11)
-    loc = tempfile.mkdtemp(prefix="ivfpq_refine_") + "/index"
+    loc = scratch_dir("ivfpq_refine_") + "/index"
     build_ivfpq_index(emb, loc, cents, cb)
     return ivfpq_refine_topk(
         spark, loc, emb, list(qvec), cents, cb,
@@ -2385,13 +2383,11 @@ def winnow_incremental_q(spark, sf_dir):
     only on open chains (a doc whose every dominator was itself
     dropped) — verified absent at τ=0.7 on this corpus (24 losers,
     each with a surviving dominator)."""
-    import tempfile
-
     from ..operators.incremental_dedup import WinnowIndex
 
     d = load_table(spark, sf_dir, "documents")
     idx = WinnowIndex(
-        tempfile.mkdtemp(prefix="wn_idx_") + "/index", threshold=0.7
+        scratch_dir("wn_idx_") + "/index", threshold=0.7
     )
     s1 = idx.dedup_batch(d.filter(F.col("doc_id") < 250), "doc_id", "text")
     s2 = idx.dedup_batch(d.filter(F.col("doc_id") >= 250), "doc_id", "text")
@@ -3126,8 +3122,6 @@ def weighted_incremental_join_q(spark, sf_dir):
     weight directly (n_orders = Σ_net, revenue = Σ_net·price) —
     deletes propagate through the view without ever re-joining
     history."""
-    import tempfile as _tf
-
     from ..operators.incremental_join import WeightedIncrementalJoinView
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -3138,7 +3132,7 @@ def weighted_incremental_join_q(spark, sf_dir):
     )
     ins = F.lit(1).alias("_w")
     v = WeightedIncrementalJoinView(
-        _tf.mkdtemp(prefix="winc_join_"), on="o_custkey"
+        scratch_dir("winc_join_"), on="o_custkey"
     )
     v.apply_batch(
         spark,
@@ -3343,10 +3337,8 @@ def orc_roundtrip_q(spark, sf_dir):
     the read-back must match the oracle computed on the parquet
     original — proving the ORC path is value-preserving, not just
     runnable."""
-    import tempfile as _tf
-
     o = load_table(spark, sf_dir, "orders")
-    loc = _tf.mkdtemp(prefix="orc_rt_") + "/orders_orc"
+    loc = scratch_dir("orc_rt_") + "/orders_orc"
     o.write.mode("overwrite").orc(loc)
     back = spark.read.orc(loc)
     return (
@@ -3403,10 +3395,8 @@ def csv_roundtrip_q(spark, sf_dir):
     because Spark's CSV writer emits round-trippable shortest reprs;
     the timestamp is compared at DATE grain, the reference
     blueprint's partition grain."""
-    import tempfile as _tf
-
     o = load_table(spark, sf_dir, "orders")
-    loc = _tf.mkdtemp(prefix="csv_rt_") + "/orders_csv"
+    loc = scratch_dir("csv_rt_") + "/orders_csv"
     o.write.mode("overwrite").option("header", "true").csv(loc)
     back = spark.read.schema(o.schema).option("header", "true").csv(loc)
     return (

@@ -23,6 +23,7 @@ from ._core import (  # noqa: F401
     _SHINGLE_INTER_SQL,
     O,
     Q,
+    normal_cdf,
     query,
 )
 from .llm import _centroid_assign_sql  # noqa: F401
@@ -607,23 +608,11 @@ def fdr_bh_q(spark, sf_dir):
         ).alias("zst"),
     )
 
-    def phi(zc):
-        # A&S 26.2.17 for z >= 0; mirrored for z < 0
-        def tail(za):
-            k = 1.0 / (1.0 + 0.2316419 * za)
-            poly = (
-                (((1.330274429 * k - 1.821255978) * k + 1.781477937) * k
-                 - 0.356563782) * k + 0.319381530
-            ) * k
-            return F.exp(-za * za / 2.0) * 0.3989422804014327 * poly
-
-        return F.when(zc >= 0, 1.0 - tail(zc)).otherwise(tail(-zc))
-
     p = z.select(
         "event_type",
         "dow",
         "n",
-        (2.0 * (1.0 - phi(F.abs(F.col("zst"))))).alias("pval"),
+        (2.0 * (1.0 - normal_cdf(F.abs(F.col("zst"))))).alias("pval"),
     )
     wr = Window.orderBy(
         F.col("pval").asc(), F.col("event_type").asc(), F.col("dow").asc()

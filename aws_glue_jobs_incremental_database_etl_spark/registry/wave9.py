@@ -22,6 +22,7 @@ from ..tables import load_table  # noqa: F401
 from ._core import (  # noqa: F401
     O,
     Q,
+    normal_cdf,
     query,
 )
 
@@ -1062,22 +1063,6 @@ def lorenz_q(spark, sf_dir):
     ).orderBy("decile")
 
 
-def _phi_spark(zc):
-    """Abramowitz–Stegun 26.2.17 normal CDF (the fdr_bh gate's
-    polynomial, shared constants) — explicit arithmetic, exp() the
-    only libm call, identical tree to ``wave6_ts._PHI_SQL``."""
-
-    def tail(za):
-        k = 1.0 / (1.0 + 0.2316419 * za)
-        poly = (
-            (((1.330274429 * k - 1.821255978) * k + 1.781477937) * k
-             - 0.356563782) * k + 0.319381530
-        ) * k
-        return F.exp(-za * za / 2.0) * 0.3989422804014327 * poly
-
-    return F.when(zc >= 0, 1.0 - tail(zc)).otherwise(tail(-zc))
-
-
 def _holm_oracle() -> str:
     from .wave6_ts import _PHI_SQL
 
@@ -1163,7 +1148,7 @@ def holm_q(spark, sf_dir):
         "event_type",
         "dow",
         "n",
-        (2.0 * (1.0 - _phi_spark(F.abs(F.col("zst"))))).alias("pval"),
+        (2.0 * (1.0 - normal_cdf(F.abs(F.col("zst"))))).alias("pval"),
     )
     wr = Window.orderBy(
         F.col("pval").asc(), F.col("event_type").asc(), F.col("dow").asc()

@@ -11,7 +11,6 @@ shared dicts from ``._core``.
 from __future__ import annotations
 
 import shutil  # the txn time-travel gate cleans up its staged lake
-import tempfile  # noqa: F401  (the txn time-travel gate stages a lake)
 
 import pandas as pd  # noqa: F401  resolves pandas_udf string annotations
 
@@ -3734,7 +3733,7 @@ def etl_snapshot_asof_q(spark, sf_dir):
     from ..pipeline import IncrementalPipeline
     from ..txn import published_history, read_table_asof
 
-    work = tempfile.mkdtemp(prefix="etl_asof_")
+    work = scratch_dir("etl_asof_")
     try:
         full = load_table(spark, sf_dir, "orders")
         mid = full.agg(

@@ -15,6 +15,42 @@ import os
 from pyspark.sql import SparkSession
 
 
+def runtime_sql_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
+    """The runtime-settable SQL confs every session runs with: the ones
+    :func:`get_spark` builds with, and the ones the driver entry point
+    sets on a session it did not build.  ``shuffle_partitions``
+    defaults to ``$SPARK_GRAFT_CPUS``."""
+    if shuffle_partitions is None:
+        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return {
+        # The driver testdata's events.ts is parquet TIMESTAMP(NANOS),
+        # which the vectorized reader rejects; read as long and convert
+        # (values are µs-aligned — see tables.load_table).
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.session.timeZone": "UTC",
+        # AQE: runtime partition coalescing, skew-join splitting, and
+        # dynamic join-strategy switching — the single most important
+        # setting for unpredictable 100 TB key distributions.
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        # Dimension tables (region/nation/customer/supplier/part at
+        # warehouse scale) broadcast instead of shuffling the fact side.
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        # Arrow for pandas_udf / applyInPandas / mapInPandas operators.
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # Bound each Arrow batch handed to a Python kernel: the
+        # embedding/simhash kernels hold batch × dim float64 plus the
+        # result in memory, so executor footprint must be set by this
+        # knob, not by partition size (default 10k rows is right for
+        # 64-dim floats; drop it for wide multimodal blobs).
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        # Keep scan splits ~128MB so task count scales with data volume.
+        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+    }
+
+
 def get_spark(
     app_name: str = "aws_glue_jobs_incremental_database_etl_spark",
     master: str | None = None,
@@ -48,38 +84,13 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # AQE: runtime partition coalescing, skew-join splitting, and
-        # dynamic join-strategy switching — the single most important
-        # setting for unpredictable 100 TB key distributions.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             str(max(initial_partitions, shuffle_partitions)),
         )
-        # Dimension tables (region/nation/customer/supplier/part at
-        # warehouse scale) broadcast instead of shuffling the fact side.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Arrow for pandas_udf / applyInPandas / mapInPandas operators.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Bound each Arrow batch handed to a Python kernel: the
-        # embedding/simhash kernels hold batch × dim float64 plus the
-        # result in memory, so executor footprint must be set by this
-        # knob, not by partition size (default 10k rows is right for
-        # 64-dim floats; drop it for wide multimodal blobs).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Keep scan splits ~128MB so task count scales with data volume.
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        # The driver testdata's events.ts is parquet TIMESTAMP(NANOS),
-        # which the vectorized reader rejects; read as long and convert
-        # (values are µs-aligned — see tables.load_table).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**runtime_sql_conf(shuffle_partitions), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..fsutil import fs_for, join_path, publish, versions
+from ..fsutil import fold, fs_for, join_path, latest, publish
 
 
 def incremental_file_stream(
@@ -198,16 +198,13 @@ def run_aggregate_maintenance(
     This composition is what discharges the aggregate's replay caveat:
     combining is not idempotent, and a crash AFTER the fold but BEFORE
     the checkpoint commit replays the batch — so the epoch id is
-    passed down and ``apply_batch`` skips ids at or below its last
-    committed state version (replayed ids carry identical data, so
-    skip ≡ dedup).  ``Trigger.AvailableNow`` drains what exists and
-    stops — schedule repeatedly for continuous maintenance.
+    passed down as the fold's batch id.  ``Trigger.AvailableNow``
+    drains what exists and stops — schedule repeatedly for continuous
+    maintenance.
     """
 
     def _fold(batch: DataFrame, batch_id: int) -> None:
         if not batch.isEmpty():
-            # epoch id → replay of a crashed-before-checkpoint batch
-            # is skipped inside apply_batch (exactly-once fold)
             aggregate.apply_batch(batch, batch_id=batch_id)
 
     _drain(stream_df, checkpoint, _fold)
@@ -364,9 +361,8 @@ def streaming_cms_token_counts(
 
     Replay safety is EXACTLY-ONCE, not just at-least-once: the folded
     sketch is stateful, so re-merging a replayed batch would double
-    count; :func:`sketch_fold_writer` skips any batch id at or below
-    the last committed state.  Read the current sketch with
-    :func:`read_sketch`.
+    count; :func:`sketch_fold_writer` skips it.  Read the current
+    sketch with :func:`read_sketch`.
     """
     from ..functions.cms import cms_build, cms_merge
 
@@ -384,42 +380,29 @@ def streaming_cms_token_counts(
 def read_sketch(spark, sketch_path: str) -> DataFrame:
     """Current value of a sketch maintained by ``sketch_fold_writer``:
     the highest committed ``state-<batch_id>`` directory."""
-    ids = versions(sketch_path, "state-", spark)
-    if not ids:
+    cur = latest(sketch_path, "state-", spark)
+    if cur is None:
         raise FileNotFoundError(f"no committed sketch state under {sketch_path}")
-    return spark.read.parquet(join_path(sketch_path, f"state-{ids[-1]}"))
+    return spark.read.parquet(cur)
 
 
 def sketch_fold_writer(sketch_path: str, build_delta, merge):
     """foreachBatch updater folding per-batch deltas into a persisted
-    bounded sketch with EXACTLY-ONCE semantics: batch ids at or below
-    the last committed state are skipped (Structured Streaming replays
-    a batch id with identical data, so skip ≡ dedup), and each fold is
-    committed as ``state-<batch_id>`` by ``fsutil.publish``, superseding
-    every older state.  One sketch path belongs to one
-    stream/checkpoint (batch ids are only monotone within a
+    bounded sketch with EXACTLY-ONCE semantics: each epoch is one
+    versioned fold (``fsutil.fold``) committed as ``state-<batch_id>``,
+    so a replayed epoch is skipped (Structured Streaming replays a batch
+    id with identical data, so skip ≡ dedup).  One sketch path belongs
+    to one stream/checkpoint (batch ids are only monotone within a
     checkpoint)."""
 
     def _update(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        committed = versions(sketch_path, "state-", spark)
-        if committed and batch_id <= committed[-1]:
-            return  # replay of an already-folded batch
-        delta = build_delta(batch)
-        if committed:
-            prev = spark.read.parquet(
-                join_path(sketch_path, f"state-{committed[-1]}")
-            )
-            merged = merge(prev, delta)
-        else:
-            merged = delta
-        publish(
+        fold(
             sketch_path,
             "state-",
             batch_id,
-            merged.write.mode("overwrite").parquet,
-            replaces=[f"state-{v}" for v in committed],
-            spark=spark,
+            lambda: build_delta(batch),
+            merge,
+            batch.sparkSession,
         )
 
     return _update
@@ -512,12 +495,9 @@ def streaming_topk_maintenance(
     into the committed state — the historical stream is never
     re-scanned (top-k is monotone-mergeable under appends).
 
-    Exactly-once via ``sketch_fold_writer``'s contract applied to the
-    top-k fold: batch ids at or below the last committed state are
-    skipped on replay (a replayed id carries identical rows, and the
-    fold is NOT idempotent at the row level — re-merging cannot
-    corrupt a top-k, but skipping is still the cheaper and uniform
-    rule).  Read the current top-k with :func:`read_sketch`.
+    Exactly-once via :func:`sketch_fold_writer` (re-merging a replayed
+    batch cannot corrupt a top-k, but skipping is still the cheaper
+    and uniform rule).  Read the current top-k with :func:`read_sketch`.
     """
     from ..operators.similarity import cosine_topk
     from pyspark.sql import functions as F

@@ -36,15 +36,17 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# (path, mtime_ns, size) -> StructType.  Parquet schema inference costs
-# ~70 ms of driver time PER spark.read.parquet() call (footer fetch +
-# merge); the registry issues ~600 load_table calls per full bench run,
-# all over a handful of immutable testdata files.  Memoizing the
-# INFERRED SCHEMA (never data, never plans) and re-reading with
-# ``spark.read.schema(...)`` removes that fixed cost while leaving
-# every execution to scan parquet normally.  The (mtime, size) key
-# invalidates the entry if a file is ever regenerated in place.
-_SCHEMA_CACHE: dict[tuple[str, int, int], T.StructType] = {}
+# (path, mtime_ns, size, nanosAsLong) -> StructType.  Parquet schema
+# inference costs ~70 ms of driver time PER spark.read.parquet() call
+# (footer fetch + merge); the registry issues ~600 load_table calls per
+# full bench run, all over a handful of immutable testdata files.
+# Memoizing the INFERRED SCHEMA (never data, never plans) and
+# re-reading with ``spark.read.schema(...)`` removes that fixed cost
+# while leaving every execution to scan parquet normally.  The
+# (mtime, size) key invalidates the entry if a file is ever regenerated
+# in place; the session's ``nanosAsLong`` decides whether a
+# TIMESTAMP(NANOS) column infers as long, so it is part of the key.
+_SCHEMA_CACHE: dict[tuple[str, int, int, str], T.StructType] = {}
 
 # sf_dir -> total parquet bytes (immutable testdata; cached forever).
 _DIR_BYTES: dict[str, int] = {}
@@ -89,7 +91,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     try:
         st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
+        nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+        key = (path, st.st_mtime_ns, st.st_size, nanos)
     except OSError:
         key = None
     schema = _SCHEMA_CACHE.get(key) if key is not None else None

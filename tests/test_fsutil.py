@@ -449,3 +449,32 @@ def test_no_hand_written_commit_outside_fsutil():
 
             visit(tree, None)
     assert not found, "hand-written commit outside fsutil.py:\n" + "\n".join(found)
+
+
+def test_join_view_on_file_uri_root(spark, tmp_path):
+    """The incremental join view sees its own state on a ``file://``
+    root: a left batch then a right batch produce the joined view."""
+    from aws_glue_jobs_incremental_database_etl_spark.operators.incremental_join import (
+        IncrementalJoinView,
+        read_changes,
+    )
+
+    v = IncrementalJoinView("file://" + str(tmp_path / "v"), on="k")
+    v.apply_batch(
+        spark,
+        left_delta=spark.createDataFrame([(1, 10), (2, 20)], "k long, x long"),
+        batch_id=0,
+    )
+    v.apply_batch(
+        spark,
+        right_delta=spark.createDataFrame([(1, "a")], "k long, y string"),
+        batch_id=1,
+    )
+    got = {tuple(r) for r in v.read_view(spark).select("k", "x", "y").collect()}
+    assert got == {(1, 10, "a")}
+    assert read_changes(v, spark).count() == 1
+    assert _ls(str(tmp_path / "v" / "view")) == ["batch=1"]
+    # compaction orders partitions by the backend's mtime
+    local = str(tmp_path / "v" / "view" / "batch=1")
+    got = fs_for("file://" + local, spark).getmtime("file://" + local)
+    assert abs(got - os.path.getmtime(local)) < 1.0

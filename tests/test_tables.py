@@ -51,3 +51,18 @@ def test_directory_style_table_counts_its_part_files(spark, tmp_path, monkeypatc
             spark.conf.unset(_KEY)
         else:
             spark.conf.set(_KEY, before)
+
+
+def test_schema_cache_keys_on_nanos_as_long(spark, sf_dir, monkeypatch):
+    """``nanosAsLong`` decides how a TIMESTAMP(NANOS) column infers, so
+    a schema cached under one value is not reused under the other."""
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(conf)
+    monkeypatch.setattr(tables, "_SCHEMA_CACHE", {})
+    try:
+        for value in ("true", "false", "true"):
+            spark.conf.set(conf, value)
+            tables.load_table(spark, sf_dir, "orders")
+        assert len(tables._SCHEMA_CACHE) == 2
+    finally:
+        spark.conf.set(conf, old)

@@ -800,3 +800,37 @@ def test_weighted_join_view_compacts_repeatedly(spark, tmp_path):
     assert sorted(os.listdir(v.view_dir)) == ["batch=4", "batch=compact-3"]
     net = {(r.k, r.v, r.u, r._net) for r in v.read_view_net(spark).collect()}
     assert net == {(1, i, 0, 1) for i in (1, 2, 3, 4)}
+
+
+def test_weighted_join_view_second_compaction_keeps_newest_batch(spark, tmp_path):
+    """Two back-to-back compactions keep the newest ``batch=<id>``
+    partition (the in-flight epoch's replay marker): the compacted
+    partition the first one wrote is not the partition to keep."""
+    import os
+
+    from aws_glue_jobs_incremental_database_etl_spark.operators.incremental_join import (
+        WeightedIncrementalJoinView,
+    )
+
+    rows = "k long, v long, _w int"
+    v = WeightedIncrementalJoinView(str(tmp_path / "w"), on="k")
+    v.apply_batch(
+        spark,
+        right_delta=spark.createDataFrame([(1, 0, 1)], rows)
+        .selectExpr("k", "v as u", "_w"),
+        batch_id=0,
+    )
+    for i in (1, 2):
+        v.apply_batch(
+            spark,
+            left_delta=spark.createDataFrame([(1, i, 1)], rows),
+            batch_id=i,
+        )
+    v.compact(spark)
+    v.compact(spark)
+    assert sorted(os.listdir(v.view_dir)) == ["batch=2", "batch=compact-1"]
+    assert v.apply_batch(  # the replay marker still makes a replay a no-op
+        spark, left_delta=spark.createDataFrame([(1, 2, 1)], rows), batch_id=2
+    ) is None
+    net = {(r.k, r.v, r.u, r._net) for r in v.read_view_net(spark).collect()}
+    assert net == {(1, 1, 0, 1), (1, 2, 0, 1)}
