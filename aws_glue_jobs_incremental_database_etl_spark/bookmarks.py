@@ -19,12 +19,33 @@ watermark filter is a plain Catalyst predicate, so it is *pushed down*
 to the source (JDBC ``WHERE`` clause / Parquet row-group min-max
 skipping).  Computing the next watermark is a single global min/max
 aggregate (map-side partial + 1-row final), not a sort.
+
+Unchanged-listing signature: beside each file source's watermark the
+store keeps, under its own context key (``<ctx>::listing``), a hash of
+the table's whole config, the source format, options and path, each
+file's ``(relative path, bytes, mtime)`` from ``fsutil`` ``listing``,
+and the watermark the context holds after the commit.  It rests on one
+contract, the one Glue's S3 bookmarks and Spark's file stream source
+also rely on: a file is complete and immutable once it is listed (a
+rewrite in place changes its size or mtime, a Spark overwrite its
+name).  The proof that a poll whose signature matches is empty: a
+committed run scanned listing L with predicate ``k > w`` and committed
+``w' >= w``, the per-key max of that batch; so every row of L has
+``k <= w'`` or a null key, and the next filtered scan of an unchanged
+L is empty (likewise ``<`` for DESC; for composite keys every row
+fails the conjunction on at least one key of ``w'``).  A signature is
+therefore staged only when that batch was empty or ``w'`` holds at
+least one key: a first run whose keys are all null leaves the next
+run's scan unfiltered.  JDBC sources, globs and missing paths have no
+signature and always scan.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import decimal
+import hashlib
+import json
 from collections.abc import Sequence
 from functools import reduce
 from typing import Any
@@ -33,6 +54,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .fsutil import locked, read_json, write_json
+
+# context-key suffix of a source-listing signature (module docstring)
+_LISTING = "::listing"
 
 # -- watermark value (de)serialization ------------------------------------
 # JSON can't hold timestamps/dates/decimals natively; tag them.
@@ -154,6 +178,36 @@ class BookmarkStore:
             merged.update(watermark)
             self._staged[self._key(ctx)] = merged
 
+    # -- unchanged-listing signature (module docstring) -------------------
+
+    def _signature(self, source: Any, watermark: dict[str, Any] | None) -> dict[str, str]:
+        blob = json.dumps(
+            [source, {k: _encode(v) for k, v in (watermark or {}).items()}],
+            sort_keys=True,
+            default=str,
+        )
+        return {"sha256": hashlib.sha256(blob.encode()).hexdigest()}
+
+    def listing_unchanged(self, ctx: str, source: Any) -> bool:
+        """True when ``source`` (the pipeline's description of a file
+        source and its listing) matches the signature committed for
+        ``ctx`` together with ``ctx``'s committed watermark."""
+        committed = self.get(ctx + _LISTING)
+        return committed is not None and committed == self._signature(
+            source, self.get(ctx)
+        )
+
+    def stage_listing(self, ctx: str, source: Any) -> None:
+        """Stage ``source``'s signature, bound to the watermark ``ctx``
+        holds after commit (staged, else committed); committed with the
+        watermarks by :meth:`commit` or the txn manifest."""
+        wm = self._staged.get(self._key(ctx), self.get(ctx))
+        self.stage(ctx + _LISTING, self._signature(source, wm))
+
+    def has_staged_watermark(self) -> bool:
+        """Whether anything besides listing signatures is staged."""
+        return any(not k.endswith(_LISTING) for k in self._staged)
+
     def staged_snapshot(self) -> dict[str, dict[str, Any]]:
         """Staged-but-uncommitted watermarks, keyed by FULL context key
         (``job::ctx``) — consumed by the staged-commit manifest
@@ -179,7 +233,10 @@ class BookmarkStore:
         disk is preserved.  Staged entries win over disk for the
         contexts they cover.  Where the lock degrades to none (see
         ``fsutil.locked``), give each shard its own bookmark path.
+        Nothing staged → the document is not rewritten.
         """
+        if not self._staged:
+            return
         with locked(self.path):
             try:
                 on_disk = read_json(self.path, {})

@@ -48,6 +48,11 @@ its own document).  The lock is per open file, so a body that enters
 it again in the same process blocks forever: no ``locked`` body calls
 code that locks.
 
+A source listing (``listing`` on both backends) is every file Spark's
+file sources would read under a root, as ``(relative path, bytes,
+mtime)``: what the pipeline hashes to end a poll of an unchanged
+source before Spark.
+
 Whole-tree swaps (:func:`swap_tree`) rename the live tree to a trash
 name, the staged tree to the live name, roll back if that fails, and
 delete the trash last; ``maintenance.vacuum_temp_trees`` reclaims what
@@ -94,6 +99,20 @@ def dir_bytes(path: str) -> int:
             if not f.startswith((".", "_")):
                 total += os.path.getsize(os.path.join(root, f))
     return total
+
+
+def _unread(name: str) -> bool:
+    """Spark's file-index rule for an entry its file sources never read:
+    a ``.`` name, an ``_`` name that is not a ``k=v`` partition
+    directory or a parquet summary file, and an in-flight
+    ``._COPYING_`` copy."""
+    if name.startswith(("_metadata", "_common_metadata")):
+        return False
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
 
 
 class LocalFS:
@@ -152,6 +171,27 @@ class LocalFS:
                     )
                 )
         yield from sorted(out)
+
+    def listing(self, root: str) -> list[tuple[str, int, float]] | None:
+        """``(relative path, bytes, mtime)`` of every file under ``root``
+        that Spark's file sources read (:func:`_unread` prunes the rest,
+        directories included), sorted; a file root lists itself under
+        its own name; ``None`` when ``root`` is missing."""
+        if os.path.isfile(root):
+            st = os.stat(root)
+            return [(os.path.basename(root), st.st_size, st.st_mtime)]
+        if not os.path.isdir(root):
+            return None
+        out = []
+        for r, dirs, files in os.walk(root):
+            dirs[:] = [d for d in dirs if not _unread(d)]
+            for f in files:
+                if not _unread(f):
+                    p = os.path.join(r, f)
+                    st = os.stat(p)
+                    rel = os.path.relpath(p, root).replace(os.sep, "/")
+                    out.append((rel, st.st_size, st.st_mtime))
+        return sorted(out)
 
     def read_text(self, p: str) -> str:
         with open(p) as f:
@@ -256,6 +296,27 @@ class HadoopFS:
                 )
             out.append(p[len(prefix) :])
         yield from sorted(out)
+
+    def listing(self, root: str) -> list[tuple[str, int, float]] | None:
+        """Same contract as :meth:`LocalFS.listing`, from one recursive
+        ``listFiles``; relative paths are cut after the normalized root,
+        as in :meth:`walk_files`."""
+        jroot = self._jpath(root)
+        if not self._fs.exists(jroot):
+            return None
+        top = self._fs.getFileStatus(jroot)
+        if top.isFile():
+            return [(top.getPath().getName(), int(top.getLen()),
+                     top.getModificationTime() / 1000)]
+        n = len(top.getPath().toString().rstrip("/")) + 1
+        it = self._fs.listFiles(jroot, True)
+        out = []
+        while it.hasNext():
+            st = it.next()
+            rel = st.getPath().toString()[n:]
+            if not any(_unread(c) for c in rel.split("/")):
+                out.append((rel, int(st.getLen()), st.getModificationTime() / 1000))
+        return sorted(out)
 
     def read_text(self, p: str) -> str:
         stream = self._fs.open(self._jpath(p))

@@ -4,24 +4,28 @@ The engine's equivalent of the reference's ``Driver.run_transform`` +
 ``Transform._transform`` (``jdbc_incremental.py:564-639, 175-229``),
 stage for stage (SURVEY.md §3):
 
-  config → catalog resolve → DDL branch (create / evolve) →
-  incremental scan (bookmark filter, pushed down) → empty probe →
-  apply_mapping (cast to catalog types) → one batch aggregate →
-  drop_null_fields → partition registration → partitioned append
-  write → lineage stamp → single end-of-job bookmark commit
-  (at-least-once, reference ``:639``).
+  config → unchanged-listing check → catalog resolve → DDL branch
+  (create / evolve) → incremental scan (bookmark filter, pushed down)
+  → apply_mapping (cast to catalog types) → one batch aggregate (an
+  empty batch stops here) → drop_null_fields → partition registration
+  → partitioned append write → lineage stamp → single end-of-job
+  bookmark commit (at-least-once, reference ``:639``).
 
-Scale design — a non-empty batch costs three Spark actions, an empty
-one costs one:
+Scale design — a non-empty batch costs two Spark actions, an empty
+one costs one, and a poll of an unchanged file listing costs none:
+- unchanged listing: a file source whose config, options and file
+  listing (path, bytes, mtime) hash to the signature committed with
+  its watermark cannot hold a row beyond it (the proof and the
+  immutable-file contract are in ``bookmarks``), so the run stops
+  before any DataFrame is built;
 - the bookmark predicate is a Catalyst filter → pushed to the parquet
   row-group / JDBC WHERE level; the incremental batch, not the table,
   is what flows through the job;
-- probe: a ``take(1)`` on the filtered scan, before anything is
-  mapped or cached, so an empty poll stops after one small job;
 - aggregate: ONE global aggregate over the cached, mapped batch gives
-  every column's non-null count (DropNullFields), the row count, the
-  next watermark (per-key max/min) and the distinct partition tuples
-  (bounded by partition cardinality, not data size);
+  the row count (zero ends the run as an empty batch), every column's
+  non-null count (DropNullFields), the next watermark (per-key
+  max/min) and the distinct partition tuples (bounded by partition
+  cardinality, not data size);
 - write: a distributed ``partitionBy`` append of the same cached
   batch — no per-partition driver round-trips; the partitions are
   registered with one catalog rewrite, not one per tuple.
@@ -30,8 +34,7 @@ one costs one:
 from __future__ import annotations
 
 import datetime as dt
-import os
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +42,7 @@ from pyspark.sql import functions as F
 from .bookmarks import BookmarkStore, watermark_aggregates, watermark_from
 from .catalog import FileCatalog
 from .config import TableConfig
+from .fsutil import fs_for
 from .materialize import cached
 from .sharding import select_tables
 from .sinks import write_partitioned
@@ -183,10 +187,44 @@ class IncrementalPipeline:
             self.bookmarks.commit()
         return results
 
+    def _source_signature(self, cfg: TableConfig, source_path: str) -> dict | None:
+        """What an unchanged-listing poll compares (``bookmarks``): the
+        table's config, the source format, options and path, and the
+        file listing.  ``None`` for a JDBC source, a glob or a missing
+        path, which always scan."""
+        if self.source_format.lower() == "jdbc" or any(c in source_path for c in "*?[{"):
+            return None
+        files = fs_for(source_path, self.spark).listing(source_path)
+        if files is None:
+            return None
+        return {
+            "config": asdict(cfg),
+            "format": self.source_format.lower(),
+            "options": self.source_options,
+            "path": source_path,
+            "files": files,
+        }
+
     def run_table(self, cfg: TableConfig, source_path: str) -> PipelineResult:
         res = PipelineResult(table=cfg.table_name)
         t0 = dt.datetime.now(dt.timezone.utc)
         ctx = f"datasource0_{self.target_table_name(cfg.table_name)}"
+        tgt_name = self.target_table_name(cfg.table_name)
+
+        # (0) unchanged listing: the listing is taken BEFORE the scan, so
+        # a file that lands after it is never covered by the staged
+        # signature.  A match ends the run with no DataFrame built and no
+        # Spark job; the lineage stamp still runs, as for any empty batch.
+        enable = self.bookmark_mode == "enable"
+        source = self._source_signature(cfg, source_path) if enable else None
+        if (
+            source is not None
+            and self.bookmarks.listing_unchanged(ctx, source)
+            and self.catalog.table_exists(self.target_database, tgt_name)
+        ):
+            res.skipped_empty = True
+            self._stamp_lineage_and_grant(res, tgt_name, t0)
+            return res
 
         # (1) scan + bookmark filter — both pushed into the source scan
         # (parquet row-group skipping / JDBC WHERE pushdown).
@@ -219,7 +257,6 @@ class IncrementalPipeline:
             ]
         else:
             source_columns_ddl = source_columns
-        tgt_name = self.target_table_name(cfg.table_name)
         created = not self.catalog.table_exists(self.target_database, tgt_name)
         # name matching is case-insensitive, like Spark's own column
         # resolution — JDBC catalogs (Derby, Oracle, DB2) report
@@ -281,41 +318,43 @@ class IncrementalPipeline:
                 self.catalog.update_table_columns(self.target_database, tgt_name, merged)
                 res.evolved_schema = True
 
-        # (2) empty probe (reference :194-197) — LIMIT 1 against the
-        # already-filtered scan, so it costs one row-group touch; an
-        # empty poll launches no other Spark job.
-        # The lineage stamp + creator grant still run (reference calls
-        # update_table_job_info and the first-creation grant
-        # unconditionally after transform(), :617-637 — an empty
-        # incremental batch must not leave a created table unstamped).
-        if len(batch.take(1)) == 0:
-            res.skipped_empty = True
-            self._stamp_lineage_and_grant(res, tgt_name, t0)
-            return res
-
-        # (3) map/cast to catalog types (reference :199-203).
+        # (2) map/cast to catalog types (reference :199-203).
         mapped = apply_mapping(batch, identity_mappings(source_columns))
 
         # Cache the batch once, scoped to this run: it is the snapshot
-        # that the aggregate (4) and the write (5) both read, so the
+        # that the aggregate (3) and the write (4) both read, so the
         # row count, the registered partitions, the watermark and the
         # written rows agree — a JDBC source re-queries the database on
         # every action.  ``cached`` releases the blocks when the write
         # and the bookmark staging are done, also when either raises.
         with cached(mapped) as mapped:
-            # (4) ONE global aggregate over the batch: every column's
-            # non-null count (DropNullFields, reference :205-208), the
-            # row count, the next watermark and the distinct partition
+            # (3) ONE global aggregate over the batch: the row count,
+            # every column's non-null count (DropNullFields, reference
+            # :205-208), the next watermark and the distinct partition
             # tuples (reference :210-220; bounded by partition
             # cardinality, not data size).
             extra = {_ROWS: F.count(F.lit(1))}
-            if self.bookmark_mode == "enable":
+            if enable:
                 extra[_WATERMARK] = F.struct(
                     *watermark_aggregates(cfg.bookmark_keys, cfg.sort_order)
                 )
             if cfg.partition_spec:
                 extra[_PARTITIONS] = F.collect_set(F.struct(*cfg.partition_spec))
             stats = count_non_nulls(mapped, extra)
+            # An empty batch (reference :194-197) writes, registers and
+            # advances nothing; in 'enable' mode it stages its listing's
+            # signature, so the next poll of the same listing launches
+            # no Spark job.  The lineage stamp + creator grant still run
+            # (the reference calls update_table_job_info and the
+            # first-creation grant unconditionally after transform(),
+            # :617-637 — an empty batch must not leave a created table
+            # unstamped).
+            if stats[_ROWS] == 0:
+                res.skipped_empty = True
+                if source is not None:
+                    self.bookmarks.stage_listing(ctx, source)
+                self._stamp_lineage_and_grant(res, tgt_name, t0)
+                return res
 
             pruned = drop_null_fields(mapped, stats)
             # CDC columns are contract, not data: a batch with no
@@ -346,7 +385,7 @@ class IncrementalPipeline:
                     for v in values
                 )
 
-            # (5) write.  CDC tables (mergeKeys, [EXT]) MERGE the batch
+            # (4) write.  CDC tables (mergeKeys, [EXT]) MERGE the batch
             # into the target — latest-per-key, tombstone deletes, only
             # touched partition directories rewritten (merge.py);
             # replaying the same batch re-merges to the identical state,
@@ -389,16 +428,19 @@ class IncrementalPipeline:
                     )
                 res.rows_written = stats[_ROWS]
 
-            # (6) stage the new watermark from THIS batch — only in
+            # (5) stage the new watermark from THIS batch — only in
             # 'enable' mode: 'pause' replays the same window next run
             # (the filter still applied, the watermark frozen);
             # 'disable' never tracks state at all — both are Glue's
             # documented option semantics.  Committed with all the
-            # others in run().
-            if self.bookmark_mode == "enable":
-                self.bookmarks.stage(
-                    ctx, watermark_from(stats[_WATERMARK], cfg.bookmark_keys)
-                )
+            # others in run().  The listing's signature rides along
+            # only when the watermark holds a key: an all-null first
+            # batch leaves the next scan unfiltered.
+            if enable:
+                wm = watermark_from(stats[_WATERMARK], cfg.bookmark_keys)
+                self.bookmarks.stage(ctx, wm)
+                if wm and source is not None:
+                    self.bookmarks.stage_listing(ctx, source)
 
         self._stamp_lineage_and_grant(res, tgt_name, t0)
         return res
@@ -436,8 +478,6 @@ class IncrementalPipeline:
         reference's "old data stays queryable" contract (E2).
         """
         path = self.target_path(source_name)
-        from .fsutil import fs_for
-
         if not fs_for(path, self.spark).exists(path):
             raise FileNotFoundError(path)
         from pyspark.sql import types as T

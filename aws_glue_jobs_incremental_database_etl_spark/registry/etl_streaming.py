@@ -32,7 +32,7 @@ from ._core import (  # noqa: F401
 def etl_reload(spark, sf_dir):
     """Full reference pipeline parity: two bookmark-delimited
     incremental runs over a growing `orders` source must reconstruct
-    exactly the full table (scan→probe→cast→null-prune→partitioned
+    exactly the full table (scan→cast→aggregate→null-prune→partitioned
     append→watermark commit; SURVEY.md §3.3)."""
     from ..bookmarks import BookmarkStore
     from ..catalog import FileCatalog

@@ -83,7 +83,7 @@ def drop_null_fields(
     source column silently disappears from the target files.
 
     With ``non_null_counts`` (e.g. from the pipeline's one aggregate
-    over a batch it has already found non-empty) this is a pure
+    over a batch, whose row count found it non-empty) this is a pure
     projection: no Spark job.  Without them it probes for emptiness
     and counts: an empty input keeps all columns (the reference never
     reaches this transform with an empty batch thanks to its take(1)

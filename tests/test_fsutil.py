@@ -97,6 +97,40 @@ def test_backend_contract(backend):
     assert not fs.exists(f"{root}/d1")
 
 
+def test_listing_same_on_plain_and_file_uri_root(spark, tmp_path):
+    """``listing`` gives the same relative paths and sizes through both
+    backends, skips what Spark's file sources skip (``_``/``.`` names
+    outside ``k=v`` directories, checksums, hidden directories), lists a
+    file root under its own name and gives ``None`` for a missing one."""
+    from aws_glue_jobs_incremental_database_etl_spark.fsutil import HadoopFS, LocalFS
+
+    root = tmp_path / "src"
+    files = {
+        "part-0.parquet": "aaaa",
+        "k=1/part-1.parquet": "bb",
+        "k=1/_SUCCESS": "",
+        "k=1/.part-1.parquet.crc": "c",
+        "_temporary/0/part-9.parquet": "zzz",
+        ".hidden/part-8.parquet": "y",
+        "_k=2/part-2.parquet": "ddddd",
+    }
+    for rel, text in files.items():
+        os.makedirs(os.path.dirname(root / rel), exist_ok=True)
+        (root / rel).write_text(text)
+    want = [("_k=2/part-2.parquet", 5), ("k=1/part-1.parquet", 2), ("part-0.parquet", 4)]
+    plain, uri = str(root), "file://" + str(root)
+    local, hadoop = fs_for(plain), fs_for(uri, spark)
+    assert isinstance(local, LocalFS) and isinstance(hadoop, HadoopFS)
+    for fs, r in ((local, plain), (hadoop, uri)):
+        assert [(p, n) for p, n, _m in fs.listing(r)] == want
+        assert [(p, n) for p, n, _m in fs.listing(r + "/part-0.parquet")] == [
+            ("part-0.parquet", 4)
+        ]
+        assert fs.listing(r + "/missing") is None
+    mtimes = [m for _p, _n, m in local.listing(plain)]
+    assert [m for _p, _n, m in hadoop.listing(uri)] == pytest.approx(mtimes, abs=1e-3)
+
+
 def test_exactly_once_publish_over_viewfs(spark, tmp_path, sf_dir):
     """Full staged-commit publish against a viewfs:// target — a
     Hadoop scheme WITH an authority, whose Path normalization differs

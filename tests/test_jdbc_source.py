@@ -165,6 +165,45 @@ def test_jdbc_incremental_pipeline_end_to_end(spark, tmp_path):
     assert r3.skipped_empty
 
 
+def test_jdbc_empty_poll_scans_and_stages_no_signature(spark, derby, tmp_path):
+    """A JDBC source has no file listing: its empty poll still runs the
+    filtered scan, returns ``skipped_empty`` and stages no signature."""
+    import json
+
+    from aws_glue_jobs_incremental_database_etl_spark.bookmarks import BookmarkStore
+    from aws_glue_jobs_incremental_database_etl_spark.catalog import FileCatalog
+    from aws_glue_jobs_incremental_database_etl_spark.config import TableConfig
+    from aws_glue_jobs_incremental_database_etl_spark.pipeline import (
+        IncrementalPipeline,
+    )
+
+    bm = tmp_path / "bm.json"
+
+    def run(run_id):
+        return IncrementalPipeline(
+            spark,
+            FileCatalog(str(tmp_path / "cat")),
+            BookmarkStore(str(bm)),
+            target_location=str(tmp_path / "lake"),
+            source_format="jdbc",
+            source_options={"properties": PROPS},
+            job_run_id=run_id,
+        ).run([TableConfig("items", ["ID"], "ASC", [])], {"items": f"{derby}::items"})
+
+    (r1,) = run("r1")
+    assert r1.rows_written == 100
+    sc = spark.sparkContext
+    sc.setJobGroup("jdbc-empty-poll", "jdbc empty poll")
+    try:
+        (r2,) = run("r2")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert r2.skipped_empty and r2.rows_written == 0
+    assert len(sc.statusTracker().getJobIdsForGroup("jdbc-empty-poll")) > 0
+    assert not any(k.endswith("::listing") for k in json.loads(bm.read_text()))
+
+
 def test_jdbc_write_roundtrip(spark, derby):
     """Reverse ETL: DataFrame → Derby → read back identical."""
     from aws_glue_jobs_incremental_database_etl_spark.sources.jdbc import write_jdbc

@@ -7,6 +7,7 @@ an empty delta short-circuits, and schema evolution follows E2.
 """
 
 import os
+import shutil
 import uuid
 
 import pytest
@@ -454,10 +455,10 @@ def _spark_jobs(spark, fn):
 
 
 def test_table_run_job_counts(env, spark, sf_dir):
-    """A non-empty append run is a probe, one aggregate and one write:
-    at most 7 Spark jobs (11 here when each stage ran its own pass).
-    An empty poll stops at the probe, whose ``take(1)`` may take a
-    second job to look past the first file."""
+    """A non-empty append run is one aggregate and one write: at most 7
+    Spark jobs (11 here when each stage ran its own pass).  A poll of an
+    unchanged listing launches none; its bound of 2 dates from the
+    ``take(1)`` probe it used to run."""
     tmp_path, make = env
     src = _write_source(spark, sf_dir, tmp_path, "o_orderkey <= 750")
     make(job_run_id="run-0").run([CFG], {"orders": src})
@@ -474,6 +475,128 @@ def test_table_run_job_counts(env, spark, sf_dir):
     )
     assert res.skipped_empty
     assert n_poll <= 2
+
+
+CTX = "datasource0_tgt_orders"
+
+
+def _signature(tmp_path):
+    """The committed listing signature of tgt_orders, if any."""
+    return BookmarkStore(str(tmp_path / "bookmarks.json")).get(CTX + "::listing")
+
+
+def test_unchanged_listing_poll_launches_no_job(env, spark, sf_dir):
+    """A poll of an unchanged file listing ends before Spark and
+    rewrites no bookmark; a file with new keys after it loads exactly."""
+    tmp_path, make = env
+    full = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    src = _write_source(spark, sf_dir, tmp_path, "o_orderkey <= 750")
+    make(job_run_id="run-1").run([CFG], {"orders": src})
+    assert _signature(tmp_path) is not None
+    bm = tmp_path / "bookmarks.json"
+    before = (bm.read_bytes(), os.stat(bm).st_mtime_ns)
+
+    (res,), n = _spark_jobs(spark, lambda: make(job_run_id="run-2").run([CFG], {"orders": src}))
+    assert n == 0
+    assert res.skipped_empty and res.rows_written == 0
+    assert (bm.read_bytes(), os.stat(bm).st_mtime_ns) == before
+    params = make().catalog.get_table("target", "tgt_orders")["Parameters"]
+    assert params["LastUpdatedByJobRun"] == "run-2"
+
+    new = full.filter("o_orderkey > 750")
+    new.write.mode("append").parquet(src)
+    pipe = make(job_run_id="run-3")
+    (res,) = pipe.run([CFG], {"orders": src})
+    assert res.rows_written == new.count()
+    assert pipe.read_target("orders").count() == full.count()
+
+    (res,), n = _spark_jobs(spark, lambda: make(job_run_id="run-4").run([CFG], {"orders": src}))
+    assert n == 0 and res.skipped_empty
+
+
+def test_rewritten_source_file_goes_full_path(env, spark, sf_dir, tmp_path):
+    """A file rewritten in place (new mtime, or new size) and a Spark
+    ``mode("overwrite")`` rewrite each change the listing, so the run
+    scans; the in-place rewrite with new rows loads exactly those."""
+    _, make = env
+    full = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    src = str(tmp_path / "src_single")
+    full.filter("o_orderkey <= 750").coalesce(1).write.parquet(src)
+    (part,) = [f for f in os.listdir(src) if f.endswith(".parquet")]
+    part = os.path.join(src, part)
+    (r1,) = make(job_run_id="run-1").run([CFG], {"orders": src})
+
+    def poll(run):
+        return _spark_jobs(spark, lambda: make(job_run_id=run).run([CFG], {"orders": src}))
+
+    st = os.stat(part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 10**10))
+    (res,), n = poll("run-2")
+    assert n > 0 and res.skipped_empty
+    assert poll("run-3")[1] == 0
+
+    whole = str(tmp_path / "src_whole")
+    full.coalesce(1).write.parquet(whole)
+    (big,) = [f for f in os.listdir(whole) if f.endswith(".parquet")]
+    # an outside writer leaves no checksum; a stale one would fail the read
+    os.remove(os.path.join(src, f".{os.path.basename(part)}.crc"))
+    shutil.copyfile(os.path.join(whole, big), part)
+    (res,), n = poll("run-4")
+    assert n > 0 and res.rows_written == full.count() - r1.rows_written
+
+    full.coalesce(1).write.mode("overwrite").parquet(src)
+    (res,), n = poll("run-5")
+    assert n > 0 and res.skipped_empty
+    assert make().read_target("orders").count() == full.count()
+
+
+def test_changed_config_goes_full_path(env, spark, sf_dir):
+    """The signature covers the whole table config: a changed bookmark
+    key set scans, and a changed partitionSpec still reaches its check."""
+    tmp_path, make = env
+    src = _write_source(spark, sf_dir, tmp_path)
+    make(job_run_id="run-1").run([CFG], {"orders": src})
+    keys = TableConfig("orders", ["o_orderkey", "o_custkey"], "ASC", ["o_orderstatus"])
+    (res,), n = _spark_jobs(spark, lambda: make(job_run_id="run-2").run([keys], {"orders": src}))
+    assert n > 0 and res.skipped_empty
+    assert _spark_jobs(spark, lambda: make(job_run_id="run-3").run([keys], {"orders": src}))[1] == 0
+
+    changed = TableConfig("orders", ["o_orderkey", "o_custkey"], "ASC", ["o_orderpriority"])
+    with pytest.raises(ValueError, match="partitionSpec changed"):
+        make(job_run_id="run-4").run([changed], {"orders": src})
+
+
+def test_failed_run_leaves_no_signature(env, spark, sf_dir):
+    """A run that fails before its commit stages nothing durable, so
+    the next run of the same listing scans (and, at-least-once,
+    re-reads)."""
+    tmp_path, make = env
+    src = _write_source(spark, sf_dir, tmp_path)
+    cfg_b = TableConfig("lineitem", ["l_orderkey"], "ASC", [])
+    with pytest.raises(Exception):
+        make(job_run_id="r1").run(
+            [CFG, cfg_b], {"orders": src, "lineitem": str(tmp_path / "nope")}
+        )
+    assert _signature(tmp_path) is None
+    (res,), n = _spark_jobs(spark, lambda: make(job_run_id="r2").run([CFG], {"orders": src}))
+    assert n > 0 and res.rows_written == spark.read.parquet(src).count()
+
+
+def test_all_null_first_batch_stages_no_signature(env, spark, sf_dir):
+    """A first batch whose keys are all null moves no watermark, so its
+    listing gets no signature and the next run re-reads it, as before."""
+    tmp_path, make = env
+    full = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    nulls = full.limit(40).withColumn(
+        "o_orderkey", F.lit(None).cast(full.schema["o_orderkey"].dataType)
+    )
+    src = str(tmp_path / "src_nullkeys")
+    nulls.write.parquet(src)
+    (r1,) = make(job_run_id="run-1").run([CFG], {"orders": src})
+    assert r1.rows_written == 40
+    assert make().bookmarks.get(CTX) is None and _signature(tmp_path) is None
+    (r2,) = make(job_run_id="run-2").run([CFG], {"orders": src})
+    assert r2.rows_written == 40 and not r2.skipped_empty
 
 
 def test_desc_watermark_tracks_min(env, spark, sf_dir):

@@ -305,3 +305,88 @@ def test_expire_history_retention(env, spark, sf_dir):
         read_table_asof(spark, lake, "tgt_orders", hist[0]["seq"])
     # current table still fully readable regardless
     assert spark.read.parquet(f"{lake}/tgt_orders").count() == total
+
+
+def test_history_lists_only_runs_that_published(env, spark, sf_dir):
+    """A poll that stages no table and no watermark writes no manifest:
+    neither an unchanged listing nor a new file of old keys (its
+    signature commits without one) enters the history."""
+    from aws_glue_jobs_incremental_database_etl_spark.txn import published_history
+
+    tmp_path, make = env
+    full = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    src = _src(spark, sf_dir, tmp_path, "o_orderkey <= 750")
+    make("r1").run([CFG], {"orders": src})
+    (r2,) = make("r2").run([CFG], {"orders": src})
+    full.filter("o_orderkey <= 10").write.mode("append").parquet(src)
+    (r3,) = make("r3").run([CFG], {"orders": src})
+    (r4,) = make("r4").run([CFG], {"orders": src})
+    assert r2.skipped_empty and r3.skipped_empty and r4.skipped_empty
+    full.filter("o_orderkey > 750").write.mode("append").parquet(src)
+    (r5,) = make("r5").run([CFG], {"orders": src})
+    assert r5.rows_written == full.filter("o_orderkey > 750").count()
+
+    lake = str(tmp_path / "lake")
+    assert [h["run_id"] for h in published_history(lake)] == ["r1", "r5"]
+    applied = os.listdir(os.path.join(lake, "_txn", "applied"))
+    assert sorted(n for n in applied if n.startswith("manifest-")) == [
+        "manifest-r1.json",
+        "manifest-r5.json",
+    ]
+
+
+def test_next_seq_reads_head_not_history(tmp_path, monkeypatch):
+    """With 300 applied manifests a commit parses O(1) of them (a lake
+    without the head document derives it once), and seqs increase
+    strictly across commit, recover_pending and expire_history."""
+    from aws_glue_jobs_incremental_database_etl_spark import fsutil
+    from aws_glue_jobs_incremental_database_etl_spark.txn import (
+        StagedCommit,
+        _next_seq,
+        expire_history,
+        published_history,
+    )
+
+    lake = tmp_path / "lake"
+    applied = lake / "_txn" / "applied"
+    os.makedirs(applied)
+    for i in range(1, 301):
+        (applied / f"manifest-s{i:04d}.json").write_text(json.dumps(
+            {"run_id": f"s{i:04d}", "seq": i, "tables": {}, "moves": [],
+             "staging_root": "", "bookmarks": {}}
+        ))
+    reads = []
+    read_text = fsutil.LocalFS.read_text
+
+    def counting(self, p):
+        if "manifest-" in p:
+            reads.append(p)
+        return read_text(self, p)
+
+    monkeypatch.setattr(fsutil.LocalFS, "read_text", counting)
+    bm = BookmarkStore(str(tmp_path / "bm.json"))
+
+    def commit(run_id, k):
+        bm.stage("ctx", {"k": k})
+        reads.clear()
+        StagedCommit(str(lake), run_id).commit(bm)
+        return len(reads)
+
+    commit("c1", 1)  # derives the head from the 300 manifests, once
+    assert commit("c2", 2) <= 1
+    assert commit("c3", 3) <= 1
+
+    # a crash after the commit point: recovery publishes it later
+    pending = {"run_id": "p1", "seq": _next_seq(str(lake)), "tables": {},
+               "moves": [], "staging_root": str(lake / "_staging" / "p1"),
+               "bookmarks": {"job::ctx": {"k": 4}}}
+    (lake / "_txn" / "manifest-p1.json").write_text(json.dumps(pending))
+    assert recover_pending(str(lake), bm) == ["p1"]
+    assert commit("c4", 5) <= 1
+    expire_history(str(lake), keep_last=2)
+    assert commit("c5", 6) <= 1
+
+    hist = published_history(str(lake))
+    assert [h["run_id"] for h in hist][-3:] == ["p1", "c4", "c5"]
+    seqs = [h["seq"] for h in hist]
+    assert seqs == sorted(set(seqs)) and seqs[-1] == 306
