@@ -37,7 +37,12 @@ fails the conjunction on at least one key of ``w'``).  A signature is
 therefore staged only when that batch was empty or ``w'`` holds at
 least one key: a first run whose keys are all null leaves the next
 run's scan unfiltered.  JDBC sources, globs and missing paths have no
-signature and always scan.
+signature and always scan.  A source overwritten in place on a store
+with coarse mtimes is outside the contract: S3A's Last-Modified has
+one-second resolution, as do some NFS and HDFS setups, so a same-size
+rewrite within the second of the listing leaves the signature
+unchanged, and its new keys wait until some other file of the source
+changes.
 """
 
 from __future__ import annotations

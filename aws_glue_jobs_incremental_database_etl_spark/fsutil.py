@@ -176,14 +176,23 @@ class LocalFS:
         """``(relative path, bytes, mtime)`` of every file under ``root``
         that Spark's file sources read (:func:`_unread` prunes the rest,
         directories included), sorted; a file root lists itself under
-        its own name; ``None`` when ``root`` is missing."""
+        its own name; ``None`` when ``root`` is missing.  Symlinked
+        directories are walked, as Hadoop's local file index reads
+        them; a directory reached again through another link is walked
+        once, so a link cycle ends."""
         if os.path.isfile(root):
             st = os.stat(root)
             return [(os.path.basename(root), st.st_size, st.st_mtime)]
         if not os.path.isdir(root):
             return None
         out = []
-        for r, dirs, files in os.walk(root):
+        seen = set()
+        for r, dirs, files in os.walk(root, followlinks=True):
+            real = os.path.realpath(r)
+            if real in seen:
+                dirs[:] = []
+                continue
+            seen.add(real)
             dirs[:] = [d for d in dirs if not _unread(d)]
             for f in files:
                 if not _unread(f):

@@ -42,12 +42,9 @@ import json
 from typing import Any
 
 from .bookmarks import BookmarkStore, _decode, _encode
-from .fsutil import fs_for, join_path, read_json, write_json
+from .fsutil import fs_for, join_path, write_json
 
 _SPARK_SIDECARS = ("_SUCCESS", "_committed", "_started", ".crc")
-# newest applied seq, kept under _txn/applied/ so a commit numbers
-# itself without parsing the history
-_HEAD = "head.json"
 
 
 def _is_data_file(name: str) -> bool:
@@ -166,11 +163,6 @@ def _apply_manifest(
     # read_table_asof); _txn/ itself keeps only pending manifests
     applied_dir = join_path(_dirname(manifest_path), "applied")
     applied_dst = join_path(applied_dir, _basename(manifest_path))
-    # the head moves BEFORE the archive: a crash between the two leaves
-    # the manifest pending, where _next_seq still counts its seq
-    seq = manifest.get("seq", 0)
-    if seq > _applied_seq(fs, applied_dir):
-        write_json(join_path(applied_dir, _HEAD), {"seq": seq})
     if not fs.exists(manifest_path):
         return  # concurrent recovery already archived it
     fs.mkdirs(applied_dir)
@@ -208,22 +200,12 @@ def _applied_manifests(target_location: str) -> list[dict[str, Any]]:
     return out
 
 
-def _applied_seq(fs, applied: str) -> int:
-    """Newest applied seq: the head document in ``applied``; a lake
-    written before the head existed derives it from the manifests
-    (once: the next apply writes the head)."""
-    head = read_json(join_path(applied, _HEAD))
-    if head is not None:
-        return head["seq"]
-    return max((m.get("seq", 0) for _p, m in _manifests(fs, applied)), default=0)
-
-
 def _next_seq(target_location: str) -> int:
     loc = target_location.rstrip("/")
-    fs = fs_for(loc)
+    seqs = [m.get("seq", 0) for m in _applied_manifests(loc)]
     # committed-but-unpublished runs count too
-    seqs = [m.get("seq", 0) for _p, m in _manifests(fs, f"{loc}/_txn")]
-    return max([_applied_seq(fs, f"{loc}/_txn/applied"), *seqs]) + 1
+    seqs += [m.get("seq", 0) for _p, m in _manifests(fs_for(loc), f"{loc}/_txn")]
+    return max(seqs, default=0) + 1
 
 
 def published_history(target_location: str) -> list[dict[str, Any]]:
@@ -346,11 +328,6 @@ def expire_history(
     if not fs.isdir(applied):
         return []
     manifests = _applied_manifests(loc)  # oldest first
-    # the scan above derives the head for free on a lake that has none
-    head = read_json(join_path(applied, _HEAD), {"seq": 0})["seq"]
-    newest = max([head, *(m.get("seq", 0) for m in manifests)])
-    if newest > head:
-        write_json(join_path(applied, _HEAD), {"seq": newest})
     to_drop = manifests[: max(0, len(manifests) - keep_last)]
     if not to_drop:
         return []

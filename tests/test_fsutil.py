@@ -101,7 +101,9 @@ def test_listing_same_on_plain_and_file_uri_root(spark, tmp_path):
     """``listing`` gives the same relative paths and sizes through both
     backends, skips what Spark's file sources skip (``_``/``.`` names
     outside ``k=v`` directories, checksums, hidden directories), lists a
-    file root under its own name and gives ``None`` for a missing one."""
+    file root under its own name and gives ``None`` for a missing one.
+    A symlinked ``k=v`` directory is listed, as Spark reads it, so a file
+    added under it changes the listing."""
     from aws_glue_jobs_incremental_database_etl_spark.fsutil import HadoopFS, LocalFS
 
     root = tmp_path / "src"
@@ -117,7 +119,16 @@ def test_listing_same_on_plain_and_file_uri_root(spark, tmp_path):
     for rel, text in files.items():
         os.makedirs(os.path.dirname(root / rel), exist_ok=True)
         (root / rel).write_text(text)
-    want = [("_k=2/part-2.parquet", 5), ("k=1/part-1.parquet", 2), ("part-0.parquet", 4)]
+    linked = tmp_path / "elsewhere"
+    os.makedirs(linked)
+    (linked / "part-3.parquet").write_text("eee")
+    os.symlink(linked, root / "k=3")
+    want = [
+        ("_k=2/part-2.parquet", 5),
+        ("k=1/part-1.parquet", 2),
+        ("k=3/part-3.parquet", 3),
+        ("part-0.parquet", 4),
+    ]
     plain, uri = str(root), "file://" + str(root)
     local, hadoop = fs_for(plain), fs_for(uri, spark)
     assert isinstance(local, LocalFS) and isinstance(hadoop, HadoopFS)
@@ -129,6 +140,9 @@ def test_listing_same_on_plain_and_file_uri_root(spark, tmp_path):
         assert fs.listing(r + "/missing") is None
     mtimes = [m for _p, _n, m in local.listing(plain)]
     assert [m for _p, _n, m in hadoop.listing(uri)] == pytest.approx(mtimes, abs=1e-3)
+    (linked / "part-4.parquet").write_text("f")
+    for fs, r in ((local, plain), (hadoop, uri)):
+        assert ("k=3/part-4.parquet", 1) in [(p, n) for p, n, _m in fs.listing(r)]
 
 
 def test_exactly_once_publish_over_viewfs(spark, tmp_path, sf_dir):

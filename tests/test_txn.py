@@ -335,11 +335,10 @@ def test_history_lists_only_runs_that_published(env, spark, sf_dir):
     ]
 
 
-def test_next_seq_reads_head_not_history(tmp_path, monkeypatch):
-    """With 300 applied manifests a commit parses O(1) of them (a lake
-    without the head document derives it once), and seqs increase
-    strictly across commit, recover_pending and expire_history."""
-    from aws_glue_jobs_incremental_database_etl_spark import fsutil
+def test_seqs_increase_across_commit_recovery_and_expiry(tmp_path):
+    """Seqs increase strictly across commit, recover_pending and
+    expire_history: a rollup BASE keeps the newest seq it folds, so the
+    next commit never reuses one."""
     from aws_glue_jobs_incremental_database_etl_spark.txn import (
         StagedCommit,
         _next_seq,
@@ -350,43 +349,28 @@ def test_next_seq_reads_head_not_history(tmp_path, monkeypatch):
     lake = tmp_path / "lake"
     applied = lake / "_txn" / "applied"
     os.makedirs(applied)
-    for i in range(1, 301):
+    for i in range(1, 31):
         (applied / f"manifest-s{i:04d}.json").write_text(json.dumps(
             {"run_id": f"s{i:04d}", "seq": i, "tables": {}, "moves": [],
              "staging_root": "", "bookmarks": {}}
         ))
-    reads = []
-    read_text = fsutil.LocalFS.read_text
-
-    def counting(self, p):
-        if "manifest-" in p:
-            reads.append(p)
-        return read_text(self, p)
-
-    monkeypatch.setattr(fsutil.LocalFS, "read_text", counting)
     bm = BookmarkStore(str(tmp_path / "bm.json"))
 
     def commit(run_id, k):
         bm.stage("ctx", {"k": k})
-        reads.clear()
         StagedCommit(str(lake), run_id).commit(bm)
-        return len(reads)
 
-    commit("c1", 1)  # derives the head from the 300 manifests, once
-    assert commit("c2", 2) <= 1
-    assert commit("c3", 3) <= 1
-
+    commit("c1", 1)
     # a crash after the commit point: recovery publishes it later
     pending = {"run_id": "p1", "seq": _next_seq(str(lake)), "tables": {},
                "moves": [], "staging_root": str(lake / "_staging" / "p1"),
-               "bookmarks": {"job::ctx": {"k": 4}}}
+               "bookmarks": {"job::ctx": {"k": 2}}}
     (lake / "_txn" / "manifest-p1.json").write_text(json.dumps(pending))
     assert recover_pending(str(lake), bm) == ["p1"]
-    assert commit("c4", 5) <= 1
-    expire_history(str(lake), keep_last=2)
-    assert commit("c5", 6) <= 1
+    commit("c2", 3)
+    expire_history(str(lake), keep_last=0)
+    commit("c3", 4)
 
     hist = published_history(str(lake))
-    assert [h["run_id"] for h in hist][-3:] == ["p1", "c4", "c5"]
-    seqs = [h["seq"] for h in hist]
-    assert seqs == sorted(set(seqs)) and seqs[-1] == 306
+    assert [h["run_id"] for h in hist] == ["base-000000000033", "c3"]
+    assert [h["seq"] for h in hist] == [33, 34]
