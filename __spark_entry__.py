@@ -29,6 +29,10 @@ def _prepare(spark: SparkSession) -> None:
     # down from — VERDICT r10 #1) is NOT pinned here: it is derived
     # from the actual input volume per sf_dir by
     # ``tables.tune_shuffle_for_input`` (called by every load_table).
+    # Nor is the codegen cache size: spark.sql.codegen.cache.maxEntries
+    # is a static conf, so a session the driver supplies keeps Spark's
+    # 100-entry cache and recompiles a working set larger than that on
+    # every pass (``session.get_spark`` sizes it at build time).
     for k, v in runtime_sql_conf().items():
         try:
             spark.conf.set(k, v)

@@ -259,9 +259,11 @@ def price_elasticity_q(spark, sf_dir):
     )
     SELECT CAST(obs.k AS BIGINT) AS n_weeks,
            ROUND(obs.t_obs, 6) AS mean_weekend_lift,
-           CAST(SUM(CASE WHEN ABS(flips.t_r) >= ABS(obs.t_obs) - 1e-9
+           CAST(SUM(CASE WHEN ABS(flips.t_r) >= ABS(obs.t_obs)
+                           - 1e-9 * GREATEST(1, ABS(obs.t_obs))
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_extreme,
-           ROUND((1.0 + SUM(CASE WHEN ABS(flips.t_r) >= ABS(obs.t_obs) - 1e-9
+           ROUND((1.0 + SUM(CASE WHEN ABS(flips.t_r) >= ABS(obs.t_obs)
+                                   - 1e-9 * GREATEST(1, ABS(obs.t_obs))
                                  THEN 1 ELSE 0 END)) / 65.0, 6)
              AS p_value
     FROM flips, obs GROUP BY obs.k, obs.t_obs
@@ -275,13 +277,18 @@ def sign_flip_q(spark, sf_dir):
     sign of every d is exchangeable, so 64 deterministic md5-coin
     sign assignments give the randomization distribution and
     p = (1 + #{|T_r| ≥ |T_obs|})/(64+1) — finite-sample valid with NO
-    (the ≥ carries a 1e-9 tolerance: all-same-sign assignments make
-    |T_r| mathematically EQUAL to |T_obs|, and whether that exact tie
-    survives float summation depends on reduction order — ties must
-    count, per the p ≥ 1/(n+1) identity-assignment guarantee)
     normality assumption, the inference the Welch/MW gates can't
     claim under weekly dependence (the pairing absorbs the week
-    effect).  The md5(week, r) coins are the package's deterministic
+    effect).  The ≥ carries a tolerance of 1e-9·max(1, |T_obs|):
+    all-same-sign assignments make |T_r| mathematically EQUAL to
+    |T_obs|, and whether that exact tie survives float summation
+    depends on reduction order — ties must count, per the
+    p ≥ 1/(n+1) identity-assignment guarantee.  The tolerance is
+    relative so it scales with the lift; the floor of 1 keeps it at
+    1e-9 absolute near zero.  Degenerate case: when |T_obs| ≤ 1e-9
+    the bound is ≤ 0, every |T_r| clears it, so n_extreme = 64 and
+    p = 1 — "no evidence", the right answer for a zero observed
+    lift.  The md5(week, r) coins are the package's deterministic
     resampling contract (bootstrap_ci's scheme).
 
     Scale: week-cell folds, a 64-row literal flip grid fanned over
@@ -327,7 +334,10 @@ def sign_flip_q(spark, sf_dir):
     )
     ext = F.sum(
         F.when(
-            F.abs(F.col("t_r")) >= F.abs(F.col("t_obs")) - F.lit(1e-9), 1
+            F.abs(F.col("t_r"))
+            >= F.abs(F.col("t_obs"))
+            - F.lit(1e-9) * F.greatest(F.lit(1.0), F.abs(F.col("t_obs"))),
+            1,
         ).otherwise(0)
     )
     return (

@@ -6,6 +6,20 @@ join handling), broadcast threshold sized for dimension tables, Arrow
 on for the few Pandas-UDF operators, and partition-size knobs that keep
 scan tasks in the 128 MB range so a 100 TB input splits into
 ~800k well-sized tasks rather than a handful of giant ones.
+
+The engine runs the same plans again and again in one long-lived
+session, so Spark's codegen cache is sized to hold every class a
+repeated pass needs (``plans/r12/codegen_cache.json``, 4-vCPU guest,
+Spark 4.1.2).  A pass of the five-query ``query_mix`` needs 116
+distinct generated classes and the 237-query ``bench.py`` headline
+4365 (4177 in its first reps, 188 more in the second).  Spark's
+default cache of 100 entries, walked in a cycle, missed on 81 of them
+in every warm ``query_mix`` pass; with 5000 entries a warm pass
+compiles 0, and its JIT time fell from 8777/5631/4642/4660/3978 ms
+to 6807/4175/3359/3338/2626 ms over passes 1-5.  Metaspace after six
+passes: 160.5 MB with 100 entries, 157.0 MB with 5000 — the small
+cache saves no memory, because an evicted class stays loaded until a
+GC unloads it.
 """
 
 from __future__ import annotations
@@ -13,6 +27,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# spark.sql.codegen.cache.maxEntries: the smallest round value above
+# the bench.py headline's working set of 4365 classes (module docstring).
+CODEGEN_CACHE_ENTRIES = 5000
 
 
 def runtime_sql_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
@@ -49,6 +67,18 @@ def runtime_sql_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
         # Keep scan splits ~128MB so task count scales with data volume.
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     }
+
+
+def jvm_compile_counters(spark: SparkSession) -> tuple[int, int]:
+    """``(janino_compiles, jit_ms)`` so far in the session's JVM: the
+    number of generated classes Spark has compiled (cache misses of its
+    codegen cache, driver and local executors alike) and the total
+    milliseconds the JVM's JIT compilers have spent.  Take the
+    difference of two readings to charge them to what ran between."""
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    jit_ms = jvm.java.lang.management.ManagementFactory.getCompilationMXBean().getTotalCompilationTime()
+    return int(compiles), int(jit_ms)
 
 
 def get_spark(
@@ -88,6 +118,10 @@ def get_spark(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             str(max(initial_partitions, shuffle_partitions)),
         )
+        # A static conf: it must be set here, spark.conf.set rejects it.
+        # A warm query_mix pass compiles 81 classes with Spark's default
+        # of 100 entries and 0 with this one (module docstring).
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -547,7 +547,10 @@ def main() -> None:
     stderr_log = os.path.join(here, ".benchdata", "bench_stderr.log")
     tee, saved_fd = _tee_stderr(stderr_log)
 
-    from aws_glue_jobs_incremental_database_etl_spark.session import get_spark
+    from aws_glue_jobs_incremental_database_etl_spark.session import (
+        get_spark,
+        jvm_compile_counters,
+    )
     from aws_glue_jobs_incremental_database_etl_spark import registry
 
     # Console progress bars share stdout/stderr with the result line;
@@ -587,16 +590,27 @@ def main() -> None:
     # back-to-back runs), so min-of-2 measures steady-state plan cost
     # — what a long-lived cluster actually pays — instead of one
     # draw from the noise distribution.
+    # Beside each rep's time, outside its timed window: the Janino
+    # compiles (codegen-cache misses) and JIT milliseconds it caused.
     timings: dict[str, float] = {}
+    codegen: dict[str, list[dict[str, int]]] = {}
+    headline_start = jvm_compile_counters(spark)
     for name in HEADLINE:
         best = float("inf")
+        codegen[name] = []
         for _ in range(2):
+            k0 = jvm_compile_counters(spark)
             t0 = time.time()
             registry.Q[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
             best = min(best, time.time() - t0)
+            k1 = jvm_compile_counters(spark)
+            codegen[name].append(
+                {"compiles": k1[0] - k0[0], "jit_ms": k1[1] - k0[1]}
+            )
         timings[name] = round(best, 2)
+    headline_end = jvm_compile_counters(spark)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     result = {
@@ -606,6 +620,17 @@ def main() -> None:
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "host_load": {"start": load_start, "end": host_load()},
+        "codegen": {
+            "cache_max_entries": int(
+                spark.conf.get("spark.sql.codegen.cache.maxEntries")
+            ),
+            # The headline's distinct-class working set, as long as the
+            # cache evicts nothing (this total plus the warm-up's classes
+            # well under cache_max_entries): each class then compiles once.
+            "headline_compiles": headline_end[0] - headline_start[0],
+            "headline_jit_ms": headline_end[1] - headline_start[1],
+            "queries": codegen,
+        },
     }
 
     # Cross-round comparability (VERDICT r6 #5): the committed
@@ -705,8 +730,12 @@ def main() -> None:
     # summary, UNCONDITIONALLY: total, count, sf, sf1 total, the 5
     # slowest queries, and a pointer to the committed BENCH_LOCAL.json
     # carrying the full per-query dicts.
-    with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as f:
-        json.dump(result, f, indent=1)
+    # BENCH_LOCAL_c{cpus}.json keeps a run at one core count from being
+    # overwritten by a run at another.
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    for fname in ("BENCH_LOCAL.json", f"BENCH_LOCAL_c{cpus}.json"):
+        with open(os.path.join(here, fname), "w") as f:
+            json.dump(result, f, indent=1)
     summary = {
         "metric": result["metric"],
         "value": result["value"],
